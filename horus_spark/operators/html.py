@@ -13,15 +13,18 @@ Two tiers, matching the engine's usual shape:
   see the tree, so a short headline inside the article is dropped and a
   plain-text footer line sneaks through.
 
-- `dom_extract` — the PRECISION tier: a real DOM tree parse (stdlib
-  `html.parser`, tolerant of unclosed tags) inside an Arrow-batched
-  mapInPandas kernel. Text blocks (p/h1-6/li/td/...) are scored
-  Readability-style (length + comma points, propagated 2x to the parent
-  and 1x to the grandparent), candidates are discounted by subtree link
-  density (the CETD composite-text-density idea), the winning candidate's
-  block texts are emitted in document order, link-farm blocks filtered.
-  All arithmetic is integer (points, per-mille link density) so the
-  extraction is bit-reproducible across engines and scales.
+- `dom_extract` / `html_to_spans` — the PRECISION tier: a real DOM tree,
+  built by a compiled-regex tokenizer (tolerant of unclosed tags; tag
+  events and text items identical to the stdlib `html.parser`), inside a
+  mapInArrow kernel that assembles its output columns from flat arrays.
+  Text blocks (p/h1-6/li/td/...) are scored Readability-style (length +
+  comma points, propagated 2x to the parent and 1x to the grandparent),
+  candidates are discounted by subtree link density (the CETD
+  composite-text-density idea, every subtree summed in one post-order
+  pass), the winning candidate's block texts are emitted in document
+  order, link-farm blocks filtered. All arithmetic is integer (points,
+  per-mille link density) so the extraction is bit-reproducible across
+  engines and scales.
 
 Reference parity: the reference corpus has no HTML (its recognizer input
 is scanned forms — Horus.Functions/DocumentRecognizer.cs), so this module
@@ -38,9 +41,10 @@ output is one slim row per document (no payload amplification).
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterator
+from html import unescape
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -74,11 +78,6 @@ _VOID_TAGS = frozenset(
 _AUTOCLOSE = frozenset({"p", "li", "dt", "dd", "td", "th", "tr", "option"})
 # media elements captured as interleaved media spans (html_to_spans)
 _MEDIA_KINDS = {"img": "image", "video": "video", "audio": "audio"}
-
-DOM_EXTRACT_SCHEMA = (
-    "doc_id string, content_text string, n_blocks int, content_chars int"
-)
-
 
 # ---------------------------------------------------------------------------
 # flat tier: pure expressions
@@ -162,94 +161,298 @@ def html_blocks(
 
 
 class _Node:
-    __slots__ = ("tag", "parent", "items", "order", "score", "media")
+    __slots__ = (
+        "tag", "parent", "items", "order", "score", "media", "chars", "link",
+        "end",
+    )
 
     def __init__(self, tag: str, parent, order: int, media=None):
         self.tag = tag
         self.parent = parent
         self.items: list = []  # document-order mix of str and _Node
-        self.order = order
+        self.order = order  # creation index == preorder (document) index
         self.score = 0
         self.media = media  # (kind, src) for img/video/audio with a src
+        # chars, link, end: set by _select_candidate's post-order pass
 
 
-def _parse_html(html: str) -> _Node:
-    """Tolerant DOM build: unclosed tags pop to the nearest matching
-    open ancestor, spec-auto-closing tags (p/li/td/...) close their
-    same-tag sibling, script/style/comment content is dropped, void
-    tags carry no subtree."""
-    from html.parser import HTMLParser
+# Tokenizer. One compiled regex covers what pages are made of: a text run,
+# a start tag with plain attributes, an end tag. Anything else at a '<'
+# (comments, declarations, processing instructions, unusual attribute
+# syntax, constructs cut off by the end of input) goes to _slow_token,
+# which resolves it as the tokenizer of CPython 3.11's html.parser does. Tag
+# events and text-item boundaries are therefore that parser's: a stray
+# '<' is its own text item, so "x<3" joins as "x < 3".
+_TOKEN_RE = re.compile(
+    r"""
+    ([^<]+)                                     # 1 text run
+  | <([a-zA-Z][-a-zA-Z0-9]*)                    # 2 start-tag name
+    ((?:[ \t\n\r\f]+[a-zA-Z_:][-a-zA-Z0-9_:.]*  # 3 attributes
+        (?:[ \t\n\r\f]*=[ \t\n\r\f]*
+           (?:"[^"]*"|'[^']*'|[^\s"'=<>`/]+(?=[ \t\n\r\f>]))
+        )?
+    )*)
+    [ \t\n\r\f]*(/?)>                           # 4 self-closing slash
+  | </\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>         # 5 end-tag name
+    """,
+    re.VERBOSE,
+)
+_TEXT, _START, _END = 1, 4, 5  # _TOKEN_RE.lastindex of each shape
+_DATA, _STARTEND, _NONE = 0, 6, 7  # further token kinds of _slow_token
+# one attribute of a group-3 string (only media tags need theirs)
+_ATTR_RE = re.compile(
+    r"""([a-zA-Z_:][-a-zA-Z0-9_:.]*)
+    (?:[ \t\n\r\f]*=[ \t\n\r\f]*("[^"]*"|'[^']*'|[^\s"'=<>`/]+))?""",
+    re.VERBOSE,
+)
+# html.parser's tolerant start-tag grammar, for the shapes _TOKEN_RE skips
+_LOCATE_RE = re.compile(
+    r"""<[a-zA-Z][^\t\n\r\f />\x00]*
+    (?:[\s/]*(?:(?<=['"\s/])[^\s/>][^\s/=>]*
+        (?:\s*=+\s*(?:'[^']*'|"[^"]*"|(?!['"])[^>\s]*)\s*)?
+        (?:\s|/(?!>))*)*)?\s*""",
+    re.VERBOSE,
+)
+_TAGFIND_RE = re.compile(r"([a-zA-Z][^\t\n\r\f />\x00]*)(?:\s|/(?!>))*")
+_ATTRFIND_RE = re.compile(
+    r"((?<=['\"\s/])[^\s/>][^\s/=>]*)(\s*=+\s*"
+    r"('[^']*'|\"[^\"]*\"|(?!['\"])[^>\s]*))?(?:\s|/(?!>))*"
+)
+_COMMENT_END_RE = re.compile(r"--\s*>")
+_DECLNAME_RE = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*")
+_SECTION_END_RES = {
+    **dict.fromkeys(
+        ("temp", "cdata", "ignore", "include", "rcdata"),
+        re.compile(r"]\s*]\s*>"),
+    ),
+    **dict.fromkeys(("if", "else", "endif"), re.compile(r"]\s*>")),
+}
+# raw-text elements: their body runs to the first matching close tag
+_RAWTEXT_END_RES = {
+    t: re.compile(rf"</\s*{t}\s*>", re.IGNORECASE) for t in ("script", "style")
+}
 
+
+def _fast_src(attrs: str) -> str | None:
+    """First non-empty src value of a group-3 attribute string."""
+    for m in _ATTR_RE.finditer(attrs):
+        v = m.group(2)
+        if v and m.group(1).lower() == "src":
+            if v[0] in "\"'":
+                v = v[1:-1]
+            if "&" in v:
+                v = unescape(v)
+            if v:
+                return v
+    return None
+
+
+def _cut_off(s: str, i: int) -> tuple:
+    """A construct the input ends inside of becomes text: through the
+    next '>', else up to the next '<', else the '<' alone."""
+    k = s.find(">", i + 1)
+    if k < 0:
+        k = s.find("<", i + 1)
+        if k < 0:
+            k = i + 1
+    else:
+        k += 1
+    return _DATA, unescape(s[i:k]), None, k
+
+
+def _slow_starttag(s: str, i: int) -> tuple:
+    """A start tag by html.parser's rules: a tag whose attributes do not
+    end in '>' or '/>' is text, one the input ends inside is cut off."""
+    j = _LOCATE_RE.match(s, i).end()
+    nxt = s[j : j + 1]
+    if nxt == ">":
+        endpos = j + 1
+    elif s.startswith("/>", j):
+        endpos = j + 2
+    elif nxt in ("", "/", "=") or (nxt.isascii() and nxt.isalpha()):
+        return _cut_off(s, i)
+    else:
+        endpos = j if j > i else i + 1
+    m = _TAGFIND_RE.match(s, i + 1)
+    tag = m.group(1).lower()
+    k = m.end()
+    src = None
+    while k < endpos:
+        m = _ATTRFIND_RE.match(s, k)
+        if m is None:
+            break
+        name, rest, v = m.group(1, 2, 3)
+        if rest and v:
+            if v[:1] == v[-1:] and v[:1] in ("'", '"'):
+                v = v[1:-1]
+            v = unescape(v)
+            if src is None and v and name.lower() == "src":
+                src = v
+        k = m.end()
+    end = s[k:endpos].strip()
+    if end not in (">", "/>"):
+        return _DATA, s[i:endpos], None, endpos
+    kind = _STARTEND if end == "/>" else _START
+    return kind, tag, src if tag in _MEDIA_KINDS else None, endpos
+
+
+def _slow_endtag(s: str, i: int) -> tuple:
+    if s.find(">", i + 1) < 0:
+        return _cut_off(s, i)
+    m = _TAGFIND_RE.match(s, i + 2)
+    if m is not None:
+        return _END, m.group(1).lower(), None, s.find(">", m.end()) + 1
+    if s.startswith("</>", i):
+        return _NONE, None, None, i + 3
+    return _NONE, None, None, s.find(">", i + 2) + 1
+
+
+def _declaration_end(s: str, i: int) -> int:
+    """End of the <!...> construct at i, or -1 when the input ends
+    inside it. A marked section with a keyword html.parser rejects (it
+    raises on those) is read as a bogus comment, like the HTML spec."""
+    if s.startswith("<![", i):
+        if i + 3 == len(s):
+            return -1
+        m = _DECLNAME_RE.match(s, i + 3)
+        if m is not None:
+            if m.end() == len(s):
+                return -1
+            close = _SECTION_END_RES.get(m.group().strip().lower())
+            if close is not None:
+                m = close.search(s, i + 3)
+                return m.end() if m else -1
+    elif s[i : i + 9].lower() == "<!doctype":
+        k = s.find(">", i + 9)
+        return k + 1 if k >= 0 else -1
+    k = s.find(">", i + 2)
+    return k + 1 if k >= 0 else -1
+
+
+def _slow_token(s: str, i: int) -> tuple:
+    """(kind, text or tag, media src, end) for the construct at s[i]=='<'
+    that _TOKEN_RE did not match."""
+    c = s[i + 1 : i + 2]
+    if c.isascii() and c.isalpha():
+        return _slow_starttag(s, i)
+    if c == "/":
+        return _slow_endtag(s, i)
+    if c == "!" and s.startswith("<!--", i):
+        m = _COMMENT_END_RE.search(s, i + 4)
+        return (_NONE, None, None, m.end()) if m else _cut_off(s, i)
+    if c == "?":
+        k = s.find(">", i + 2)
+        k = k + 1 if k >= 0 else -1
+    elif c == "!":
+        k = _declaration_end(s, i)
+    else:
+        return _DATA, "<", None, i + 1
+    return (_NONE, None, None, k) if k >= 0 else _cut_off(s, i)
+
+
+# tag classes of the tree builder; every other tag is a plain element
+_SKIP, _RAW, _VOID, _AUTO = 1, 2, 3, 4
+_TAG_CLASS = {
+    **dict.fromkeys(_AUTOCLOSE, _AUTO),
+    **dict.fromkeys(_VOID_TAGS, _VOID),
+    **dict.fromkeys(_SKIP_TAGS, _SKIP),
+    **dict.fromkeys(_RAWTEXT_END_RES, _RAW),
+}
+
+
+def _parse_nodes(html: str | None) -> list[_Node]:
+    """Tolerant DOM build, returning every node in document order (the
+    root first): unclosed tags pop to the nearest matching open ancestor,
+    spec-auto-closing tags (p/li/td/...) close their same-tag sibling,
+    script/style/noscript/template and comment content is dropped, void
+    tags carry no subtree, entities are decoded."""
     root = _Node("#root", None, 0)
-
-    class _B(HTMLParser):
-        def __init__(self):
-            super().__init__(convert_charrefs=True)
-            self.stack = [root]
-            self.n = 1
-            self.skip = 0
-
-        def _media_of(self, tag, attrs):
-            if tag not in _MEDIA_KINDS:
-                return None
-            src = next((v for k, v in attrs if k == "src" and v), None)
-            return (_MEDIA_KINDS[tag], src) if src else None
-
-        def handle_starttag(self, tag, attrs):
-            if tag in _SKIP_TAGS:
-                self.skip += 1
-                return
-            if self.skip:
-                return
-            if tag in _VOID_TAGS:
-                media = self._media_of(tag, attrs)
-                if media:  # childless media node (e.g. <img src=...>)
-                    self.stack[-1].items.append(
-                        _Node(tag, self.stack[-1], self.n, media=media)
-                    )
-                    self.n += 1
-                return
-            if tag in _AUTOCLOSE and self.stack[-1].tag == tag:
-                self.stack.pop()
-            node = _Node(
-                tag, self.stack[-1], self.n, media=self._media_of(tag, attrs)
-            )
-            self.n += 1
-            self.stack[-1].items.append(node)
-            self.stack.append(node)
-
-        def handle_startendtag(self, tag, attrs):
-            if self.skip:
-                return
-            media = self._media_of(tag, attrs)
-            if media:  # self-closing media (e.g. <img src=.../>)
-                self.stack[-1].items.append(
-                    _Node(tag, self.stack[-1], self.n, media=media)
+    nodes = [root]
+    s = html or ""
+    n = len(s)
+    stack = [root]
+    cur = root
+    skip = 0  # open script/style/noscript/template elements
+    i = 0
+    match = _TOKEN_RE.match
+    tag_class = _TAG_CLASS.get
+    while i < n:
+        m = match(s, i)
+        if m is None:
+            kind, a, src, i = _slow_token(s, i)
+        else:
+            i = m.end()
+            kind = m.lastindex
+            if kind == _TEXT:
+                if not skip:
+                    a = m.group(1)
+                    if "&" in a:
+                        a = unescape(a)
+                    if a and not a.isspace():
+                        cur.items.append(a)
+                continue
+            if kind == _END:
+                a = m.group(5).lower()
+            else:
+                a = m.group(2).lower()
+                src = _fast_src(m.group(3)) if a in _MEDIA_KINDS else None
+                if m.group(4):
+                    kind = _STARTEND
+        if kind == _START:
+            c = tag_class(a, 0)
+            if c == _RAW:  # its open and close cancel out: jump the body
+                m = _RAWTEXT_END_RES[a].search(s, i)
+                if m is None:
+                    break
+                i = m.end()
+                continue
+            if c == _SKIP:
+                skip += 1
+                continue
+            if c != _VOID and not skip:
+                if c == _AUTO and cur.tag == a:
+                    stack.pop()
+                    cur = stack[-1]
+                nd = _Node(
+                    a, cur, len(nodes), (_MEDIA_KINDS[a], src) if src else None
                 )
-                self.n += 1
-            # other self-closing tags: no subtree
+                nodes.append(nd)
+                cur.items.append(nd)
+                stack.append(nd)
+                cur = nd
+                continue
+            kind = _STARTEND  # a void tag has no subtree: self-closing
+        if kind == _STARTEND:
+            if src and not skip:  # childless media node, e.g. <img .../>
+                nd = _Node(a, cur, len(nodes), (_MEDIA_KINDS[a], src))
+                nodes.append(nd)
+                cur.items.append(nd)
+        elif kind == _END:
+            c = tag_class(a, 0)
+            if c == _SKIP or c == _RAW:
+                if skip:
+                    skip -= 1
+            elif skip or c == _VOID:
+                pass
+            elif cur.tag == a:
+                stack.pop()
+                cur = stack[-1]
+            else:
+                for j in range(len(stack) - 2, 0, -1):
+                    if stack[j].tag == a:
+                        del stack[j:]
+                        cur = stack[-1]
+                        break
+                # stray close tag: ignored
+        elif kind == _DATA:
+            if not skip and a and not a.isspace():
+                cur.items.append(a)
+    return nodes
 
-        def handle_endtag(self, tag):
-            if tag in _SKIP_TAGS:
-                if self.skip:
-                    self.skip -= 1
-                return
-            if self.skip or tag in _VOID_TAGS:
-                return
-            for i in range(len(self.stack) - 1, 0, -1):
-                if self.stack[i].tag == tag:
-                    del self.stack[i:]
-                    return
-            # stray close tag: ignore
 
-        def handle_data(self, data):
-            if self.skip == 0 and data and not data.isspace():
-                self.stack[-1].items.append(data)
-
-    b = _B()
-    b.feed(html or "")
-    b.close()
-    return root
+def _parse_html(html: str | None) -> _Node:
+    """The DOM tree of `html` (see _parse_nodes), as its root."""
+    return _parse_nodes(html)[0]
 
 
 def _inline_text_and_links(node: _Node) -> tuple[str, int]:
@@ -264,7 +467,7 @@ def _inline_text_and_links(node: _Node) -> tuple[str, int]:
         while i < len(cur.items):
             item = cur.items[i]
             i += 1
-            if isinstance(item, str):
+            if item.__class__ is str:
                 parts.append(item)
                 if in_a:
                     link += len(" ".join(item.split()))
@@ -274,110 +477,167 @@ def _inline_text_and_links(node: _Node) -> tuple[str, int]:
     return " ".join(" ".join(parts).split()), link
 
 
-def _walk(node: _Node) -> Iterator[_Node]:
-    """Preorder (document order) element walk, iterative."""
-    stack = [node]
-    while stack:
-        cur = stack.pop()
-        yield cur
-        stack.extend(
-            item
-            for item in reversed(cur.items)
-            if isinstance(item, _Node)
-        )
-
-
-def _select_candidate(html: str) -> tuple[_Node, dict[int, tuple[str, int]]]:
+def _select_candidate(
+    html: str,
+) -> tuple[list[_Node], _Node, list[tuple[str, int] | None]]:
     """Parse + score: per-block Readability points (1 + commas +
     min(len//100, 3)) propagated parent x2 / grandparent x1; candidate
     final score = points * (1000 - subtree link density per-mille) —
     the CETD composite-text-density discount, integer-exact. Returns the
-    winning candidate node (ties -> earliest in document order; fallback
-    <body> then root) and the per-block (text, link_chars) map."""
-    root = _parse_html(html)
-    nodes = list(_walk(root))
+    document-order nodes, the winning candidate (ties -> earliest in
+    document order; fallback <body> then root) and each node's block
+    (text, link_chars), None for non-blocks.
 
-    block_info: dict[int, tuple[str, int]] = {}
-    for nd in nodes:
+    One post-order pass (reversed document order visits children and
+    grandchildren first) scores the blocks, sums every subtree's
+    (chars, link) and picks the winner. Text counts as link only under
+    an <a> strictly below the candidate, so an <a>'s own direct text
+    does not."""
+    nodes = _parse_nodes(html)
+    blocks: list[tuple[str, int] | None] = [None] * len(nodes)
+    best = None
+    best_key = None
+    for nd in reversed(nodes):
+        chars = link = 0
+        end = nd.order + 1
+        for item in nd.items:
+            if item.__class__ is str:
+                chars += len(" ".join(item.split()))
+            else:
+                chars += item.chars
+                link += item.chars if item.tag == "a" else item.link
+                end = item.end
+        nd.chars = chars
+        nd.link = link
+        nd.end = end  # its subtree is nodes[nd.order:nd.end]
         if nd.tag in BLOCK_TAGS:
-            text, link = _inline_text_and_links(nd)
-            block_info[id(nd)] = (text, link)
+            blocks[nd.order] = info = _inline_text_and_links(nd)
+            text = info[0]
             if text:
                 pts = 1 + text.count(",") + min(len(text) // 100, 3)
                 p = nd.parent
-                if p is not None and p.tag != "#root":
+                if p.tag != "#root":
                     p.score += 2 * pts
                     gp = p.parent
-                    if gp is not None and gp.tag != "#root":
+                    if gp.tag != "#root":
                         gp.score += pts
-
-    def subtree_stats(nd: _Node) -> tuple[int, int]:
-        chars = link = 0
-        stack = [(nd, False)]
-        while stack:
-            cur, in_a = stack.pop()
-            for item in cur.items:
-                if isinstance(item, str):
-                    n = len(" ".join(item.split()))
-                    chars += n
-                    if in_a:
-                        link += n
-                else:
-                    stack.append((item, in_a or item.tag == "a"))
-        return chars, link
-
-    best = None
-    best_key = None
-    for nd in nodes:
         if nd.score > 0:
-            chars, link = subtree_stats(nd)
             final = nd.score * (1000 - (1000 * link) // max(chars, 1))
             key = (final, -nd.order)  # ties -> earliest in document
             if best_key is None or key > best_key:
                 best, best_key = nd, key
     if best is None:  # no scored candidate: fall back to <body>, then root
-        best = next((n for n in nodes if n.tag == "body"), root)
-    return best, block_info
+        best = next((n for n in nodes if n.tag == "body"), nodes[0])
+    return nodes, best, blocks
 
 
-def _extract_one(html: str) -> tuple[str, int, int]:
-    best, block_info = _select_candidate(html)
-    blocks: list[str] = []
-    for nd in _walk(best):
-        info = block_info.get(id(nd))
+def _content_items(html: str) -> Iterator[_Node | str]:
+    """The winning candidate's output in document order: its media nodes
+    and its link-farm-filtered block texts."""
+    nodes, best, blocks = _select_candidate(html)
+    for nd in nodes[best.order : best.end]:
+        if nd.media is not None:
+            yield nd
+            continue
+        info = blocks[nd.order]
         if info:
             text, link = info
             if text and 3 * link <= len(text):
-                blocks.append(text)
+                yield text
+
+
+def _extract_one(html: str) -> tuple[str, int, int]:
+    blocks = [b for b in _content_items(html) if b.__class__ is str]
     content = "\n".join(blocks)
     return content, len(blocks), sum(len(b) for b in blocks)
 
 
-def _spans_one(html: str) -> list[dict]:
-    """Interleaved span sequence of the winning candidate: content text
-    blocks (link-farm-filtered, as _extract_one) and media elements
-    (img/video/audio with a src) in document order, offsets 0..n-1.
+def _spans_one(html: str) -> list[tuple[str, str, str]]:
+    """Interleaved (kind, text, media_ref) sequence of the winning
+    candidate: content text blocks (link-farm-filtered, as _extract_one)
+    and media elements (img/video/audio with a src) in document order.
     Media outside the candidate (nav logos, footer badges) is stripped
     with the boilerplate — media-aware main-content extraction."""
-    best, block_info = _select_candidate(html)
-    spans: list[dict] = []
-    for nd in _walk(best):
-        if nd.media is not None:
-            kind, src = nd.media
-            spans.append(
-                {"kind": kind, "text": "", "media_ref": src,
-                 "offset": len(spans)}
-            )
-            continue
-        info = block_info.get(id(nd))
-        if info:
-            text, link = info
-            if text and 3 * link <= len(text):
-                spans.append(
-                    {"kind": "text", "text": text, "media_ref": "",
-                     "offset": len(spans)}
-                )
+    spans = []
+    for it in _content_items(html):
+        if it.__class__ is str:
+            spans.append(("text", it, ""))
+        else:
+            kind, src = it.media
+            spans.append((kind, "", src))
     return spans
+
+
+DOM_EXTRACT_SCHEMA = (
+    "doc_id string, content_text string, n_blocks int, content_chars int"
+)
+SPANS_SCHEMA = (
+    "doc_id string, spans array<struct<kind:string,text:string,"
+    "media_ref:string,offset:int>>"
+)
+
+
+def _slim(df: DataFrame, html_col: str, id_col: str) -> DataFrame:
+    return df.select(
+        F.col(id_col).cast("string").alias("doc_id"),
+        F.col(html_col).alias("html"),
+    )
+
+
+def _dom_extract_arrow(batches):
+    """mapInArrow kernel of dom_extract: (doc_id, html) batches in, one
+    (doc_id, content_text, n_blocks, content_chars) row per page out."""
+    import pyarrow as pa
+
+    for batch in batches:
+        rows = [_extract_one(h) for h in batch.column(1).to_pylist()]
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column(0).cast(pa.string()),
+                pa.array([r[0] for r in rows], pa.string()),
+                pa.array([r[1] for r in rows], pa.int32()),
+                pa.array([r[2] for r in rows], pa.int32()),
+            ],
+            names=["doc_id", "content_text", "n_blocks", "content_chars"],
+        )
+
+
+def _spans_arrow(batches):
+    """mapInArrow kernel of html_to_spans: the span list column is built
+    from per-page offsets over four flat child arrays — no per-span
+    Python object crosses the boundary."""
+    import pyarrow as pa
+
+    for batch in batches:
+        kinds: list[str] = []
+        texts: list[str] = []
+        refs: list[str] = []
+        offs: list[int] = []
+        starts = [0]
+        for h in batch.column(1).to_pylist():
+            spans = _spans_one(h)
+            for kind, text, ref in spans:
+                kinds.append(kind)
+                texts.append(text)
+                refs.append(ref)
+            offs.extend(range(len(spans)))
+            starts.append(len(kinds))
+        values = pa.StructArray.from_arrays(
+            [
+                pa.array(kinds, pa.string()),
+                pa.array(texts, pa.string()),
+                pa.array(refs, pa.string()),
+                pa.array(offs, pa.int32()),
+            ],
+            names=["kind", "text", "media_ref", "offset"],
+        )
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column(0).cast(pa.string()),
+                pa.ListArray.from_arrays(pa.array(starts, pa.int32()), values),
+            ],
+            names=["doc_id", "spans"],
+        )
 
 
 def dom_extract(
@@ -387,42 +647,12 @@ def dom_extract(
     per document: (doc_id, content_text, n_blocks, content_chars), blocks
     joined by '\\n' in document order (span-sequence-stable).
 
-    Arrow-batched mapInPandas; only (id, html) cross the boundary, and the
+    A mapInArrow kernel; only (id, html) cross the boundary, and the
     winning candidate's text comes back — never the full markup.
     """
-    slim = df.select(
-        F.col(id_col).cast("string").alias("doc_id"),
-        F.col(html_col).alias("html"),
+    return _slim(df, html_col, id_col).mapInArrow(
+        _dom_extract_arrow, schema=DOM_EXTRACT_SCHEMA
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                _extract_one(h if isinstance(h, str) else "")
-                for h in pdf["html"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("string"),
-                    "content_text": pd.Series(
-                        [r[0] for r in rows], dtype="string"
-                    ),
-                    "n_blocks": pd.Series(
-                        [r[1] for r in rows], dtype="int32"
-                    ),
-                    "content_chars": pd.Series(
-                        [r[2] for r in rows], dtype="int32"
-                    ),
-                }
-            )
-
-    return slim.mapInPandas(kernel, schema=DOM_EXTRACT_SCHEMA)
-
-
-SPANS_SCHEMA = (
-    "doc_id string, spans array<struct<kind:string,text:string,"
-    "media_ref:string,offset:int>>"
-)
 
 
 def html_to_spans(
@@ -438,26 +668,12 @@ def html_to_spans(
     audio with a src) become media spans, in document order with offsets
     0..n-1. Boilerplate — including nav logos and footer badges — is
     stripped BEFORE spans exist, so downstream caption mining pairs
-    captions with CONTENT media only. Same Arrow-batched kernel shape as
-    dom_extract; one slim nested row out per page."""
-    slim = df.select(
-        F.col(id_col).cast("string").alias("doc_id"),
-        F.col(html_col).alias("html"),
+    captions with CONTENT media only. Same mapInArrow kernel shape as
+    dom_extract; one slim nested row out per page; a NULL page yields
+    an empty span list."""
+    return _slim(df, html_col, id_col).mapInArrow(
+        _spans_arrow, schema=SPANS_SCHEMA
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("string"),
-                    "spans": [
-                        _spans_one(h if isinstance(h, str) else "")
-                        for h in pdf["html"]
-                    ],
-                }
-            )
-
-    return slim.mapInPandas(kernel, schema=SPANS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

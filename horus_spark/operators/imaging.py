@@ -50,7 +50,6 @@ _MAGIC = (
     (b"BM", "bmp"),
     (b"P6", "ppm"),
     (b"P5", "pgm"),
-    (b"RIFF", "webp"),
 )
 
 
@@ -61,6 +60,9 @@ def sniff_format(payload: bytes) -> str:
     for magic, name in _MAGIC:
         if payload.startswith(magic):
             return name
+    # RIFF is a container (WAV, AVI, WebP, ...): only form type WEBP is one
+    if payload.startswith(b"RIFF") and payload[8:12] == b"WEBP":
+        return "webp"
     return "unknown"
 
 
@@ -213,6 +215,8 @@ def _decode_png(b: bytes) -> np.ndarray:
         pos += 12 + length  # length + type + data + crc
     if ihdr is None or not idat:
         raise ValueError("png: missing IHDR/IDAT")
+    if len(ihdr) != 13:
+        raise ValueError("png: bad IHDR")
     w, h, depth, colortype, comp, filt, interlace = struct.unpack(
         ">IIBBBBB", ihdr
     )

@@ -6,6 +6,9 @@ Settings rationale (100 TB design, tested on local[N]):
 - Nested schema pruning so `spans.text`-only stages don't read media blobs.
 - shuffle.partitions sized O(cores x 4) locally; on a real cluster this is
   set to O(total-cores x 2-3) or left to AQE's coalescing from a high value.
+- Driver heap and off-heap pool default to a quarter and an eighth of the
+  host's RAM (at most 24g / 8g), so a plain caller's JVM cannot outgrow
+  the machine it runs on.
 """
 
 from __future__ import annotations
@@ -13,6 +16,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _ram_share_mb(divisor: int, cap_mb: int) -> str:
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{max(512, min(cap_mb, ram_mb // divisor))}m"
 
 
 def get_spark(
@@ -42,14 +50,20 @@ def get_spark(
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _ram_share_mb(4, 24 << 10),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Tungsten execution memory off-heap: shuffle/sort/join buffers stop
         # churning the GC heap (measured: per-run GC fell from 1-21s to
         # <0.7s on the extraction pipeline and run-to-run variance with it)
         .config("spark.memory.offHeap.enabled", "true")
-        .config("spark.memory.offHeap.size", os.environ.get("SPARK_OFFHEAP", "8g"))
+        .config(
+            "spark.memory.offHeap.size",
+            os.environ.get("SPARK_OFFHEAP") or _ram_share_mb(8, 8 << 10),
+        )
         # throughput-batch workload: ParallelGC beat G1 ~2x on the regex/
         # struct-heavy interpreted projections (G1 hit 100s+ mixed-GC storms)
         .config(

@@ -1,11 +1,23 @@
 """HTML main-content extraction: DOM-tree Readability/CETD tier +
 pure-expression flat block tier (operators/html.py)."""
 
+import random
+from html.parser import HTMLParser
+
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from horus_spark.operators.html import (
+    _AUTOCLOSE,
+    _MEDIA_KINDS,
+    _SKIP_TAGS,
+    _VOID_TAGS,
+    _Node,
+    _dom_extract_arrow,
     _extract_one,
+    _parse_html,
+    _spans_arrow,
     dom_extract,
     extract_links,
     html_blocks,
@@ -470,3 +482,328 @@ def test_metadata_agreement(spark):
         "d": "meta_only",
         "e": "ld_only",  # full outer: LD rows without a meta row
     }
+
+
+# ---- tokenizer: differential parity against html.parser ---------------
+
+
+def _reference_parse(html: str) -> _Node:
+    """The DOM builder the tokenizer replaced, kept as a test oracle: the
+    same tree rules driven by the stdlib HTMLParser's events."""
+    root = _Node("#root", None, 0)
+
+    class _B(HTMLParser):
+        def __init__(self):
+            super().__init__(convert_charrefs=True)
+            self.stack = [root]
+            self.n = 1
+            self.skip = 0
+
+        def _media_of(self, tag, attrs):
+            if tag not in _MEDIA_KINDS:
+                return None
+            src = next((v for k, v in attrs if k == "src" and v), None)
+            return (_MEDIA_KINDS[tag], src) if src else None
+
+        def handle_starttag(self, tag, attrs):
+            if tag in _SKIP_TAGS:
+                self.skip += 1
+                return
+            if self.skip:
+                return
+            if tag in _VOID_TAGS:
+                media = self._media_of(tag, attrs)
+                if media:
+                    self.stack[-1].items.append(
+                        _Node(tag, self.stack[-1], self.n, media=media)
+                    )
+                    self.n += 1
+                return
+            if tag in _AUTOCLOSE and self.stack[-1].tag == tag:
+                self.stack.pop()
+            node = _Node(
+                tag, self.stack[-1], self.n, media=self._media_of(tag, attrs)
+            )
+            self.n += 1
+            self.stack[-1].items.append(node)
+            self.stack.append(node)
+
+        def handle_startendtag(self, tag, attrs):
+            if self.skip:
+                return
+            media = self._media_of(tag, attrs)
+            if media:
+                self.stack[-1].items.append(
+                    _Node(tag, self.stack[-1], self.n, media=media)
+                )
+                self.n += 1
+
+        def handle_endtag(self, tag):
+            if tag in _SKIP_TAGS:
+                if self.skip:
+                    self.skip -= 1
+                return
+            if self.skip or tag in _VOID_TAGS:
+                return
+            for i in range(len(self.stack) - 1, 0, -1):
+                if self.stack[i].tag == tag:
+                    del self.stack[i:]
+                    return
+
+        def handle_data(self, data):
+            if self.skip == 0 and data and not data.isspace():
+                self.stack[-1].items.append(data)
+
+    b = _B()
+    b.feed(html or "")
+    b.close()
+    return root
+
+
+def _tree(node: _Node):
+    """(tag, order, media, items) with nested nodes expanded."""
+    return (
+        node.tag,
+        node.order,
+        node.media,
+        [_tree(it) if isinstance(it, _Node) else it for it in node.items],
+    )
+
+
+def _media_page(doc_id: int, n_words: int) -> str:
+    """Python rendering of synthesize_html(media=True) for one row."""
+    toks = [f"w{j}" for j in range(n_words)]
+    parts = []
+    for i, s in enumerate(range(0, max(n_words, 1), 12)):
+        parts.append("<p>" + " ".join(toks[s : s + 12]) + "</p>")
+        if i % 3 == 2:
+            ref = f'src="asset-{doc_id}-{i}"'
+            parts.append(
+                f"<img {ref}/>" if (doc_id + i) % 2 == 0
+                else f"<video {ref}></video>"
+            )
+    return (
+        f"<html><head><title>Doc {doc_id}</title><script>var nav = 1;"
+        "</script><style>.nav{color:#333}</style></head><body>"
+        '<div class="nav"><ul><li><a href="/home">Home</a></li>'
+        '<li><a href="/about">About us</a></li>'
+        f'<li><a href="/doc/{doc_id}">Doc {doc_id}</a></li></ul></div>'
+        f'<div class="main"><h1>Report {doc_id}</h1>' + "".join(parts)
+        + '</div><div class="footer"><p><a href="/terms">Terms of '
+        'service</a> | <a href="/privacy">Privacy policy</a> | '
+        '<a href="/contact">Contact</a></p>'
+        "<p>Copyright 2026 Example Corp</p></div></body></html>"
+    )
+
+
+MALFORMED = [
+    PAGE,
+    "<body></span><div><p>alpha beta gamma delta epsilon and more "
+    "words to pass length<p>second paragraph also has plenty of "
+    "words to be counted here</div>",
+    "",
+    "<body>bare text no blocks</body>",
+    "<div><p>  spaced\t\tout\n\n  text   here  okay</p></div>",
+    "<div><ul><li>outer item text that is long enough to count fine"
+    "<p>inner paragraph text that is separately long enough too</p>"
+    "</li></ul></div>",
+    LINKS_PAGE,
+]
+
+_FUZZ_PIECES = [
+    "<p>", "</p>", "<div class=\"x\">", "</div>", "<li>", "</li>", "<ul>",
+    "<td>", "<tr>", "</tr>", "<a href=\"/x\">", "</a>", "<A HREF=/y>",
+    "<h1>", "</h1>", "<span>", "</span foo>", "</ div>", "</>", "</ >",
+    "</3>", "<br>", "<br/>", "<br />", "<hr/>", "<meta charset=utf-8>",
+    "<IMG SRC=pic.png>", "<img src=\"a&amp;b.png\"/>", "<img src=x/>",
+    "<img alt=\"a>b\" src=\"q.png\">", "<img src= >", "<img src=''>",
+    "<img src=\"\" src=\"second.png\">", "<img src='&#1;' src=z>",
+    "<img\xa0src=u.png>", "<img src=v\xa0w>", "<img src=\"k\"alt=x>",
+    "<video src='v.mp4'>", "</video>", "<video src=v2.mp4/>",
+    "<audio src=\"s.ogg\"></audio>", "<video>", "<source src=s.mp4>",
+    "<noscript>", "</noscript>", "<template>", "</template>",
+    "<script>if (a < b) { x = '</div>'; }</script>",
+    "<script type=\"t\">var s = '<p>no</p>';</SCRIPT >",
+    "<style>p > a { color: red }</style>", "<script/>", "<style/>",
+    "</script>", "<!-- c -->", "<!-- a -- b --  >", "<!---->", "<!-->",
+    "<!doctype html>", "<!DOCTYPE x SYSTEM 'y'>", "<?pi x?>", "<?php>",
+    "<![CDATA[x<y]]>", "<![if !IE]>", "<![endif]>", "<!x>", "<!>",
+    "<", "<3", "< p>", "x<3", "a<=b", "<<p>", "<p<a>", "<a b='c'd>",
+    "<p =x>", "<a/b>", "<a / >", "<p\x0bx>", "<p\x00>", "<abc", "<a b",
+    "&", "&amp;", "&#169;", "&copy", "&nbsp;", "&#1;", "&#x41;", "&#;",
+    "&am", "&lt;p&gt;", "word", "more words, with commas,", "text",
+    " ", "\n", "\t", "café", " ", "1 < 2", "5 > 4",
+]
+_FUZZ_TAILS = [
+    "", "", "", "<!-- never closed", "<!-- x > y", "<p class=\"x",
+    "<img src=\"a", "</div", "<", "<!", "<?x", "<![CDATA[", "<![", "&am",
+    "<a b=", "</", "<!doctype", "<p/",
+]
+
+
+def _fuzz_snippet(rng: random.Random) -> str:
+    body = "".join(
+        rng.choice(_FUZZ_PIECES) for _ in range(rng.randint(1, 40))
+    )
+    if rng.random() < 0.2:  # end the input inside a construct
+        body = body[: rng.randint(0, len(body))]
+    return body + rng.choice(_FUZZ_TAILS)
+
+
+def _assert_same_tree(html: str) -> None:
+    assert _tree(_parse_html(html)) == _tree(_reference_parse(html)), html
+
+
+def test_tokenizer_matches_html_parser_on_synthesized_pages():
+    for doc_id, n_words in enumerate([0, 1, 5, 12, 13, 36, 40, 80, 150]):
+        _assert_same_tree(_media_page(doc_id, n_words))
+
+
+def test_tokenizer_matches_html_parser_on_malformed_cases():
+    for html in MALFORMED:
+        _assert_same_tree(html)
+
+
+def test_tokenizer_matches_html_parser_fuzz():
+    rng = random.Random(20261017)
+    checked = 0
+    for _ in range(3000):
+        html = _fuzz_snippet(rng)
+        try:
+            want = _tree(_reference_parse(html))
+        except AssertionError:
+            # html.parser rejects some <![...]> keywords by raising; the
+            # tokenizer reads them as bogus comments instead of failing
+            _parse_html(html)
+            continue
+        assert _tree(_parse_html(html)) == want, html
+        checked += 1
+    assert checked >= 2000
+
+
+# ---- tokenizer contract: named edge cases ------------------------------
+
+
+def _texts(node: _Node) -> list[str]:
+    return [it for it in node.items if isinstance(it, str)]
+
+
+def test_tokenizer_stray_lt_is_its_own_text_item():
+    p = _parse_html("<p>x<3</p>").items[0]
+    assert _texts(p) == ["x", "<", "3"]
+    assert _extract_one("<div><p>x<3</p></div>")[0] == "x < 3"
+
+
+def test_tokenizer_decodes_entities_in_text_and_src():
+    div = _parse_html(
+        '<div><p>a &amp; b &#169;</p><img src="a&amp;b&#169;.png"></div>'
+    ).items[0]
+    assert _texts(div.items[0]) == ["a & b ©"]
+    assert div.items[1].media == ("image", "a&b©.png")
+
+
+def test_tokenizer_uppercase_tag_and_attribute():
+    img = _parse_html("<DIV><IMG SRC=pic.png></DIV>").items[0].items[0]
+    assert (img.tag, img.media) == ("img", ("image", "pic.png"))
+
+
+def test_tokenizer_unquoted_src_and_quoted_gt():
+    root = _parse_html('<img src=pic.png><img alt="a>b" src="q.png">tail')
+    assert [it.media for it in root.items[:2]] == [
+        ("image", "pic.png"), ("image", "q.png"),
+    ]
+    assert root.items[2:] == ["tail"]
+
+
+def test_tokenizer_noscript_nesting_drops_all_inner_text():
+    div = _parse_html(
+        "<div><noscript><p>a</p><noscript>b</noscript>c</noscript>d</div>"
+    ).items[0]
+    assert div.items == ["d"]
+
+
+def test_tokenizer_self_closing_img_vs_video_element():
+    div = _parse_html(
+        '<div><img src="i.png"/>after img<video src="v.mp4">inside'
+        "</video>after video</div>"
+    ).items[0]
+    img, text1, video, text2 = div.items
+    assert (img.media, img.items) == (("image", "i.png"), [])
+    assert text1 == "after img" and text2 == "after video"
+    assert (video.media, video.items) == (("video", "v.mp4"), ["inside"])
+    # a self-closing video is childless: the text stays with the div
+    div = _parse_html('<div><video src="v.mp4"/>next</div>').items[0]
+    assert div.items[0].media == ("video", "v.mp4")
+    assert div.items[0].items == [] and div.items[1] == "next"
+
+
+def test_tokenizer_unterminated_comment_at_eof():
+    # no '-->' before EOF: the comment opener becomes text through the
+    # next '>', or is the lone '<' when no '>' follows
+    root = _parse_html("<p>keep</p><!-- never closed <p>x</p>")
+    assert root.items[1:] == ["<!-- never closed <p>", "x"]
+    p = _parse_html("<p>a<!-- tail").items[0]
+    assert _texts(p) == ["a", "<", "!-- tail"]
+
+
+def test_tokenizer_script_body_is_raw_text():
+    div = _parse_html(
+        "<div><p>one</p><script>x = '</div><p>no</p>';</script>"
+        "<p>two</p></div>"
+    ).items[0]
+    assert [_texts(p) for p in div.items] == [["one"], ["two"]]
+
+
+# ---- mapInArrow boundary -----------------------------------------------
+
+
+def test_html_to_spans_null_and_empty_rows_keep_their_row(spark):
+    from horus_spark.operators.html import html_to_spans
+
+    df = spark.createDataFrame(
+        [("n", None), ("e", ""), ("p", PAGE)], "doc_id string, html string"
+    )
+    got = {r["doc_id"]: r["spans"] for r in html_to_spans(df).collect()}
+    assert got["n"] == [] and got["e"] == []
+    assert [s["text"] for s in got["p"]] == ["Headline here", P1, P2]
+
+
+def test_dom_extract_null_and_empty_rows_keep_their_row(spark):
+    df = spark.createDataFrame(
+        [("n", None), ("e", "")], "doc_id string, html string"
+    )
+    got = {tuple(r) for r in dom_extract(df).collect()}
+    assert got == {("n", "", 0, 0), ("e", "", 0, 0)}
+
+
+def test_html_kernels_empty_batch_keeps_declared_schema(spark):
+    from horus_spark.operators.html import DOM_EXTRACT_SCHEMA, SPANS_SCHEMA
+    from horus_spark.operators.html import html_to_spans
+
+    df = spark.createDataFrame(
+        [("a", PAGE)], "doc_id string, html string"
+    ).coalesce(1).where(F.col("doc_id") == "none")
+    spans = html_to_spans(df)
+    dom = dom_extract(df)
+    assert spans.collect() == [] and dom.collect() == []
+    assert spans.schema == spark.createDataFrame([], SPANS_SCHEMA).schema
+    assert dom.schema == spark.createDataFrame([], DOM_EXTRACT_SCHEMA).schema
+    empty = pa.RecordBatch.from_arrays(
+        [pa.array([], pa.string()), pa.array([], pa.string())],
+        names=["doc_id", "html"],
+    )
+    (out,) = list(_spans_arrow([empty]))
+    assert out.num_rows == 0
+    assert out.schema == pa.schema([
+        ("doc_id", pa.string()),
+        ("spans", pa.list_(pa.struct([
+            ("kind", pa.string()), ("text", pa.string()),
+            ("media_ref", pa.string()), ("offset", pa.int32()),
+        ]))),
+    ])
+    (out,) = list(_dom_extract_arrow([empty]))
+    assert out.num_rows == 0
+    assert out.schema == pa.schema([
+        ("doc_id", pa.string()), ("content_text", pa.string()),
+        ("n_blocks", pa.int32()), ("content_chars", pa.int32()),
+    ])

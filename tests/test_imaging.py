@@ -182,6 +182,32 @@ def test_unsupported_formats_are_typed():
         decode_pixels(png_bytes(PIXELS, interlace=1))
 
 
+def test_riff_is_webp_only_with_webp_form_type():
+    wav = b"RIFF" + struct.pack("<I", 36) + b"WAVEfmt " + b"\x00" * 24
+    assert sniff_format(wav) == "unknown"
+    assert sniff_format(b"RIFF") == "unknown"
+    webp = b"RIFF" + struct.pack("<I", 12) + b"WEBPVP8 " + b"\x00" * 8
+    assert sniff_format(webp) == "webp"
+    with pytest.raises(UnsupportedImageError, match="unknown"):
+        decode_pixels(wav)
+
+
+def _png_with_ihdr(ihdr: bytes) -> bytes:
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(b"\x00\x00"))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
+def test_png_short_ihdr_is_malformed():
+    good = struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0)
+    for ihdr in (good[:12], good + b"\x00", b""):
+        with pytest.raises(ValueError, match="png: bad IHDR"):
+            decode_pixels(_png_with_ihdr(ihdr))
+
+
 def test_malformed_supported_format_raises_valueerror():
     with pytest.raises(ValueError):
         decode_pixels(ppm_bytes(PIXELS)[:-3])  # truncated raster
@@ -240,6 +266,7 @@ def test_extract_image_features_e2e(spark):
         ("a3", "d3", bytearray(bmp_bytes(const))),
         ("a4", "d4", bytearray(b"\xff\xd8\xffjpegish")),
         ("a5", "d5", bytearray(ppm_bytes(const)[:-2])),
+        ("a6", "d6", bytearray(_png_with_ihdr(b"\x00" * 12))),
     ]
     df = spark.createDataFrame(
         rows, "asset_id string, doc_id string, payload binary"
@@ -256,3 +283,6 @@ def test_extract_image_features_e2e(spark):
     assert got["a4"]["error"].startswith("unsupported:jpeg")
     assert got["a4"]["features"] is None
     assert got["a5"]["error"].startswith("malformed:")
+    # a short IHDR is a typed row, not a struct.error that fails the task
+    assert got["a6"]["error"] == "malformed:png: bad IHDR"
+    assert got["a6"]["format"] == "png" and got["a6"]["features"] is None

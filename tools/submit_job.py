@@ -5,7 +5,8 @@ no repo checkout on the workers.
 Run via tools/package_check.sh — from a scratch cwd so `horus_spark` is
 importable ONLY through the --py-files zip. Generates a small corpus on
 executors, runs the full extraction pipeline, writes the output tables,
-and prints one JSON line."""
+runs the HTML -> spans kernel over synthesized pages, and prints one JSON
+line."""
 
 import json
 import os
@@ -13,6 +14,7 @@ import sys
 import tempfile
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 
 def main() -> int:
@@ -27,6 +29,7 @@ def main() -> int:
     # imports AFTER the session exists: proves the zip on PYTHONPATH works
     # for the driver, and executor tasks resolve it via --py-files shipping
     from horus_spark.fixtures.generator import corpus_spark
+    from horus_spark.operators.html import html_to_spans, synthesize_html
     from horus_spark.pipeline import run_extraction
     from horus_spark.sources.sink import write_extracted
 
@@ -37,12 +40,24 @@ def main() -> int:
     docs = spark.read.parquet(os.path.join(out_dir, "documents_out"))
     spans = spark.read.parquet(os.path.join(out_dir, "spans_out"))
     n_out, n_valid = docs.count(), docs.filter("is_valid").count()
+    # 41 tokens per page: the h1, 4 chunks and 1 media element = 6 spans
+    pages = synthesize_html(
+        spark.range(n_docs).select(
+            F.col("id").alias("doc_id"),
+            F.expr(
+                "concat_ws(' ', transform(sequence(0, 40), i -> 'w' || i))"
+            ).alias("text"),
+        ),
+        media=True,
+    )
+    n_html = html_to_spans(pages).where(F.size("spans") == 6).count()
     result = {
         "submitted_docs": n_docs,
         "extracted_docs": n_out,
         "valid_docs": n_valid,
         "span_rows": spans.count(),
-        "ok": n_out == n_docs and n_valid == n_docs,
+        "html_pages": n_html,
+        "ok": n_out == n_docs and n_valid == n_docs and n_html == n_docs,
     }
     print("SUBMIT_RESULT " + json.dumps(result))
     spark.stop()
