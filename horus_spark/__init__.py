@@ -69,7 +69,11 @@ Package map:
   fixtures/oracle_shred.py  independent Python mini-shredder (golden oracle)
   sources/               OCR-JSON source, admission filter, sinks + checkpoint
   session.py             tuned SparkSession builder
+  _zipimport.py          per-task zip re-read skipped for unchanged
+                         archives (installed on import, in every worker)
 """
+
+from horus_spark import _zipimport  # noqa: F401
 
 __version__ = "0.3.0"
 

@@ -111,9 +111,11 @@ def _decode_pnm(b: bytes) -> np.ndarray:
 
 
 def _decode_bmp(b: bytes) -> np.ndarray:
-    """Uncompressed BI_RGB Windows DIB: 8 bpp (grayscale-as-palette-
-    index), 24 bpp BGR, 32 bpp BGRA/BGRX. Rows are 4-byte aligned;
-    positive height = bottom-up storage (flipped on return)."""
+    """Uncompressed BI_RGB Windows DIB: 8 bpp through its colour table
+    (gray out when every entry is gray, RGB otherwise; a file with no
+    table reads its indices as gray), 24 bpp BGR, 32 bpp BGRA/BGRX. Rows
+    are 4-byte aligned; positive height = bottom-up storage (flipped on
+    return)."""
     if len(b) < 54:
         raise ValueError("bmp: truncated header")
     data_off = struct.unpack_from("<I", b, 10)[0]
@@ -140,7 +142,21 @@ def _decode_bmp(b: bytes) -> np.ndarray:
     if h_raw > 0:  # bottom-up
         rows = rows[::-1]
     if bpp == 8:
-        return rows.reshape(h, w, 1).copy()
+        idx = rows.reshape(h, w)
+        table_off = 14 + hdr_size
+        n_colors = min(
+            struct.unpack_from("<I", b, 46)[0] or 256,
+            max(0, data_off - table_off) // 4,
+        )
+        if n_colors == 0:
+            return idx.reshape(h, w, 1).copy()
+        bgrx = np.frombuffer(b, np.uint8, count=4 * n_colors, offset=table_off)
+        rgb = bgrx.reshape(n_colors, 4)[:, 2::-1]
+        if int(idx.max()) >= n_colors:
+            raise ValueError("bmp: palette index out of range")
+        if (rgb == rgb[:, :1]).all():
+            rgb = rgb[:, :1]
+        return rgb[idx]
     px = rows.reshape(h, w, bytes_pp)
     # BGR(A) -> RGB; alpha/padding byte dropped
     return px[:, :, 2::-1].copy()

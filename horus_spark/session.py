@@ -7,8 +7,8 @@ Settings rationale (100 TB design, tested on local[N]):
 - shuffle.partitions sized O(cores x 4) locally; on a real cluster this is
   set to O(total-cores x 2-3) or left to AQE's coalescing from a high value.
 - Driver heap and off-heap pool default to a quarter and an eighth of the
-  host's RAM (at most 24g / 8g), so a plain caller's JVM cannot outgrow
-  the machine it runs on.
+  host's RAM (at most 24g / 8g), and local cores to the CPUs this process
+  may run on, so a plain caller's session cannot outgrow the machine.
 """
 
 from __future__ import annotations
@@ -23,14 +23,18 @@ def _ram_share_mb(divisor: int, cap_mb: int) -> str:
     return f"{max(512, min(cap_mb, ram_mb // divisor))}m"
 
 
+def _default_cpus() -> int:
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "horus_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    cpus = _default_cpus()
+    master = master or os.environ.get("SPARK_MASTER") or f"local[{cpus}]"
     if shuffle_partitions is None:
         # derive from the master's core count when local[N]
         n = cpus
@@ -74,3 +78,54 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+_PROBE_SCHEMA = "zip_paths long, zip_importers long, wrapped boolean, reads long"
+
+
+def _zip_cache_probe(batches):
+    """mapInArrow kernel: what this worker's per-task
+    ``importlib.invalidate_caches()`` reads once ``horus_spark`` is loaded
+    (unpickling this function loads it)."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    import pyarrow as pa
+
+    for _ in batches:
+        pass
+    importlib.invalidate_caches()  # pyspark's per-task call, check now loaded
+    read, archives = zipimport._read_directory, []
+
+    def counted(archive):
+        archives.append(archive)
+        return read(archive)
+
+    zipimport._read_directory = counted
+    try:
+        importlib.invalidate_caches()
+    finally:
+        zipimport._read_directory = read
+    row = {
+        "zip_paths": sum(
+            os.path.isfile(p) and zipfile.is_zipfile(p) for p in sys.path
+        ),
+        "zip_importers": sum(
+            isinstance(i, zipimport.zipimporter)
+            for i in sys.path_importer_cache.values()
+        ),
+        "wrapped": hasattr(zipimport.zipimporter.invalidate_caches, "stdlib"),
+        "reads": len(archives),
+    }
+    yield pa.RecordBatch.from_pylist([row])
+
+
+def zip_cache_probe(spark: SparkSession) -> dict:
+    """Run one Python task and report, from its worker: zip archives on
+    ``sys.path``, zip importers (the stdlib re-reads each one per task),
+    whether the unchanged-archive check is installed, and the archive
+    directories a warm task's cache invalidation reads (0 when it is)."""
+    probe = spark.range(1, numPartitions=1).mapInArrow(_zip_cache_probe, _PROBE_SCHEMA)
+    return probe.collect()[0].asDict()

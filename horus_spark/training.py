@@ -133,6 +133,9 @@ def train_format_config(examples: list[dict]) -> dict:
     """
     if not examples:
         raise ValueError("need at least one labeled example")
+    for key in HEADER_KEYS:
+        if not any(key in ex["labels"] for ex in examples):
+            raise ValueError(f"no example carries a {key!r} label")
     per_key: dict[str, list] = {k: [] for k in HEADER_KEYS}
     fused_templates: set[str] = set()
     fused_any = False

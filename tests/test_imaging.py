@@ -155,6 +155,43 @@ def test_bmp_8bpp_grayscale():
     assert np.array_equal(decode_pixels(b), g)
 
 
+def bmp8_bytes(idx: np.ndarray, palette: list) -> bytes:
+    """8-bpp BMP, bottom-up, with `palette` as its (r, g, b) colour table."""
+    h, w = idx.shape
+    stride = (w + 3) & ~3
+    rows = b"".join(
+        idx[y].astype(np.uint8).tobytes() + b"\x00" * (stride - w)
+        for y in range(h - 1, -1, -1)
+    )
+    table = b"".join(bytes([b, g, r, 0]) for r, g, b in palette)
+    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 8, 0, len(rows),
+                      0, 0, len(palette), 0)
+    off = 14 + len(dib) + len(table)
+    hdr = struct.pack("<2sIHHI", b"BM", off + len(rows), 0, 0, off)
+    return hdr + dib + table + rows
+
+
+def test_bmp_8bpp_palette_is_applied():
+    idx = np.array([[0, 1, 2], [2, 1, 0]])
+    ramp = [(v, v, v) for v in range(256)]
+    assert np.array_equal(
+        decode_pixels(bmp8_bytes(idx, ramp)), idx[:, :, None].astype(np.uint8)
+    )
+    inverted = [(255 - v, 255 - v, 255 - v) for v in range(256)]
+    assert np.array_equal(
+        decode_pixels(bmp8_bytes(idx, inverted)), 255 - idx[:, :, None]
+    )
+    colours = [(255, 0, 0), (0, 255, 0), (10, 20, 30)]
+    got = decode_pixels(bmp8_bytes(idx, colours))
+    assert got.shape == (2, 3, 3)
+    assert np.array_equal(got, np.array(colours, dtype=np.uint8)[idx])
+    assert image_features(got)[3:6] == [
+        np.mean([c[k] for c in colours]) for k in range(3)
+    ]
+    with pytest.raises(ValueError, match="palette index"):
+        decode_pixels(bmp8_bytes(idx, colours[:2]))
+
+
 @pytest.mark.parametrize("filters", [[0, 0], [1, 2], [3, 4], [4, 3]])
 def test_png_all_filter_types(filters):
     got = decode_pixels(png_bytes(PIXELS, filters=filters))

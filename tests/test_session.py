@@ -2,7 +2,7 @@
 
 import os
 
-from horus_spark.session import _ram_share_mb
+from horus_spark.session import _default_cpus, _ram_share_mb
 
 
 def test_default_memory_fits_the_host(spark):
@@ -21,3 +21,12 @@ def test_default_memory_fits_the_host(spark):
 def test_ram_share_is_capped_and_floored():
     assert _ram_share_mb(1, 1024) == "1024m"  # any real host has > 1 GB
     assert _ram_share_mb(1 << 40, 8 << 10) == "512m"
+
+
+def test_default_cores_fit_the_host(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert _default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
+    assert _default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert _default_cpus() == 3

@@ -39,6 +39,15 @@ def test_single_doc_insufficient_for_consistency():
         train_format_config(abc + oscorp)
 
 
+@pytest.mark.parametrize("missing", ["Inv", "AccountNo", "TaxDate"])
+def test_missing_header_label_is_named(missing):
+    examples = generator_examples("abc", n=2)
+    for ex in examples:
+        del ex["labels"][missing]
+    with pytest.raises(ValueError, match=f"no example carries a '{missing}' label"):
+        train_format_config(examples)
+
+
 def test_shape_regex_generalization():
     assert _shape_regex(["22/07/2020", "01/12/1999"]) == r"^\d{2}/\d{2}/\d{4}$"
     assert _shape_regex(["OXOUHJ", "ABCDEF"]) == "^[A-Z]{6}$"

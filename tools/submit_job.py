@@ -5,8 +5,9 @@ no repo checkout on the workers.
 Run via tools/package_check.sh — from a scratch cwd so `horus_spark` is
 importable ONLY through the --py-files zip. Generates a small corpus on
 executors, runs the full extraction pipeline, writes the output tables,
-runs the HTML -> spans kernel over synthesized pages, and prints one JSON
-line."""
+runs the HTML -> spans kernel over synthesized pages, probes that a warm
+worker's per-task cache invalidation re-reads no zip archive (the package
+itself is one of them here), and prints one JSON line."""
 
 import json
 import os
@@ -31,6 +32,7 @@ def main() -> int:
     from horus_spark.fixtures.generator import corpus_spark
     from horus_spark.operators.html import html_to_spans, synthesize_html
     from horus_spark.pipeline import run_extraction
+    from horus_spark.session import zip_cache_probe
     from horus_spark.sources.sink import write_extracted
 
     c = corpus_spark(spark, n_docs, partitions=4)
@@ -51,13 +53,20 @@ def main() -> int:
         media=True,
     )
     n_html = html_to_spans(pages).where(F.size("spans") == 6).count()
+    probe = zip_cache_probe(spark)
     result = {
         "submitted_docs": n_docs,
         "extracted_docs": n_out,
         "valid_docs": n_valid,
         "span_rows": spans.count(),
         "html_pages": n_html,
-        "ok": n_out == n_docs and n_valid == n_docs and n_html == n_docs,
+        "zip_probe": probe,
+        "ok": n_out == n_docs
+        and n_valid == n_docs
+        and n_html == n_docs
+        and probe["zip_paths"] >= 1
+        and probe["wrapped"]
+        and probe["reads"] == 0,
     }
     print("SUBMIT_RESULT " + json.dumps(result))
     spark.stop()
