@@ -58,13 +58,6 @@ LINE_ITEM_TYPE = (
 )
 ERRORS_TYPE = "array<struct<code:string,severity:string,message:string>>"
 
-HEADER_RAW_FIELDS = [
-    "order_number", "order_date", "tax_date", "inv", "account",
-    "net_total", "vat_amount", "shipping_total", "grand_total", "post_code",
-]
-LINE_RAW_FIELDS = ["drug", "qty", "unit", "vat", "disc", "taxable", "net"]
-
-
 def _err(code: str, severity: str, message: Column) -> Column:
     return F.struct(
         F.lit(code).alias("code"),

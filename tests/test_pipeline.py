@@ -244,63 +244,52 @@ def test_multi_seed_span_and_field_parity(spark, seed, base):
         out.unpersist()
 
 
-def test_extract_batch_empty_input_matches_schema(spark):
-    """Review finding: the empty-input early return emitted a 3-column
-    stub that matched neither declared output schema; it must mirror
-    the non-empty shape exactly (with and without the fields map)."""
-    import pandas as pd
+def test_grouped_kernel_empty_input(spark):
+    """An empty grouped batch yields no rows, and recognize() over a
+    zero-row ocr_words frame returns zero rows with FIELDS_SCHEMA's
+    columns and types."""
+    from horus_spark import pipeline as P
+    from horus_spark import schema as S
 
-    from horus_spark.fixtures.generator import corpus_pandas
-    from horus_spark.pipeline import _extract_batch
+    c = corpus_spark(spark, 2, partitions=1)
+    empty = P._grouped_words(c["ocr_words"]).toArrow().to_batches()[0].slice(0, 0)
+    out = list(P._extract_iter_arrow_grouped(iter([empty])))
+    assert sum(b.num_rows for b in out) == 0
 
-    fixture = corpus_pandas(2)
-    words = fixture["ocr_words"]
-    for with_map in (False, True):
-        full = _extract_batch(words, with_fields_map=with_map)
-        empty = _extract_batch(words.iloc[0:0], with_fields_map=with_map)
-        assert list(empty.columns) == list(full.columns)
-        assert len(empty) == 0
-
-
-def test_boundary_shapes_agree(spark, monkeypatch):
-    """The grouped (collect_list per doc) and flat (row per word) Arrow
-    boundary shapes must produce identical recognizer output — the grouped
-    shape only changes HOW bytes cross the JVM<->Python stream, never what
-    the kernel computes. Differential over a fresh corpus, all columns
-    except the wall-clock timer."""
-    from horus_spark.pipeline import recognize
-
-    c = corpus_spark(spark, 60, partitions=4)
-    words = c["ocr_words"]
-
-    monkeypatch.setenv("HORUS_SPARK_BOUNDARY", "flat")
-    flat_rows = recognize(words).drop("time_to_shred_ms").sort("doc_id").collect()
-    monkeypatch.setenv("HORUS_SPARK_BOUNDARY", "grouped")
-    grouped_rows = recognize(words).drop("time_to_shred_ms").sort("doc_id").collect()
-
-    assert len(flat_rows) == len(grouped_rows) == 60
-    assert flat_rows == grouped_rows
+    rec = P.recognize(spark.createDataFrame([], S.OCR_WORDS))
+    want = spark.createDataFrame([], P.FIELDS_SCHEMA).schema
+    assert [(f.name, f.dataType.simpleString()) for f in rec.schema] == [
+        (f.name, f.dataType.simpleString()) for f in want
+    ]
+    assert rec.collect() == []
 
 
-def test_grouped_kernel_chunking_doc_aligned(spark):
-    """Chunk boundaries in the grouped kernel walk whole documents: with a
-    tiny chunk target every chunk still holds complete docs (one output row
-    per doc overall, none split or dropped), including a doc larger than
-    the chunk target on its own."""
+def test_grouped_kernel_chunking_doc_aligned(spark, monkeypatch):
+    """Chunk boundaries in the grouped kernel walk whole documents, and the
+    kernel's output does not depend on how documents are batched: with a
+    tiny chunk target (every doc is a chunk of its own, each larger than
+    the target) and with the default target (all docs in one chunk), the
+    full output rows agree except the wall-clock timer, one per doc, none
+    split or dropped. Row order is not part of the contract: a chunk's
+    rows come out in the kernel's reading order, not input order."""
     import pyarrow as pa
 
     from horus_spark import pipeline as P
 
     c = corpus_spark(spark, 25, partitions=2)
-    grouped = P._grouped_words(c["ocr_words"], None).toArrow()
+    grouped = P._grouped_words(c["ocr_words"]).toArrow()
     batches = grouped.to_batches()
 
-    old = P._KERNEL_CHUNK_ROWS
-    P._KERNEL_CHUNK_ROWS = 8  # far below any real doc's word count
-    try:
+    def run():
         out = list(P._extract_iter_arrow_grouped(iter(batches)))
-    finally:
-        P._KERNEL_CHUNK_ROWS = old
-    ids = [i for b in out for i in b.column(0).to_pylist()]
-    assert sorted(ids) == sorted(grouped.column("doc_id").to_pylist())
-    assert len(ids) == len(set(ids)) == 25
+        rows = pa.Table.from_batches(out).drop_columns(["time_to_shred_ms"])
+        return len(out), sorted(rows.to_pylist(), key=lambda r: r["doc_id"])
+
+    n_default, default_rows = run()
+    monkeypatch.setattr(P, "_KERNEL_CHUNK_ROWS", 8)  # far below any doc's words
+    n_tiny, tiny_rows = run()
+    assert (n_default, n_tiny) == (1, 25)
+    assert tiny_rows == default_rows
+    ids = [r["doc_id"] for r in tiny_rows]
+    assert ids == sorted(grouped.column("doc_id").to_pylist())
+    assert len(set(ids)) == 25

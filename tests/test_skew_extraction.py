@@ -49,7 +49,7 @@ def test_round_robin_tier_balances_heavy_docs(spark):
     thr = 2000  # well above any normal doc (~250 words), below 60x docs
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     m = max(n // 4, 1)
-    grouped = _grouped_words(words, None, heavy_words=thr)
+    grouped = _grouped_words(words, heavy_words=thr)
 
     def part_stats(it):
         ids, w = [], 0
@@ -75,7 +75,7 @@ def test_round_robin_tier_balances_heavy_docs(spark):
     # the unbalanced default CAN stack heavy docs (hash lottery); the
     # balanced tier must never be worse
     base_stats = (
-        _grouped_words(words, None).rdd.mapPartitions(part_stats).collect()
+        _grouped_words(words).rdd.mapPartitions(part_stats).collect()
     )
     base_heavy = [
         sum(1 for d in ids if d in heavy_ids) for ids, _ in base_stats
@@ -100,7 +100,7 @@ def test_outputs_identical_with_and_without_balancing(spark):
 
 def test_balanced_plan_reuses_the_single_shuffle(spark):
     _docs, words, _ = _skewed(spark)
-    grouped = _grouped_words(words, None, heavy_words=2000)
+    grouped = _grouped_words(words, heavy_words=2000)
     qe = grouped._jdf.queryExecution()
     qe.executedPlan().execute().count()  # drive THIS plan so AQE finalizes
     plan = qe.executedPlan().toString()
@@ -115,4 +115,4 @@ def test_balanced_plan_reuses_the_single_shuffle(spark):
 def test_heavy_words_guard(spark):
     _docs, words, _ = _skewed(spark)
     with pytest.raises(ValueError):
-        _grouped_words(words, None, heavy_words=0)
+        _grouped_words(words, heavy_words=0)

@@ -102,7 +102,7 @@ def main():
 
     def run(heavy_thresh, m=None):
         grouped = _grouped_words(
-            skewed, None, heavy_words=heavy_thresh, heavy_partitions=m
+            skewed, heavy_words=heavy_thresh, heavy_partitions=m
         )
         t0 = time.perf_counter()
         rows = grouped.mapInArrow(
