@@ -264,6 +264,39 @@ def test_grouped_kernel_empty_input(spark):
     assert rec.collect() == []
 
 
+def test_boundary_shapes_agree(spark):
+    """The grouped Arrow boundary (collect_list per doc, streamed through
+    mapInArrow) only changes HOW words cross the JVM<->Python stream, never
+    what the kernel computes: recognize() over Spark must equal the kernel
+    run directly on the same words as one flat, doc-contiguous table on the
+    driver. Differential over a fresh corpus, all columns except the
+    wall-clock timer."""
+    import pyarrow as pa
+
+    from horus_spark import pipeline as P
+
+    c = corpus_spark(spark, 60, partitions=4)
+    words = c["ocr_words"]
+
+    spark_rows = [
+        r.asDict(recursive=True)
+        for r in P.recognize(words).drop("time_to_shred_ms").sort("doc_id").collect()
+    ]
+    flat = (
+        words.toPandas()
+        .sort_values(["doc_id", "page", "line_id", "word_id"], kind="mergesort")
+        .reset_index(drop=True)
+    )
+    direct = pa.Table.from_batches([P._extract_batch_arrow(flat)])
+    direct_rows = sorted(
+        direct.drop_columns(["time_to_shred_ms"]).to_pylist(),
+        key=lambda r: r["doc_id"],
+    )
+
+    assert len(spark_rows) == len(direct_rows) == 60
+    assert spark_rows == direct_rows
+
+
 def test_grouped_kernel_chunking_doc_aligned(spark, monkeypatch):
     """Chunk boundaries in the grouped kernel walk whole documents, and the
     kernel's output does not depend on how documents are batched: with a
