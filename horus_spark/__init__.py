@@ -15,7 +15,8 @@ Package map:
   config.py              per-format extraction configs (anchor lexicons)
   operators/layout.py    L1 word->line clustering, L2 table grid inference
   operators/fields.py    L3/L4 anchor-based key-value field extraction
-  operators/shred.py     P1-P9 document shredder (vectorized pandas)
+  operators/shred.py     P1-P9 document shredder: fields -> raw-column
+                         bridge (Arrow) + pure-expression shred_fast
   operators/boilerplate.py  L5 text-density boilerplate scoring
   operators/html.py      HTML main-content extraction: flat text-density
                          block screen (pure expressions) + DOM-tree

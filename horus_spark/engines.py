@@ -61,8 +61,3 @@ def get_engine(name: str | EngineSpec) -> EngineSpec:
         return ENGINES[name]
     except KeyError:
         raise ValueError(f"Specified Engine does not exist: {name!r}") from None
-
-
-def register_engine(spec: EngineSpec) -> None:
-    """Extension point: customers add their own shredder field set."""
-    ENGINES[spec.name] = spec

@@ -1,6 +1,6 @@
 """Error taxonomy — parity with the reference's typed document errors.
 
-Codes, severities and message templates follow
+Codes and severities follow
 reference Horus.Functions/Engines/Processing/ProcessingEngine.cs:41-130 and
 Horus.Functions/Models/DocumentError.cs:7-16. The single quote sanitization
 ('\'' -> '@Illegal@') follows ProcessingEngine.cs:37-40 / BaseConstants.cs:21.
@@ -11,15 +11,6 @@ SEV_WARNING = "Warning"
 SEV_TERMINAL = "Terminal"
 
 ILLEGAL_MARKER = "@Illegal@"
-
-# message templates (str.format-style; {id} = element id, {text} = raw text)
-MSG_STRING_NULL = "GetString() Specified Element {id} is null"
-MSG_NUMBER_NULL = "GetNumber() Specified Element {id} is null"
-MSG_NUMBER_VALUE_NULL = "GetNumber() {id} exists but its value is null"
-MSG_NUMBER_ZERO = "GetNumber() {id} exists but its value is zero"
-MSG_NUMBER_PARSE = "GetNumber() {id} exists but cannot be parsed as a number={text}"
-MSG_DATE_NULL = "GetDate() Specified Element {id} is null"
-MSG_DATE_PARSE = "GetDate() Specified Element {id} does not contain a valid date: TaxDate={text}"
 
 CODE_STRING_NULL = "PRE0001"
 CODE_NUMBER_NULL = "PRE0002"

@@ -61,12 +61,3 @@ def expected_tables(fixture_id: str) -> list[dict]:
     for pr in data["analyzeResult"].get("pageResults", []):
         tables.extend(pr.get("tables", []))
     return tables
-
-
-def expected_label_fields(fixture_id: str) -> dict[str, str]:
-    """labels.json -> {fieldKey: joined text} (the trained-model output the
-    reference's shredder consumes; our L3/L4 must reproduce these values)."""
-    labels = load_labels(fixture_id)
-    return {
-        lab["label"]: " ".join(v["text"] for v in lab["value"]) for lab in labels["labels"]
-    }

@@ -227,14 +227,3 @@ def extract_fields_arrays(
             reg(f"Taxable{nn}", cell_join(tax_idxs), tax_idxs)
 
     return fields, used
-
-
-def field_line_ids(frags: pd.DataFrame, used: set) -> set[int]:
-    """Original OCR line ids contributing words to any field value (feeds
-    span classification). Requires frags built with with_words=True."""
-    f = frags.reset_index(drop=True)
-    out: set[int] = set()
-    for i in used:
-        for (line_id, *_rest) in f.at[i, "words"]:
-            out.add(int(line_id))
-    return out

@@ -42,9 +42,7 @@ def cluster_lines(words: pd.DataFrame) -> pd.DataFrame:
     Fragment ids are consecutive within (doc_id, page) in reading order.
     """
     if len(words) == 0:
-        return words.assign(
-            x0=[], y0=[], x1=[], y1=[], row_key=[], frag_key=[], frag_ord=[]
-        )
+        return words.assign(x0=[], y0=[], x1=[], y1=[], row_key=[], frag_key=[])
     df = words[["doc_id", "page", "line_id", "word_id", "text"]].copy()
     if "x0" in words.columns:  # pre-flattened JVM-side (hot path)
         for c in ("x0", "y0", "x1", "y1"):
@@ -65,14 +63,6 @@ def cluster_lines(words: pd.DataFrame) -> pd.DataFrame:
     gap = df["x0"] - df["x1"].shift()
     new_frag = row_change | (gap > FRAG_X_GAP)
     df["frag_key"] = new_frag.cumsum()
-
-    # reading-order fragment ordinal within (doc, page): rows are y-sorted,
-    # frags x-sorted within row, so frag_key is already monotone per doc.
-    first = df.groupby("frag_key", sort=False).head(1)
-    ord_within = first.groupby(["doc_id", "page"], sort=False).cumcount()
-    df = df.merge(
-        first[["frag_key"]].assign(frag_ord=ord_within.values), on="frag_key", how="left"
-    )
     return df
 
 
@@ -98,15 +88,22 @@ def fragments_view(clustered: pd.DataFrame, with_words: bool = False) -> pd.Data
     x1 = clustered["x1"].to_numpy(dtype=np.float64)
     y1 = clustered["y1"].to_numpy(dtype=np.float64)
     texts = clustered["text"].to_numpy()
+    # reading-order fragment ordinal within (doc, page): rows are y-sorted
+    # and frags x-sorted within a row, so each (doc, page) is one run of
+    # consecutive frag_keys and the ordinal is the offset into that run
+    doc, page = clustered["doc_id"].to_numpy()[starts], clustered["page"].to_numpy()[starts]
+    pos = np.arange(len(starts))
+    run_start = np.r_[True, (doc[1:] != doc[:-1]) | (page[1:] != page[:-1])]
+    frag_ord = pos - np.maximum.accumulate(np.where(run_start, pos, 0))
     joined = [
         texts[s] if e == s + 1 else " ".join(texts[s:e]) for s, e in zip(starts, ends)
     ]
     out = pd.DataFrame(
         {
             "frag_key": fk[starts],
-            "doc_id": clustered["doc_id"].to_numpy()[starts],
-            "page": clustered["page"].to_numpy()[starts],
-            "frag_ord": clustered["frag_ord"].to_numpy()[starts],
+            "doc_id": doc,
+            "page": page,
+            "frag_ord": frag_ord,
             "x0": np.minimum.reduceat(x0, starts),
             "y0": np.minimum.reduceat(y0, starts),
             "x1": np.maximum.reduceat(x1, starts),

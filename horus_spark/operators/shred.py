@@ -4,20 +4,21 @@ Re-expresses the reference's shredding semantics
 (reference Horus.Functions/Engines/Processing/HorusProcessingEngine.cs:13-90
 and ProcessingEngine.cs:15-130) as PURE Spark SQL expressions.
 
-Two equivalent entry points (parity-tested against each other):
+One input path, in two steps:
 
-- shred(df):      consumes a dynamic fields map<string,string> — the exact
-                  shape of the reference's recognizer output; used for
-                  parity tests and ad-hoc shredding.
-- shred_fast(df): consumes pre-parsed raw columns (header_raw struct +
-                  lines_raw array, built inside the recognize UDF where the
-                  dict is already in hand). Semantically identical, but the
-                  expression tree is ~10x smaller (no per-key map scans, no
-                  49-step presence aggregate), which keeps whole-stage
-                  codegen JIT-friendly — the map variant generated a
-                  megamorphic method that ran 3x SLOWER than interpreted.
+- raw_arrays(fields): the fields -> raw bridge. Per-document fields dicts
+  (field key -> text, the reference's recognizer shape) become the
+  header_raw struct and the prefix-terminated lines_raw array, as Arrow
+  arrays. The recognize kernel calls it on every chunk; this module holds
+  the whole raw contract (column names and order, presence keys, the
+  49-line cap).
+- shred_fast(df): header_raw/lines_raw -> typed documents, as expressions
+  only. Reading pre-parsed raw columns keeps the expression tree small (no
+  per-key map scans, no 49-step presence aggregate), which keeps
+  whole-stage codegen JIT-friendly — a map-reading variant generated a
+  megamorphic method that ran 3x SLOWER than interpreted.
 
-Parity points preserved exactly (both paths):
+Parity points preserved exactly:
 - quote sanitization '\'' -> '@Illegal@' (ProcessingEngine.cs:37-40)
 - PRE0001..PRE0007 error rows, severities, message text and ORDER of
   emission: header fields in extraction order (HorusProcessingEngine.cs:28-37:
@@ -26,10 +27,10 @@ Parity points preserved exactly (both paths):
   Terminal (the reference calls GetString twice — log.LogTrace at
   HorusProcessingEngine.cs:65 — so a missing Drug yields TWO PRE0001 rows),
   Qty, Net(Terminal), Unit(Terminal), Vat, Disc, Taxable.
-- prefix-termination line scan: line i exists iff any of Unit{i:02d},
-  Net{i:02d}, Drug{i:02d} is present as a key; the scan BREAKS at the first
-  absent line (max 49) — later lines are invisible even if present
-  (HorusProcessingEngine.cs:49-85, ProcessingEngine.cs:15-35).
+- prefix-termination line scan (raw_arrays): line i exists iff any of
+  Unit{i:02d}, Net{i:02d}, Drug{i:02d} is present as a key; the scan BREAKS
+  at the first absent line (max 49) — later lines are invisible even if
+  present (HorusProcessingEngine.cs:49-85, ProcessingEngine.cs:15-35).
 - LineQuantity is a STRING: the decimal-normalized text if parseable else ''
   (C# Nullable<decimal>.ToString(); HorusProcessingEngine.cs:69).
 - numeric coalesce `?? 0`; PRE0004 zero-value warning is always Warning.
@@ -41,22 +42,102 @@ Parity points preserved exactly (both paths):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
 from horus_spark import constants as C
 from horus_spark import errors as E
+from horus_spark import schema as S
+from horus_spark.engines import HORUS_ENGINE, get_engine
 
 # C#-Decimal.TryParse-compatible numeric shape after space stripping;
 # allows thousands commas (stripped before cast).
 _NUM_RE = r"^[+-]?([0-9][0-9,]*\.?[0-9]*|\.[0-9]+)$"
 
-LINE_ITEM_TYPE = (
-    "array<struct<line_no:string,item_description:string,line_quantity:string,"
-    "unit_price:double,vat_code:string,taxable_indicator:string,net_amount:double,"
-    "calculated_line_quantity:double,discount_percent:double>>"
-)
-ERRORS_TYPE = "array<struct<code:string,severity:string,message:string>>"
+LINE_ITEM_TYPE = ArrayType(S.LINE_ITEM).simpleString()
+ERRORS_TYPE = ArrayType(S.DOC_ERROR).simpleString()
+
+# ------------------------------------------------------------- raw contract
+# raw columns -> the field keys they read (header) or the per-line key
+# prefixes (lines, suffixed 01..49); a NULL raw value = element missing
+_HEADER_KEYS = [
+    ("order_number", C.ORDER_NUMBER), ("order_date", C.ORDER_DATE),
+    ("tax_date", C.TAX_DATE), ("inv", C.INVOICE_NUMBER), ("account", C.ACCOUNT),
+    ("net_total", C.NET_TOTAL), ("vat_amount", C.VAT_AMOUNT),
+    ("shipping_total", C.SHIPPING_TOTAL), ("grand_total", C.GRAND_TOTAL),
+    ("post_code", C.POST_CODE),
+]
+_LINE_KEYS = [
+    ("drug", C.LINE_ITEM_PREFIX), ("qty", C.QUANTITY_PREFIX),
+    ("unit", C.UNIT_PRICE_PREFIX), ("vat", C.VAT_CODE_PREFIX),
+    ("disc", C.DISCOUNT_PERCENT_PREFIX), ("taxable", C.TAXABLE_PREFIX),
+    ("net", C.NET_PRICE_PREFIX),
+]
+_HEADER_T = "struct<" + ",".join(f"{c}:string" for c, _ in _HEADER_KEYS) + ">"
+_LINES_T = "array<struct<" + ",".join(f"{c}:string" for c, _ in _LINE_KEYS) + ">>"
+
+
+@functools.cache
+def _arrow_raw_types():
+    """Arrow (header_raw struct, lines_raw element struct) types."""
+    import pyarrow as pa
+
+    return (
+        pa.struct([(c, pa.string()) for c, _ in _HEADER_KEYS]),
+        pa.struct([(c, pa.string()) for c, _ in _LINE_KEYS]),
+    )
+
+
+def raw_arrays(fields: list[dict]):
+    """The fields -> raw bridge: one fields dict per document -> (header_raw
+    StructArray, lines_raw ListArray), row for row.
+
+    Columnar-first: flat value/offset lists straight into Arrow arrays,
+    with no per-doc header/line dicts for pyarrow to re-infer row by row
+    (per-object allocation dominated memory-allocator traffic at 32-way
+    parallelism).
+
+    Lines are prefix-terminated, mirroring the reference's presence + break
+    semantics (ProcessingEngine.cs:15-35, HorusProcessingEngine.cs:49-85):
+    line nn exists iff Unit/Net/Drug nn is present, for nn in 01..49."""
+    import pyarrow as pa
+
+    n = len(fields)
+    header_cols: dict[str, list] = {c: [None] * n for c, _ in _HEADER_KEYS}
+    line_cols: dict[str, list] = {c: [] for c, _ in _LINE_KEYS}
+    line_offsets = [0]
+    for d, fd in enumerate(fields):
+        for col, key in _HEADER_KEYS:
+            header_cols[col][d] = fd.get(key)
+        for i in range(1, C.MAX_DOCUMENT_LINES):
+            nn = f"{i:02d}"
+            if not (
+                C.UNIT_PRICE_PREFIX + nn in fd
+                or C.NET_PRICE_PREFIX + nn in fd
+                or C.LINE_ITEM_PREFIX + nn in fd
+            ):
+                break
+            for col, prefix in _LINE_KEYS:
+                line_cols[col].append(fd.get(prefix + nn))
+        line_offsets.append(len(line_cols["drug"]))
+
+    header_t, line_t = _arrow_raw_types()
+    header_arr = pa.StructArray.from_arrays(
+        [pa.array(header_cols[c], pa.string()) for c, _ in _HEADER_KEYS],
+        fields=list(header_t),
+    )
+    line_values = pa.StructArray.from_arrays(
+        [pa.array(line_cols[c], pa.string()) for c, _ in _LINE_KEYS],
+        fields=list(line_t),
+    )
+    lines_arr = pa.ListArray.from_arrays(
+        pa.array(line_offsets, pa.int32()), line_values
+    )
+    return header_arr, lines_arr
+
 
 def _err(code: str, severity: str, message: Column) -> Column:
     return F.struct(
@@ -191,27 +272,27 @@ def date_error(raw: Column, key: Column, severity: str) -> Column:
 # ------------------------------------------------------------------ core
 
 
-def _shred_from_raw(
-    df: DataFrame,
-    header: Column,
-    lines_raw: Column,
-    carry: list[str],
-    engine=None,
-) -> DataFrame:
-    """Shared shredding logic over raw header struct + raw line array.
-    `engine` (engines.EngineSpec) selects which field channels exist —
-    the reference's pluggable IProcessingEngine surface. Channels an
-    engine omits keep their C# default values (0 / null) and emit no
-    error rows, so the output schema is engine-invariant."""
-    from horus_spark.engines import HORUS_ENGINE
-
-    engine = engine or HORUS_ENGINE
+def shred_fast(df: DataFrame, carry: list[str] | None = None, engine=None) -> DataFrame:
+    """Shred from the raw columns raw_arrays builds:
+    header_raw: struct<order_number,order_date,tax_date,inv,account,
+                       net_total,vat_amount,shipping_total,grand_total,
+                       post_code : string> (NULL field = element missing)
+    lines_raw:  array<struct<drug,qty,unit,vat,disc,taxable,net : string>>
+                (already prefix-terminated, max 49 entries).
+    `carry` columns pass through. `engine` (engines.EngineSpec or name,
+    'horus' default) selects which field channels exist — the reference's
+    pluggable IProcessingEngine surface. Channels an engine omits keep
+    their C# default values (0 / null) and emit no error rows, so the
+    output schema is engine-invariant."""
+    engine = get_engine(engine) if engine is not None else HORUS_ENGINE
+    carry = carry or []
     cols = df.columns
 
     def k(name: str) -> Column:
         return F.lit(name)
 
-    h = header
+    h = F.col("header_raw")
+    lines_raw = F.col("lines_raw")
     order_number = str_value(h["order_number"])
     order_date = date_value(h["order_date"])
     tax_date = date_value(h["tax_date"])
@@ -376,105 +457,4 @@ def _shred_from_raw(
             else F.lit(None).cast("string")
         ).alias("unique_run_identifier"),
         *[F.col(c) for c in carry],
-    )
-
-
-def shred_fast(df: DataFrame, carry: list[str] | None = None, engine=None) -> DataFrame:
-    """Shred from pre-parsed raw columns:
-    header_raw: struct<order_number,order_date,tax_date,inv,account,
-                       net_total,vat_amount,shipping_total,grand_total,
-                       post_code : string> (NULL field = element missing)
-    lines_raw:  array<struct<drug,qty,unit,vat,disc,taxable,net : string>>
-                (already prefix-terminated, max 49 entries).
-    engine: engines.EngineSpec or name ('horus' default)."""
-    from horus_spark.engines import get_engine
-
-    spec = get_engine(engine) if engine is not None else None
-    return _shred_from_raw(
-        df, F.col("header_raw"), F.col("lines_raw"), carry or [], spec
-    )
-
-
-def raw_from_fields_exprs() -> tuple[Column, Column]:
-    """Build (header_raw, lines_raw) expressions from a fields
-    map<string,string> column — the bridge from the reference's dynamic
-    recognizer shape to the fast path; encodes the SAME presence semantics
-    (key exists, ProcessingEngine.cs:15-35) and prefix termination."""
-    fields = F.col("fields")
-    keys = F.map_keys(fields)
-
-    def has(key: Column) -> Column:
-        return F.array_contains(keys, key)
-
-    def rawk(key: Column) -> Column:
-        # NULL <=> key missing OR value null (both are 'is null' in the
-        # reference's error channel); presence for the line scan uses has()
-        return F.element_at(fields, key)
-
-    header_raw = F.struct(
-        rawk(F.lit(C.ORDER_NUMBER)).alias("order_number"),
-        rawk(F.lit(C.ORDER_DATE)).alias("order_date"),
-        rawk(F.lit(C.TAX_DATE)).alias("tax_date"),
-        rawk(F.lit(C.INVOICE_NUMBER)).alias("inv"),
-        rawk(F.lit(C.ACCOUNT)).alias("account"),
-        rawk(F.lit(C.NET_TOTAL)).alias("net_total"),
-        rawk(F.lit(C.VAT_AMOUNT)).alias("vat_amount"),
-        rawk(F.lit(C.SHIPPING_TOTAL)).alias("shipping_total"),
-        rawk(F.lit(C.GRAND_TOTAL)).alias("grand_total"),
-        rawk(F.lit(C.POST_CODE)).alias("post_code"),
-    )
-
-    def lk(prefix: str, i: Column) -> Column:
-        return F.concat(F.lit(prefix), F.lpad(i.cast("string"), 2, "0"))
-
-    def present(i: Column) -> Column:
-        return (
-            has(lk(C.UNIT_PRICE_PREFIX, i))
-            | has(lk(C.NET_PRICE_PREFIX, i))
-            | has(lk(C.LINE_ITEM_PREFIX, i))
-        )
-
-    n_lines = F.aggregate(
-        F.sequence(F.lit(1), F.lit(C.MAX_DOCUMENT_LINES - 1)),
-        F.lit(0),
-        lambda acc, i: F.when((acc == i - 1) & present(i), i).otherwise(acc),
-    )
-    lines_raw = F.when(
-        n_lines > 0,
-        F.transform(
-            F.sequence(F.lit(1), n_lines),
-            lambda i: F.struct(
-                rawk(lk(C.LINE_ITEM_PREFIX, i)).alias("drug"),
-                rawk(lk(C.QUANTITY_PREFIX, i)).alias("qty"),
-                rawk(lk(C.UNIT_PRICE_PREFIX, i)).alias("unit"),
-                rawk(lk(C.VAT_CODE_PREFIX, i)).alias("vat"),
-                rawk(lk(C.DISCOUNT_PERCENT_PREFIX, i)).alias("disc"),
-                rawk(lk(C.TAXABLE_PREFIX, i)).alias("taxable"),
-                rawk(lk(C.NET_PRICE_PREFIX, i)).alias("net"),
-            ),
-        ),
-    ).otherwise(
-        F.array().cast(
-            "array<struct<drug:string,qty:string,unit:string,vat:string,"
-            "disc:string,taxable:string,net:string>>"
-        )
-    )
-    return header_raw, lines_raw
-
-
-def shred(
-    df: DataFrame,
-    fields_col: str = "fields",
-    carry: list[str] | None = None,
-    engine=None,
-) -> DataFrame:
-    """Shred from a dynamic fields map<string,string> (the reference's
-    recognizer shape). Wraps raw_from_fields_exprs + the shared core."""
-    from horus_spark.engines import get_engine
-
-    spec = get_engine(engine) if engine is not None else None
-    header_raw, lines_raw = raw_from_fields_exprs()
-    staged = df.withColumn("__header_raw", header_raw).withColumn("__lines_raw", lines_raw)
-    return _shred_from_raw(
-        staged, F.col("__header_raw"), F.col("__lines_raw"), carry or [], spec
     )

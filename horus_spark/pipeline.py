@@ -34,34 +34,25 @@ isolation, DocumentProcessor.cs:101-106).
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from horus_spark import constants as C
 from horus_spark.config import format_of_doc_id
 from horus_spark.operators.boilerplate import is_boilerplate_text
 from horus_spark.operators.fields import extract_fields_arrays
 from horus_spark.operators.layout import cluster_lines, fragments_view, infer_grid_arrays
-from horus_spark.operators.shred import shred_fast
+from horus_spark.operators.shred import (
+    _HEADER_KEYS,
+    _HEADER_T,
+    _LINES_T,
+    _arrow_raw_types,
+    raw_arrays,
+    shred_fast,
+)
 
-# recognizer output columns -> the field keys they read (header) or the
-# per-line key prefixes (lines, suffixed 01..49)
-_HEADER_KEYS = [
-    ("order_number", C.ORDER_NUMBER), ("order_date", C.ORDER_DATE),
-    ("tax_date", C.TAX_DATE), ("inv", C.INVOICE_NUMBER), ("account", C.ACCOUNT),
-    ("net_total", C.NET_TOTAL), ("vat_amount", C.VAT_AMOUNT),
-    ("shipping_total", C.SHIPPING_TOTAL), ("grand_total", C.GRAND_TOTAL),
-    ("post_code", C.POST_CODE),
-]
-_LINE_KEYS = [
-    ("drug", C.LINE_ITEM_PREFIX), ("qty", C.QUANTITY_PREFIX),
-    ("unit", C.UNIT_PRICE_PREFIX), ("vat", C.VAT_CODE_PREFIX),
-    ("disc", C.DISCOUNT_PERCENT_PREFIX), ("taxable", C.TAXABLE_PREFIX),
-    ("net", C.NET_PRICE_PREFIX),
-]
-_HEADER_T = "struct<" + ",".join(f"{c}:string" for c, _ in _HEADER_KEYS) + ">"
-_LINES_T = "array<struct<" + ",".join(f"{c}:string" for c, _ in _LINE_KEYS) + ">>"
 FIELDS_SCHEMA = (
     f"doc_id string, header_raw {_HEADER_T}, lines_raw {_LINES_T}, "
     "field_line_ids array<int>, recognizer_status string, "
@@ -187,54 +178,19 @@ def _extract_core(
 
 
 def _extract_batch_arrow(pdf: pd.DataFrame, configs: dict | None = None):
-    """Hot-path assembly: build the output RecordBatch columnar-first —
-    flat value/offset lists straight into Arrow arrays, with no per-doc
-    header/line dicts for pyarrow to re-infer row by row (per-object
-    allocation dominated memory-allocator traffic at 32-way parallelism).
-
-    Lines are prefix-terminated, mirroring the reference's presence + break
-    semantics (ProcessingEngine.cs:15-35, HorusProcessingEngine.cs:49-85):
-    line nn exists iff Unit/Net/Drug nn is present, for nn in 01..49."""
+    """One kernel chunk -> FIELDS_SCHEMA RecordBatch. The fields dicts
+    cross to header_raw/lines_raw through the shredder's raw bridge
+    (operators.shred.raw_arrays); the other columns are built the same
+    columnar way, from flat value/offset lists."""
     import pyarrow as pa
 
     out_ids, out_fields, flid_map, out_status, out_ms = _extract_core(pdf, configs)
-    n = len(out_ids)
-    header_cols: dict[str, list] = {c: [None] * n for c, _ in _HEADER_KEYS}
-    line_cols: dict[str, list] = {c: [] for c, _ in _LINE_KEYS}
-    line_offsets = [0]
+    header_arr, lines_arr = raw_arrays(out_fields)
     flid_values: list[int] = []
     flid_offsets = [0]
-    for d, fd in enumerate(out_fields):
-        for col, key in _HEADER_KEYS:
-            header_cols[col][d] = fd.get(key)
-        for i in range(1, C.MAX_DOCUMENT_LINES):
-            nn = f"{i:02d}"
-            if not (
-                C.UNIT_PRICE_PREFIX + nn in fd
-                or C.NET_PRICE_PREFIX + nn in fd
-                or C.LINE_ITEM_PREFIX + nn in fd
-            ):
-                break
-            for col, prefix in _LINE_KEYS:
-                line_cols[col].append(fd.get(prefix + nn))
-        line_offsets.append(len(line_cols["drug"]))
-        flid_values.extend(flid_map.get(out_ids[d], []))
+    for doc_id in out_ids:
+        flid_values.extend(flid_map.get(doc_id, []))
         flid_offsets.append(len(flid_values))
-
-    schema = _arrow_fields_schema()
-    header_t = schema.field("header_raw").type
-    line_t = schema.field("lines_raw").type.value_type
-    header_arr = pa.StructArray.from_arrays(
-        [pa.array(header_cols[c], pa.string()) for c, _ in _HEADER_KEYS],
-        fields=[header_t.field(i) for i in range(header_t.num_fields)],
-    )
-    line_values = pa.StructArray.from_arrays(
-        [pa.array(line_cols[c], pa.string()) for c, _ in _LINE_KEYS],
-        fields=[line_t.field(i) for i in range(line_t.num_fields)],
-    )
-    lines_arr = pa.ListArray.from_arrays(
-        pa.array(line_offsets, pa.int32()), line_values
-    )
     flid_arr = pa.ListArray.from_arrays(
         pa.array(flid_offsets, pa.int32()), pa.array(flid_values, pa.int32())
     )
@@ -251,7 +207,7 @@ def _extract_batch_arrow(pdf: pd.DataFrame, configs: dict | None = None):
             rerr_arr,
             ms_arr,
         ],
-        schema=schema,
+        schema=_arrow_fields_schema(),
     )
 
 
@@ -263,28 +219,22 @@ _KERNEL_CHUNK_ROWS = 65536
 # RecordBatches both ways; doing our own pandas conversion with
 # split_blocks/self_destruct costs ~5% of what the generic pandas-UDF
 # serializer spends per column)
-_ARROW_FIELDS_SCHEMA = None
-
-
+@functools.cache
 def _arrow_fields_schema():
-    global _ARROW_FIELDS_SCHEMA
-    if _ARROW_FIELDS_SCHEMA is None:
-        import pyarrow as pa
+    import pyarrow as pa
 
-        header_t = pa.struct([(c, pa.string()) for c, _ in _HEADER_KEYS])
-        line_t = pa.struct([(c, pa.string()) for c, _ in _LINE_KEYS])
-        _ARROW_FIELDS_SCHEMA = pa.schema(
-            [
-                ("doc_id", pa.string()),
-                ("header_raw", header_t),
-                ("lines_raw", pa.list_(line_t)),
-                ("field_line_ids", pa.list_(pa.int32())),
-                ("recognizer_status", pa.string()),
-                ("recognizer_errors", pa.list_(pa.string())),
-                ("time_to_shred_ms", pa.float64()),
-            ]
-        )
-    return _ARROW_FIELDS_SCHEMA
+    header_t, line_t = _arrow_raw_types()
+    return pa.schema(
+        [
+            ("doc_id", pa.string()),
+            ("header_raw", header_t),
+            ("lines_raw", pa.list_(line_t)),
+            ("field_line_ids", pa.list_(pa.int32())),
+            ("recognizer_status", pa.string()),
+            ("recognizer_errors", pa.list_(pa.string())),
+            ("time_to_shred_ms", pa.float64()),
+        ]
+    )
 
 
 def _extract_iter_arrow_grouped(batches, configs: dict | None = None):

@@ -86,3 +86,22 @@ def test_header_band_excludes_preamble_lines():
             for c in t["cells"]:
                 if c["rowIndex"] == 0:
                     assert "Taxpoint" not in c.get("text", ""), (doc_id, c)
+
+
+def test_frag_ord_is_reading_order_within_page():
+    """fragments_view numbers fragments 0, 1, ... in reading order within
+    each (doc_id, page): the pandas cumcount over fragments in frag_key
+    order. A planted second page on every other document checks that the
+    count restarts per page, not only per document."""
+    from horus_spark.fixtures.generator import corpus_pandas
+
+    words = corpus_pandas(40)["ocr_words"].copy()
+    docs = sorted(words["doc_id"].unique())[::2]
+    lower = words["doc_id"].isin(docs) & (
+        words["line_id"] > words.groupby("doc_id")["line_id"].transform("median")
+    )
+    words.loc[lower, "page"] = 2
+    frags = fragments_view(cluster_lines(words)).sort_values("frag_key")
+    assert frags.groupby("doc_id")["page"].nunique().max() == 2
+    want = frags.groupby(["doc_id", "page"], sort=False).cumcount()
+    assert frags["frag_ord"].tolist() == want.tolist()

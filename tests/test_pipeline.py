@@ -109,6 +109,16 @@ def test_recognizer_status_and_time_to_shred(extracted):
     assert len(run_ids) == 1 and None not in run_ids
 
 
+def test_output_schema_is_extracted_document(extracted):
+    """run_extraction's output is schema.EXTRACTED_DOCUMENT: the same
+    columns in the same order, each of the same type."""
+    from horus_spark import schema as S
+
+    assert [(f.name, f.dataType.simpleString()) for f in extracted.schema] == [
+        (f.name, f.dataType.simpleString()) for f in S.EXTRACTED_DOCUMENT
+    ]
+
+
 def test_thumbprint_known_value(spark):
     """Pin the exact thumbprint byte layout: md5 over the span texts joined
     by ASCII RS (0x1E), space-separated uppercase hex pairs

@@ -4,12 +4,13 @@ SampleCustomerProcessingEngine.cs:27-79)."""
 
 import json
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from horus_spark.config import FORMAT_CONFIGS
 from horus_spark.engines import get_engine
-from horus_spark.operators.shred import shred
+from horus_spark.operators.shred import raw_arrays, shred_fast
 from horus_spark.registry import bootstrap_registry, latest_models, register_model
 
 
@@ -92,10 +93,12 @@ FULL_FIELDS = {
 
 
 def _shred_one(spark, fields, engine):
+    # the recognize kernel's own fields -> raw bridge builds the input
+    header, lines = raw_arrays([fields])
     df = spark.createDataFrame(
-        [("abc-INVOICE-1.pdf", fields)], "doc_id string, fields map<string,string>"
+        pa.table({"doc_id": ["abc-INVOICE-1.pdf"], "header_raw": header, "lines_raw": lines})
     )
-    return shred(df, engine=engine).collect()[0]
+    return shred_fast(df, engine=engine).collect()[0]
 
 
 def test_sample_customer_engine_field_set(spark):

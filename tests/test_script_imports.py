@@ -1,8 +1,9 @@
-"""Every `from horus_spark... import name` in the scripts outside the
-package (tools/, examples/, perfbench/, __spark_entry__.py), including
-imports inside functions, names something that exists. A script that
-imports a deleted (often private) name would otherwise fail only when
-someone runs it. No Spark session."""
+"""Every `from horus_spark... import name` in the code outside the
+package (tools/, examples/, perfbench/, tests/, __spark_entry__.py),
+including imports inside functions, names something that exists. A script
+that imports a deleted (often private) name would otherwise fail only when
+someone runs it, and a test module only as a collection error in the full
+suite. No Spark session."""
 
 import ast
 import importlib
@@ -11,7 +12,9 @@ from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 SCRIPTS = [ROOT / "__spark_entry__.py"] + sorted(
-    p for d in ("tools", "examples", "perfbench") for p in (ROOT / d).rglob("*.py")
+    p
+    for d in ("tools", "examples", "perfbench", "tests")
+    for p in (ROOT / d).rglob("*.py")
 )
 
 

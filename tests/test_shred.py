@@ -4,14 +4,21 @@ HorusProcessingEngine.cs). Each case exercises a PRE000x path or quirk."""
 
 import datetime as dt
 
-from horus_spark.operators.shred import shred, shred_fast
+import pyarrow as pa
+
+from horus_spark.operators.shred import raw_arrays, shred_fast
+
+
+def _raw_frame(spark, doc_ids, fields):
+    # the recognize kernel's own fields -> raw bridge builds the input
+    header, lines = raw_arrays(fields)
+    return spark.createDataFrame(
+        pa.table({"doc_id": doc_ids, "header_raw": header, "lines_raw": lines})
+    )
 
 
 def _shred_one(spark, fields: dict):
-    df = spark.createDataFrame(
-        [("abc-INVOICE-1.pdf", fields)], "doc_id string, fields map<string,string>"
-    )
-    return shred(df).collect()[0]
+    return shred_fast(_raw_frame(spark, ["abc-INVOICE-1.pdf"], [fields])).collect()[0]
 
 
 FULL = {
@@ -195,17 +202,7 @@ def test_shred_fast_schema_has_run_stamps(spark):
     caller provides no run stamps: shredding_utc_datetime /
     unique_run_identifier are emitted unconditionally (NULL), like
     thumbprint/model_id."""
-    df = spark.createDataFrame(
-        [("d1", {"order_number": "PO1", "order_date": None, "tax_date": None,
-                 "inv": "INV1", "account": None, "net_total": None,
-                 "vat_amount": None, "shipping_total": None,
-                 "grand_total": None, "post_code": None}, [])],
-        "doc_id string, header_raw struct<order_number:string,order_date:string,"
-        "tax_date:string,inv:string,account:string,net_total:string,"
-        "vat_amount:string,shipping_total:string,grand_total:string,"
-        "post_code:string>, lines_raw array<struct<drug:string,qty:string,"
-        "unit:string,vat:string,disc:string,taxable:string,net:string>>",
-    )
+    df = _raw_frame(spark, ["d1"], [{"OrderNO": "PO1", "Inv": "INV1"}])
     out = shred_fast(df)
     assert "shredding_utc_datetime" in out.columns
     assert "unique_run_identifier" in out.columns

@@ -1,13 +1,16 @@
 """Differential fuzz: the independent Python mini-shredder
-(fixtures/oracle_shred.py — the q19 golden oracle) and the Spark shredder
+(fixtures/oracle_shred.py — the q19 golden oracle) and the production
+shredder input path (the kernel's raw_arrays bridge, then shred_fast)
 must agree on randomized field maps, including shapes the generator never
 produces: missing header keys, line holes (prefix termination), garbage
 numbers, commas/spaces, zero values, quote sanitization."""
 
 import random
 
+import pyarrow as pa
+
 from horus_spark.fixtures.oracle_shred import expected_shred
-from horus_spark.operators.shred import shred
+from horus_spark.operators.shred import raw_arrays, shred_fast
 
 NUMS_OK = ["0", "12.5", "1,234.56", " 12 ", "+5", "-0.1", ".5", "00.10", "7", "12.", "0.00", "1 2 3"]
 NUMS_BAD = ["abc", "12a", "--3", "1.2.3", "£5", "NaN?", "1e5", ".", "Infinity", "١٢"]
@@ -46,8 +49,12 @@ def _random_fields(rng: random.Random) -> dict:
 def test_differential_fuzz_python_oracle_vs_spark(spark):
     rng = random.Random(20260817)
     cases = [(f"doc-{i}", _random_fields(rng)) for i in range(300)]
-    df = spark.createDataFrame(cases, "doc_id string, fields map<string,string>")
-    got = {r.doc_id: r for r in shred(df).collect()}
+    # the recognize kernel's own fields -> raw bridge builds the input
+    header, lines = raw_arrays([f for _, f in cases])
+    df = spark.createDataFrame(
+        pa.table({"doc_id": [d for d, _ in cases], "header_raw": header, "lines_raw": lines})
+    )
+    got = {r.doc_id: r for r in shred_fast(df).collect()}
     n_checked = 0
     for doc_id, fields in cases:
         exp = expected_shred(fields)
