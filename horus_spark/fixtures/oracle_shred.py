@@ -72,7 +72,8 @@ def _date_parse(raw: str | None) -> dt.datetime | None:
 
 def expected_shred(fields: dict[str, str]) -> dict:
     """Predict the extraction pipeline's typed output for one document given
-    its ground-truth fields map. Returns the q19 projection columns."""
+    its ground-truth fields map. Returns the q19 projection columns plus
+    `errors`, the (code, severity) rows in emission order."""
     errors: list[tuple[str, str]] = []  # (code, severity)
 
     def get_string(key: str, severity: str) -> str | None:
@@ -146,5 +147,6 @@ def expected_shred(fields: dict[str, str]) -> dict:
         "grand_total": round(grand_total, 2),
         "n_lines": n_lines,
         "n_errors": len(errors),
+        "errors": errors,
         "is_valid": terminal_count == 0,
     }

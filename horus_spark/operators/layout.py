@@ -81,7 +81,7 @@ def fragments_view(clustered: pd.DataFrame, with_words: bool = False) -> pd.Data
     from the word-level frame via vectorized merges instead."""
     clustered = clustered.sort_values(["frag_key", "x0"], kind="mergesort")
     fk = clustered["frag_key"].to_numpy()
-    starts = np.flatnonzero(np.r_[True, fk[1:] != fk[:-1]])
+    starts = np.flatnonzero(np.r_[len(fk) > 0, fk[1:] != fk[:-1]])  # none if empty
     ends = np.r_[starts[1:], len(fk)]
     x0 = clustered["x0"].to_numpy(dtype=np.float64)
     y0 = clustered["y0"].to_numpy(dtype=np.float64)

@@ -27,17 +27,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "asset_id string, doc_id string, media_type string, payload binary, "
-    "meta struct<width:int,height:int,duration_ms:int,codec:string>"
-)
-
 FEATURES_SCHEMA = (
     "asset_id string, doc_id string, media_type string, "
     "feature_version int, features array<float>"
 )
-
-THUMB_SCHEMA = "asset_id string, width int, height int, thumb binary"
 
 
 def _fake_decode(payload: bytes, dims: int = 8) -> list[float]:

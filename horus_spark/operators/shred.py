@@ -4,6 +4,12 @@ Re-expresses the reference's shredding semantics
 (reference Horus.Functions/Engines/Processing/HorusProcessingEngine.cs:13-90
 and ProcessingEngine.cs:15-130) as PURE Spark SQL expressions.
 
+One raw-field table drives it: `_HEADER_KEYS` and `_LINE_KEYS` declare each
+field once — its raw column, reference key, kind (str / num / numtext /
+date) and output column — and `_LINE_READS` the per-line reads in emission
+order. The raw struct types, the Arrow bridge, every value, every error row
+and the output projection are derived from them.
+
 One input path, in two steps:
 
 - raw_arrays(fields): the fields -> raw bridge. Per-document fields dicts
@@ -16,7 +22,9 @@ One input path, in two steps:
   only. Reading pre-parsed raw columns keeps the expression tree small (no
   per-key map scans, no 49-step presence aggregate), which keeps
   whole-stage codegen JIT-friendly — a map-reading variant generated a
-  megamorphic method that ran 3x SLOWER than interpreted.
+  megamorphic method that ran 3x SLOWER than interpreted. Each field read
+  (`_read`) builds its parse once and shares it between the value and the
+  error checks.
 
 Parity points preserved exactly:
 - quote sanitization '\'' -> '@Illegal@' (ProcessingEngine.cs:37-40)
@@ -57,27 +65,61 @@ from horus_spark.engines import HORUS_ENGINE, get_engine
 # allows thousands commas (stripped before cast).
 _NUM_RE = r"^[+-]?([0-9][0-9,]*\.?[0-9]*|\.[0-9]+)$"
 
+# GetDate formats, tried in order (dmy per fields.json), then Spark's default
+_DATE_FORMATS = [
+    "dd/MM/yyyy",
+    "dd/MM/yyyy HH:mm:ss",
+    "M/d/yyyy h:mm:ss a",
+    "M/d/yyyy H:mm:ss",
+    "yyyy-MM-dd HH:mm:ss",
+    "yyyy-MM-dd",
+]
+
 LINE_ITEM_TYPE = ArrayType(S.LINE_ITEM).simpleString()
 ERRORS_TYPE = ArrayType(S.DOC_ERROR).simpleString()
 
 # ------------------------------------------------------------- raw contract
-# raw columns -> the field keys they read (header) or the per-line key
-# prefixes (lines, suffixed 01..49); a NULL raw value = element missing
+# (raw column, reference key, kind, output column); a NULL raw value =
+# element missing. Header rows are in the reference's read order, which is
+# also the error emission order. Line keys are prefixes, suffixed 01..49;
+# their order is the lines_raw struct's field order.
 _HEADER_KEYS = [
-    ("order_number", C.ORDER_NUMBER), ("order_date", C.ORDER_DATE),
-    ("tax_date", C.TAX_DATE), ("inv", C.INVOICE_NUMBER), ("account", C.ACCOUNT),
-    ("net_total", C.NET_TOTAL), ("vat_amount", C.VAT_AMOUNT),
-    ("shipping_total", C.SHIPPING_TOTAL), ("grand_total", C.GRAND_TOTAL),
-    ("post_code", C.POST_CODE),
+    ("order_number", C.ORDER_NUMBER, "str", "order_number"),
+    ("order_date", C.ORDER_DATE, "date", "order_date"),
+    ("tax_date", C.TAX_DATE, "date", "tax_date"),
+    ("inv", C.INVOICE_NUMBER, "str", "document_number"),
+    ("account", C.ACCOUNT, "str", "account"),
+    ("net_total", C.NET_TOTAL, "num", "net_total"),
+    ("vat_amount", C.VAT_AMOUNT, "num", "vat_amount"),
+    ("shipping_total", C.SHIPPING_TOTAL, "num", "shipping_total"),
+    ("grand_total", C.GRAND_TOTAL, "num", "grand_total"),
+    ("post_code", C.POST_CODE, "str", "post_code"),
 ]
 _LINE_KEYS = [
-    ("drug", C.LINE_ITEM_PREFIX), ("qty", C.QUANTITY_PREFIX),
-    ("unit", C.UNIT_PRICE_PREFIX), ("vat", C.VAT_CODE_PREFIX),
-    ("disc", C.DISCOUNT_PERCENT_PREFIX), ("taxable", C.TAXABLE_PREFIX),
-    ("net", C.NET_PRICE_PREFIX),
+    ("drug", C.LINE_ITEM_PREFIX, "str", "item_description"),
+    ("qty", C.QUANTITY_PREFIX, "numtext", "line_quantity"),
+    ("unit", C.UNIT_PRICE_PREFIX, "num", "unit_price"),
+    ("vat", C.VAT_CODE_PREFIX, "str", "vat_code"),
+    ("disc", C.DISCOUNT_PERCENT_PREFIX, "num", "discount_percent"),
+    ("taxable", C.TAXABLE_PREFIX, "str", "taxable_indicator"),
+    ("net", C.NET_PRICE_PREFIX, "num", "net_amount"),
 ]
-_HEADER_T = "struct<" + ",".join(f"{c}:string" for c, _ in _HEADER_KEYS) + ">"
-_LINES_T = "array<struct<" + ",".join(f"{c}:string" for c, _ in _LINE_KEYS) + ">>"
+# per-line reads in emission order: Drug is read twice, LogTrace then read
+# (HorusProcessingEngine.cs:65-75)
+_LINE_READS = [
+    ("drug", E.SEV_WARNING),
+    ("drug", E.SEV_TERMINAL),
+    ("qty", E.SEV_WARNING),
+    ("net", E.SEV_TERMINAL),
+    ("unit", E.SEV_TERMINAL),
+    ("vat", E.SEV_WARNING),
+    ("disc", E.SEV_WARNING),
+    ("taxable", E.SEV_WARNING),
+]
+# a line exists iff its Drug, Unit or Net key is present
+_LINE_PRESENCE = tuple(p for c, p, *_ in _LINE_KEYS if c in ("drug", "unit", "net"))
+_HEADER_T = "struct<" + ",".join(f"{c}:string" for c, *_ in _HEADER_KEYS) + ">"
+_LINES_T = "array<struct<" + ",".join(f"{c}:string" for c, *_ in _LINE_KEYS) + ">>"
 
 
 @functools.cache
@@ -86,8 +128,8 @@ def _arrow_raw_types():
     import pyarrow as pa
 
     return (
-        pa.struct([(c, pa.string()) for c, _ in _HEADER_KEYS]),
-        pa.struct([(c, pa.string()) for c, _ in _LINE_KEYS]),
+        pa.struct([(c, pa.string()) for c, *_ in _HEADER_KEYS]),
+        pa.struct([(c, pa.string()) for c, *_ in _LINE_KEYS]),
     )
 
 
@@ -106,31 +148,28 @@ def raw_arrays(fields: list[dict]):
     import pyarrow as pa
 
     n = len(fields)
-    header_cols: dict[str, list] = {c: [None] * n for c, _ in _HEADER_KEYS}
-    line_cols: dict[str, list] = {c: [] for c, _ in _LINE_KEYS}
+    header_cols: dict[str, list] = {c: [None] * n for c, *_ in _HEADER_KEYS}
+    line_cols: dict[str, list] = {c: [] for c, *_ in _LINE_KEYS}
     line_offsets = [0]
+    drug, unit, net = _LINE_PRESENCE
     for d, fd in enumerate(fields):
-        for col, key in _HEADER_KEYS:
+        for col, key, *_ in _HEADER_KEYS:
             header_cols[col][d] = fd.get(key)
         for i in range(1, C.MAX_DOCUMENT_LINES):
             nn = f"{i:02d}"
-            if not (
-                C.UNIT_PRICE_PREFIX + nn in fd
-                or C.NET_PRICE_PREFIX + nn in fd
-                or C.LINE_ITEM_PREFIX + nn in fd
-            ):
+            if not (unit + nn in fd or net + nn in fd or drug + nn in fd):
                 break
-            for col, prefix in _LINE_KEYS:
+            for col, prefix, *_ in _LINE_KEYS:
                 line_cols[col].append(fd.get(prefix + nn))
         line_offsets.append(len(line_cols["drug"]))
 
     header_t, line_t = _arrow_raw_types()
     header_arr = pa.StructArray.from_arrays(
-        [pa.array(header_cols[c], pa.string()) for c, _ in _HEADER_KEYS],
+        [pa.array(header_cols[c], pa.string()) for c, *_ in _HEADER_KEYS],
         fields=list(header_t),
     )
     line_values = pa.StructArray.from_arrays(
-        [pa.array(line_cols[c], pa.string()) for c, _ in _LINE_KEYS],
+        [pa.array(line_cols[c], pa.string()) for c, *_ in _LINE_KEYS],
         fields=list(line_t),
     )
     lines_arr = pa.ListArray.from_arrays(
@@ -152,61 +191,76 @@ def _sanitize(col: Column) -> Column:
     return F.replace(col, F.lit("'"), F.lit(E.ILLEGAL_MARKER))
 
 
-# ---------------------------------------------------------------- raw helpers
-# Each operates on a nullable raw-text Column; NULL raw <=> element missing.
+# the reference getter and its element-missing code, per kind
+_GETTERS = {
+    "str": ("GetString", E.CODE_STRING_NULL),
+    "num": ("GetNumber", E.CODE_NUMBER_NULL),
+    "numtext": ("GetNumber", E.CODE_NUMBER_NULL),
+    "date": ("GetDate", E.CODE_DATE_NULL),
+}
 
 
-def str_value(raw: Column) -> Column:
-    return F.when(raw.isNotNull(), _sanitize(raw))
+def _read(
+    kind: str, raw: Column, key: Column | None = None, severity: str | None = None
+) -> tuple[Column, Column | None]:
+    """One reference getter call on a nullable raw-text Column (NULL <=>
+    element missing) -> (value, error).
 
+    value by kind: 'str' the sanitized text; 'num' the parsed number
+    `?? 0`; 'numtext' the C# decimal round-trip string of the parsed
+    number, '' when unparseable; 'date' the parsed timestamp or NULL.
+    error: the PRE000x row the read emits (NULL when none), checks in the
+    getter's order; None when `key` is None (value only)."""
+    if kind == "str":
+        value = F.when(raw.isNotNull(), _sanitize(raw))
+    elif kind == "date":
+        r = F.trim(raw)
+        value = parsed = F.coalesce(
+            *[F.try_to_timestamp(r, F.lit(f)) for f in _DATE_FORMATS],
+            F.try_to_timestamp(r),
+        )
+    else:
+        cleaned = F.replace(F.trim(raw), F.lit(" "), F.lit(""))
+        ok = cleaned.rlike(_NUM_RE)
+        digits = F.replace(cleaned, F.lit(","), F.lit(""))
+        parsed = F.when(raw.isNotNull() & ok, digits.cast("double"))
+        if kind == "num":
+            value = F.coalesce(parsed, F.lit(0.0))
+        else:
+            norm = F.regexp_replace(digits, r"^([+-]?)0+([0-9])", r"$1$2")
+            norm = F.regexp_replace(norm, r"^([+-]?)\.", r"$10.")
+            value = F.when(parsed.isNotNull(), norm).otherwise(F.lit(""))
+    if key is None:
+        return value, None
 
-def str_error(raw: Column, key: Column, severity: str) -> Column:
-    return F.when(
+    getter, null_code = _GETTERS[kind]
+    error = F.when(
         raw.isNull(),
         _err(
-            E.CODE_STRING_NULL,
+            null_code,
             severity,
-            F.concat(F.lit("GetString() Specified Element "), key, F.lit(" is null")),
+            F.concat(F.lit(f"{getter}() Specified Element "), key, F.lit(" is null")),
         ),
     )
-
-
-def _num_cleaned(raw: Column) -> Column:
-    return F.replace(F.trim(raw), F.lit(" "), F.lit(""))
-
-
-def num_parse_ok(raw: Column) -> Column:
-    return _num_cleaned(raw).rlike(_NUM_RE)
-
-
-def num_value(raw: Column) -> Column:
-    """Parsed value or NULL (caller applies `?? 0` where the reference does)."""
-    return F.when(
-        raw.isNotNull() & num_parse_ok(raw),
-        F.replace(_num_cleaned(raw), F.lit(","), F.lit("")).cast("double"),
-    )
-
-
-def num_normalized_string(raw: Column) -> Column:
-    """C# decimal round-trip string of the parsed value ('' when null)."""
-    cleaned = F.replace(_num_cleaned(raw), F.lit(","), F.lit(""))
-    norm = F.regexp_replace(cleaned, r"^([+-]?)0+([0-9])", r"$1$2")
-    norm = F.regexp_replace(norm, r"^([+-]?)\.", r"$10.")
-    return F.when(num_value(raw).isNotNull(), norm).otherwise(F.lit(""))
-
-
-def num_error(raw: Column, key: Column, severity: str) -> Column:
-    return (
-        F.when(
-            raw.isNull(),
+    if kind == "date":
+        error = error.when(
+            parsed.isNull(),
             _err(
-                E.CODE_NUMBER_NULL,
+                E.CODE_DATE_PARSE,
                 severity,
-                F.concat(F.lit("GetNumber() Specified Element "), key, F.lit(" is null")),
+                _sanitize(
+                    F.concat(
+                        F.lit("GetDate() Specified Element "),
+                        key,
+                        F.lit(" does not contain a valid date: TaxDate="),
+                        raw,
+                    )
+                ),
             ),
         )
-        .when(
-            ~num_parse_ok(raw),
+    elif kind != "str":
+        error = error.when(
+            ~ok,
             _err(
                 E.CODE_NUMBER_PARSE,
                 severity,
@@ -219,54 +273,21 @@ def num_error(raw: Column, key: Column, severity: str) -> Column:
                     )
                 ),
             ),
-        )
-        .when(
-            num_value(raw) == 0,
+        ).when(
+            parsed == 0,
             _err(
                 E.CODE_NUMBER_ZERO,
                 E.SEV_WARNING,  # zero warning is ALWAYS Warning severity
                 F.concat(F.lit("GetNumber() "), key, F.lit(" exists but its value is zero")),
             ),
         )
-    )
+    return value, error
 
 
-def date_value(raw: Column) -> Column:
-    r = F.trim(raw)
-    return F.coalesce(
-        F.try_to_timestamp(r, F.lit("dd/MM/yyyy")),
-        F.try_to_timestamp(r, F.lit("dd/MM/yyyy HH:mm:ss")),  # dmy per fields.json
-        F.try_to_timestamp(r, F.lit("M/d/yyyy h:mm:ss a")),
-        F.try_to_timestamp(r, F.lit("M/d/yyyy H:mm:ss")),
-        F.try_to_timestamp(r, F.lit("yyyy-MM-dd HH:mm:ss")),
-        F.try_to_timestamp(r, F.lit("yyyy-MM-dd")),
-        F.try_to_timestamp(r),
-    )
-
-
-def date_error(raw: Column, key: Column, severity: str) -> Column:
-    return F.when(
-        raw.isNull(),
-        _err(
-            E.CODE_DATE_NULL,
-            severity,
-            F.concat(F.lit("GetDate() Specified Element "), key, F.lit(" is null")),
-        ),
-    ).when(
-        date_value(raw).isNull(),
-        _err(
-            E.CODE_DATE_PARSE,
-            severity,
-            _sanitize(
-                F.concat(
-                    F.lit("GetDate() Specified Element "),
-                    key,
-                    F.lit(" does not contain a valid date: TaxDate="),
-                    raw,
-                )
-            ),
-        ),
-    )
+def _unread(kind: str) -> Column:
+    """C# default of a field the engine never reads: 0 for a number, NULL
+    for a string."""
+    return F.lit(0.0) if kind == "num" else F.lit(None).cast("string")
 
 
 # ------------------------------------------------------------------ core
@@ -279,108 +300,68 @@ def shred_fast(df: DataFrame, carry: list[str] | None = None, engine=None) -> Da
                        post_code : string> (NULL field = element missing)
     lines_raw:  array<struct<drug,qty,unit,vat,disc,taxable,net : string>>
                 (already prefix-terminated, max 49 entries).
-    `carry` columns pass through. `engine` (engines.EngineSpec or name,
-    'horus' default) selects which field channels exist — the reference's
-    pluggable IProcessingEngine surface. Channels an engine omits keep
-    their C# default values (0 / null) and emit no error rows, so the
-    output schema is engine-invariant."""
+    Output columns follow schema.SHREDDED_DOCUMENT, then `carry`. The run
+    stamps (file_name, thumbprint, model_id, ...) pass through when present
+    and are typed NULLs otherwise, except file_name (defaults to doc_id)
+    and time_to_shred_ms (defaults to 0). `engine` (engines.EngineSpec or
+    name, 'horus' default) selects which field channels exist — the
+    reference's pluggable IProcessingEngine surface. Channels an engine
+    omits keep their C# default values (0 / null) and emit no error rows,
+    so the output schema is engine-invariant."""
     engine = get_engine(engine) if engine is not None else HORUS_ENGINE
-    carry = carry or []
-    cols = df.columns
-
-    def k(name: str) -> Column:
-        return F.lit(name)
+    unread = {
+        col
+        for col, read in (
+            ("shipping_total", engine.include_shipping),
+            ("disc", engine.include_discount),
+            ("taxable", engine.include_taxable),
+        )
+        if not read
+    }
 
     h = F.col("header_raw")
     lines_raw = F.col("lines_raw")
-    order_number = str_value(h["order_number"])
-    order_date = date_value(h["order_date"])
-    tax_date = date_value(h["tax_date"])
-    document_number = str_value(h["inv"])
-    account = str_value(h["account"])
-    net_total = F.coalesce(num_value(h["net_total"]), F.lit(0.0))
-    vat_amount = F.coalesce(num_value(h["vat_amount"]), F.lit(0.0))
-    shipping_total = (
-        F.coalesce(num_value(h["shipping_total"]), F.lit(0.0))
-        if engine.include_shipping
-        else F.lit(0.0)  # SampleCustomer never reads Shipping -> C# default
-    )
-    grand_total = F.coalesce(num_value(h["grand_total"]), F.lit(0.0))
-    post_code = str_value(h["post_code"])
-    tax_period = F.when(
+    out: dict[str, Column] = {"doc_id": F.col("doc_id")}
+    header_errors = []
+    for col, key, kind, name in _HEADER_KEYS:
+        if col in unread:
+            out[name] = _unread(kind)
+            continue
+        out[name], error = _read(kind, h[col], F.lit(key), E.SEV_WARNING)
+        header_errors.append(error)
+    tax_date = out["tax_date"]
+    out["tax_period"] = F.when(
         tax_date.isNotNull(),
         F.concat(F.year(tax_date).cast("string"), F.month(tax_date).cast("string")),
     )
 
-    header_error_entries = [
-        str_error(h["order_number"], k(C.ORDER_NUMBER), E.SEV_WARNING),
-        date_error(h["order_date"], k(C.ORDER_DATE), E.SEV_WARNING),
-        date_error(h["tax_date"], k(C.TAX_DATE), E.SEV_WARNING),
-        str_error(h["inv"], k(C.INVOICE_NUMBER), E.SEV_WARNING),
-        str_error(h["account"], k(C.ACCOUNT), E.SEV_WARNING),
-        num_error(h["net_total"], k(C.NET_TOTAL), E.SEV_WARNING),
-        num_error(h["vat_amount"], k(C.VAT_AMOUNT), E.SEV_WARNING),
-    ]
-    if engine.include_shipping:
-        header_error_entries.append(
-            num_error(h["shipping_total"], k(C.SHIPPING_TOTAL), E.SEV_WARNING)
-        )
-    header_error_entries += [
-        num_error(h["grand_total"], k(C.GRAND_TOTAL), E.SEV_WARNING),
-        str_error(h["post_code"], k(C.POST_CODE), E.SEV_WARNING),
-    ]
-    header_errors = F.array(*header_error_entries)
+    line_keys = {col: (prefix, kind) for col, prefix, kind, _ in _LINE_KEYS}
 
-    def lkey(prefix: str, i: Column) -> Column:
-        return F.concat(F.lit(prefix), F.lpad((i + 1).cast("string"), 2, "0"))
+    def line_no(i: Column) -> Column:
+        return F.lpad((i + 1).cast("string"), 2, "0")
 
     def line_struct(l: Column, i: Column) -> Column:
-        net = F.coalesce(num_value(l["net"]), F.lit(0.0))
-        unit = F.coalesce(num_value(l["unit"]), F.lit(0.0))
-        return F.struct(
-            F.lpad((i + 1).cast("string"), 2, "0").alias("line_no"),
-            str_value(l["drug"]).alias("item_description"),
-            num_normalized_string(l["qty"]).alias("line_quantity"),
-            unit.alias("unit_price"),
-            str_value(l["vat"]).alias("vat_code"),
-            (
-                str_value(l["taxable"])
-                if engine.include_taxable
-                else F.lit(None).cast("string")
-            ).alias("taxable_indicator"),
-            net.alias("net_amount"),
-            F.when((net != 0) & (unit != 0), net / unit)
-            .otherwise(F.lit(0.0))
-            .alias("calculated_line_quantity"),
-            (
-                F.coalesce(num_value(l["disc"]), F.lit(0.0))
-                if engine.include_discount
-                else F.lit(0.0)
-            ).alias("discount_percent"),
+        v = {"line_no": line_no(i)}
+        for col, _, kind, name in _LINE_KEYS:
+            v[name] = _unread(kind) if col in unread else _read(kind, l[col])[0]
+        net, unit = v["net_amount"], v["unit_price"]
+        v["calculated_line_quantity"] = (
+            F.when((net != 0) & (unit != 0), net / unit).otherwise(F.lit(0.0))
         )
+        return F.struct(*[v[f].alias(f) for f in S.LINE_ITEM.fieldNames()])
 
     def line_errors(l: Column, i: Column) -> Column:
-        entries = [
-            str_error(l["drug"], lkey(C.LINE_ITEM_PREFIX, i), E.SEV_WARNING),  # LogTrace
-            str_error(l["drug"], lkey(C.LINE_ITEM_PREFIX, i), E.SEV_TERMINAL),
-            num_error(l["qty"], lkey(C.QUANTITY_PREFIX, i), E.SEV_WARNING),
-            num_error(l["net"], lkey(C.NET_PRICE_PREFIX, i), E.SEV_TERMINAL),
-            num_error(l["unit"], lkey(C.UNIT_PRICE_PREFIX, i), E.SEV_TERMINAL),
-            str_error(l["vat"], lkey(C.VAT_CODE_PREFIX, i), E.SEV_WARNING),
-        ]
-        if engine.include_discount:
-            entries.append(
-                num_error(l["disc"], lkey(C.DISCOUNT_PERCENT_PREFIX, i), E.SEV_WARNING)
-            )
-        if engine.include_taxable:
-            entries.append(
-                str_error(l["taxable"], lkey(C.TAXABLE_PREFIX, i), E.SEV_WARNING)
-            )
-        return F.array(*entries)
+        errors = []
+        for col, severity in _LINE_READS:
+            if col in unread:
+                continue
+            prefix, kind = line_keys[col]
+            key = F.concat(F.lit(prefix), line_no(i))
+            errors.append(_read(kind, l[col], key, severity)[1])
+        return F.array(*errors)
 
-    line_items = F.transform(lines_raw, line_struct)
     all_errors_expr = F.filter(
-        F.concat(header_errors, F.flatten(F.transform(lines_raw, line_errors))),
+        F.concat(F.array(*header_errors), F.flatten(F.transform(lines_raw, line_errors))),
         lambda e: e.isNotNull(),
     )
     # Stage the error array in its own projection: higher-order functions are
@@ -393,68 +374,31 @@ def shred_fast(df: DataFrame, carry: list[str] | None = None, engine=None) -> Da
 
     terminal_count = F.size(F.filter(all_errors, lambda e: e["severity"] == E.SEV_TERMINAL))
     warning_count = F.size(F.filter(all_errors, lambda e: e["severity"] == E.SEV_WARNING))
+    out.update(
+        terminal_error_count=terminal_count,
+        warning_error_count=warning_count,
+        is_valid=terminal_count == 0,
+        line_items=F.transform(lines_raw, line_struct),
+        errors=all_errors,
+    )
+
+    # carried stamps: the recognizer outcome channel (Models/Document.cs:
+    # 20-105), the measured per-doc extraction wall time (TimeToShred,
+    # HorusProcessingEngine.cs:15-16,87-88) and the run stamps
+    # (HorusSql.cs:244-249)
+    absent = {"file_name": F.col("doc_id"), "time_to_shred_ms": F.lit(0.0)}
+    cols = set(df.columns)
+
+    def column(f) -> Column:
+        if f.name in out:
+            c = out[f.name]
+        elif f.name in cols:
+            c = F.col(f.name)
+        else:
+            c = absent.get(f.name, F.lit(None).cast(f.dataType))
+        return c.alias(f.name)
 
     return df.select(
-        F.col("doc_id"),
-        (F.col("file_name") if "file_name" in cols else F.col("doc_id")).alias("file_name"),
-        document_number.alias("document_number"),
-        order_number.alias("order_number"),
-        order_date.alias("order_date"),
-        tax_date.alias("tax_date"),
-        tax_period.alias("tax_period"),
-        account.alias("account"),
-        post_code.alias("post_code"),
-        net_total.alias("net_total"),
-        vat_amount.alias("vat_amount"),
-        shipping_total.alias("shipping_total"),
-        grand_total.alias("grand_total"),
-        (F.col("thumbprint") if "thumbprint" in cols else F.lit(None).cast("string")).alias(
-            "thumbprint"
-        ),
-        (F.col("model_id") if "model_id" in cols else F.lit(None).cast("string")).alias(
-            "model_id"
-        ),
-        (
-            F.col("model_version") if "model_version" in cols else F.lit(None).cast("string")
-        ).alias("model_version"),
-        # recognizer outcome channel (reference Models/Document.cs:20-105)
-        (
-            F.col("recognizer_status")
-            if "recognizer_status" in cols
-            else F.lit(None).cast("string")
-        ).alias("recognizer_status"),
-        (
-            F.col("recognizer_errors")
-            if "recognizer_errors" in cols
-            else F.lit(None).cast("array<string>")
-        ).alias("recognizer_errors"),
-        terminal_count.alias("terminal_error_count"),
-        warning_count.alias("warning_error_count"),
-        (terminal_count == 0).alias("is_valid"),
-        line_items.alias("line_items"),
-        all_errors.alias("errors"),
-        # measured per-doc extraction wall time (the engine's per-document
-        # compute happens in the recognize kernel; the expression-based
-        # shred itself adds no per-row Python) — the reference's
-        # TimeToShred stopwatch (HorusProcessingEngine.cs:15-16,87-88)
-        (
-            F.col("time_to_shred_ms")
-            if "time_to_shred_ms" in cols
-            else F.lit(0.0)
-        ).alias("time_to_shred_ms"),
-        # run stamps (HorusSql.cs:244-249): emitted unconditionally (NULL
-        # when the pipeline didn't provide them) so every shred output —
-        # including shred_fast outside run_extraction — matches
-        # schema.SHREDDED_DOCUMENT, same as thumbprint/model_id above
-        (
-            F.col("shredding_utc_datetime")
-            if "shredding_utc_datetime" in cols
-            else F.lit(None).cast("timestamp")
-        ).alias("shredding_utc_datetime"),
-        (
-            F.col("unique_run_identifier")
-            if "unique_run_identifier" in cols
-            else F.lit(None).cast("string")
-        ).alias("unique_run_identifier"),
-        *[F.col(c) for c in carry],
+        *[column(f) for f in S.SHREDDED_DOCUMENT.fields],
+        *[F.col(c) for c in carry or []],
     )

@@ -68,13 +68,6 @@ def punct_ratio_expr(text: Column) -> Column:
     return punct / F.greatest(F.length(text), F.lit(1))
 
 
-def mean_token_len_expr(text: Column) -> Column:
-    toks = tokens_expr(text)
-    return F.aggregate(
-        toks, F.lit(0), lambda acc, t: acc + F.length(t)
-    ) / F.greatest(F.size(toks), F.lit(1))
-
-
 def quality_score_expr(text: Column) -> Column:
     """Composite quality score in [0,1]: length band + stopword presence +
     low punctuation (Gopher/C4-style heuristics, simplified and
@@ -115,20 +108,6 @@ def fingerprint_expr(text: Column) -> Column:
     norm = F.regexp_replace(F.lower(text), r"[^a-z0-9 ]", "")
     norm = F.trim(F.regexp_replace(norm, r" +", " "))
     return F.md5(norm)
-
-
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return df.withColumns(
-        {
-            "n_tokens": token_count_expr(t),
-            "stopword_ratio": F.round(stopword_ratio_expr(t), 6),
-            "punct_ratio": F.round(punct_ratio_expr(t), 6),
-            "quality_score": quality_score_expr(t),
-            "lang_pred": langid_expr(t),
-            "fingerprint": fingerprint_expr(t),
-        }
-    )
 
 
 def repetition_stats(

@@ -45,7 +45,6 @@ from horus_spark.operators.boilerplate import is_boilerplate_text
 from horus_spark.operators.fields import extract_fields_arrays
 from horus_spark.operators.layout import cluster_lines, fragments_view, infer_grid_arrays
 from horus_spark.operators.shred import (
-    _HEADER_KEYS,
     _HEADER_T,
     _LINES_T,
     _arrow_raw_types,
@@ -71,12 +70,13 @@ MAX_DOC_WORDS = 20000
 
 def _extract_core(
     pdf: pd.DataFrame, configs: dict | None = None
-) -> tuple[list, list, dict, list, list]:
+) -> tuple[list, list, list, list, list]:
     """One doc-contiguous chunk of OCR words (many docs) -> (doc_ids,
-    fields dicts, doc_id->sorted field line ids). L1 runs vectorized over
+    fields dicts, per-doc sorted field line ids). L1 runs vectorized over
     the WHOLE batch; grid/fields per doc (bounded: <=250 words/doc
-    normally, hard cap MAX_DOC_WORDS). Field->OCR-line membership resolves
-    through ONE vectorized merge at the end (no per-fragment Python tuples).
+    normally, hard cap MAX_DOC_WORDS). Fragment j of fragments_view is the
+    j-th frag_key run of the clustered words, so a field's OCR line ids are
+    read straight off its fragments' word runs.
     `configs` is the (broadcast-small) fmt->extraction-config dict from
     the model registry; None = built-in FORMAT_CONFIGS.
 
@@ -91,8 +91,8 @@ def _extract_core(
     RecognizerStatus/RecognizerErrors (Models/Document.cs:20-105) — and
     per-doc wall milliseconds (TimeToShred,
     HorusProcessingEngine.cs:15-16,87-88): the per-doc loop is timed
-    directly; the batch-vectorized prelude (L1 clustering) and epilogue
-    (field-line merge) are amortized evenly across the batch's docs."""
+    directly; the batch-vectorized prelude (L1 clustering) is amortized
+    evenly across the batch's docs."""
     import time as _time
 
     t_batch0 = _time.perf_counter_ns()
@@ -118,8 +118,13 @@ def _extract_core(
     x0_all = frags_all["x0"].to_numpy(dtype="float64")
     y0_all = frags_all["y0"].to_numpy(dtype="float64")
     x1_all = frags_all["x1"].to_numpy(dtype="float64")
-    fk_all = frags_all["frag_key"].to_numpy()
     import numpy as np
+
+    # word-row start of each fragment, then the end: fragment j's words
+    # are rows wstart[j]:wstart[j + 1] of `clustered`
+    fk_words = clustered["frag_key"].to_numpy()
+    wstart = np.flatnonzero(np.r_[True, fk_words[1:] != fk_words[:-1], True])
+    line_l = clustered["line_id"].tolist()
 
     boundaries = np.flatnonzero(doc_ids[1:] != doc_ids[:-1]) + 1
     starts = np.concatenate([[0], boundaries])
@@ -128,8 +133,7 @@ def _extract_core(
     # document, not a silent empty-fields result — one vectorized pass
     finite_all = np.isfinite(x0_all) & np.isfinite(y0_all) & np.isfinite(x1_all)
 
-    out_ids, out_fields, out_status, out_ns = [], [], [], []
-    used_pairs: list[tuple[str, int]] = []  # (doc_id, frag_key)
+    out_ids, out_fields, out_flids, out_status, out_ns = [], [], [], [], []
     for s, e in zip(starts, ends):
         doc_id = doc_ids[s]
         texts = texts_all[s:e]
@@ -153,47 +157,27 @@ def _extract_core(
         out_ids.append(doc_id)
         out_fields.append(fields)
         out_status.append(status)
-        fk = fk_all[s:e]
-        used_pairs.extend((doc_id, int(fk[i])) for i in used)
-    if used_pairs:
-        used_df = pd.DataFrame(used_pairs, columns=["doc_id", "frag_key"])
-        flid_map = (
-            used_df.merge(
-                clustered[["frag_key", "line_id"]].drop_duplicates(),
-                on="frag_key",
-                how="left",
-            )
-            .groupby("doc_id")["line_id"]
-            .agg(lambda s: sorted(set(int(x) for x in s)))
-            .to_dict()
+        out_flids.append(
+            sorted({ln for i in used for ln in line_l[wstart[s + i] : wstart[s + i + 1]]})
         )
-    else:
-        flid_map = {}
-    # amortize everything outside the per-doc loop (prelude + merge) evenly
+    # amortize everything outside the per-doc loop evenly
     n_docs = len(out_ids)
     overhead = max(_time.perf_counter_ns() - t_batch0 - sum(out_ns), 0)
     share = overhead / n_docs if n_docs else 0.0
     out_ms = [(ns + share) / 1e6 for ns in out_ns]
-    return out_ids, out_fields, flid_map, out_status, out_ms
+    return out_ids, out_fields, out_flids, out_status, out_ms
 
 
 def _extract_batch_arrow(pdf: pd.DataFrame, configs: dict | None = None):
     """One kernel chunk -> FIELDS_SCHEMA RecordBatch. The fields dicts
     cross to header_raw/lines_raw through the shredder's raw bridge
-    (operators.shred.raw_arrays); the other columns are built the same
-    columnar way, from flat value/offset lists."""
+    (operators.shred.raw_arrays); the other columns straight from the
+    kernel's per-document lists."""
     import pyarrow as pa
 
-    out_ids, out_fields, flid_map, out_status, out_ms = _extract_core(pdf, configs)
+    out_ids, out_fields, out_flids, out_status, out_ms = _extract_core(pdf, configs)
     header_arr, lines_arr = raw_arrays(out_fields)
-    flid_values: list[int] = []
-    flid_offsets = [0]
-    for doc_id in out_ids:
-        flid_values.extend(flid_map.get(doc_id, []))
-        flid_offsets.append(len(flid_values))
-    flid_arr = pa.ListArray.from_arrays(
-        pa.array(flid_offsets, pa.int32()), pa.array(flid_values, pa.int32())
-    )
+    flid_arr = pa.array(out_flids, pa.list_(pa.int32()))
     status_arr = pa.array([s[0] for s in out_status], pa.string())
     rerr_arr = pa.array([s[1] for s in out_status], pa.list_(pa.string()))
     ms_arr = pa.array(out_ms, pa.float64())
@@ -488,16 +472,14 @@ def run_extraction(
         )
     if fields_df is None:
         fields_df = recognize(ocr_words, configs, heavy_words)
-    empty_header = F.struct(
-        *[F.lit(None).cast("string").alias(c) for c, _ in _HEADER_KEYS]
-    )
     if run_id is None:
         import uuid
 
         run_id = str(uuid.uuid4())  # the reference's UniqueRunIdentifier
     joined = (
         documents.join(fields_df, "doc_id", "left")
-        .withColumn("header_raw", F.coalesce(F.col("header_raw"), empty_header))
+        # a NULL header_raw needs no default: each field read on it is
+        # NULL, i.e. missing, as for an empty fields map
         .withColumn(
             "lines_raw", F.coalesce(F.col("lines_raw"), F.array().cast(_LINES_T))
         )

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from horus_spark import schema as S
+
 
 def write_extracted(extracted: DataFrame, out_dir: str, mode: str = "overwrite") -> None:
     """Write the output tables from an EXTRACTED_DOCUMENT frame.
@@ -327,12 +329,12 @@ def run_checkpointed(
 
     Atomic chunk commit: all of a chunk's tables (4 views + _metrics +
     _lineage) are written into a private `_tmp_chunk_NNNN` directory —
-    invisible to read_output's `chunk=*` glob — and promoted with ONE
-    os.rename once complete (an Iceberg-style snapshot swap without the
-    catalog; swap in `.writeTo(...).append()` under a real catalog). A
-    crash at ANY point during the chunk's writes leaves the published
-    output exactly at the previous chunk state; resume discards the stale
-    tmp directory and redoes the chunk."""
+    invisible to read_output, which reads only manifest-listed chunks —
+    and promoted with ONE os.rename once complete (an Iceberg-style
+    snapshot swap without the catalog; swap in `.writeTo(...).append()`
+    under a real catalog). A crash at ANY point during the chunk's writes
+    leaves the published output exactly at the previous chunk state;
+    resume discards the stale tmp directory and redoes the chunk."""
     from horus_spark.pipeline import run_extraction
 
     run_id = run_id or dt.datetime.now(dt.timezone.utc).strftime("run%Y%m%d%H%M%S")
@@ -605,11 +607,11 @@ def read_output(
     Iceberg add-column contract. Off by default because it reads every
     file's footer; schema-stable stores (the extraction sink) skip it.
 
-    Prefers the `_table_manifest.json` snapshot (the consistent-reader
-    contract: a chunk becomes visible only after its manifest commit, so
-    a reader racing a writer sees the previous complete snapshot, never
-    a half-promoted directory); falls back to the `chunk=*` glob for
-    legacy layouts written before the manifest existed.
+    Reads the chunks the `_table_manifest.json` snapshot lists (the
+    consistent-reader contract: a chunk becomes visible only after its
+    manifest commit, so a reader racing a writer sees the previous
+    complete snapshot, never a half-promoted directory). A store with no
+    manifest has no committed chunk and raises, as an empty one does.
 
     `snapshot=N` time-travels: reads the chunk list as of snapshot N
     (every manifest commit archives its content under _snapshots/).
@@ -651,29 +653,14 @@ def read_output(
         return reader.parquet(
             *_table_paths(m["chunks"], f"snapshot {snapshot}")
         )
-    m = _read_table_manifest(out_dir)
-    if m is not None:
-        if not m["chunks"]:
-            # an EMPTY manifest is a committed (empty) snapshot — falling
-            # through to the glob here would read retracted/half-state
-            # chunk dirs, exactly what the manifest commit exists to hide
-            raise ValueError(
-                f"{out_dir} has no committed chunks at snapshot "
-                f"{m.get('snapshot', 0)}"
-            )
-        return reader.parquet(
-            *_table_paths(m["chunks"], "the current snapshot")
+    # chunk dirs on disk but not in the manifest are retracted or
+    # promoted-but-uncommitted: exactly what the manifest commit hides
+    m = _read_table_manifest(out_dir) or {"chunks": []}
+    if not m["chunks"]:
+        raise ValueError(
+            f"{out_dir} has no committed chunks at snapshot {m.get('snapshot', 0)}"
         )
-    # legacy layouts written before the manifest existed
-    return reader.parquet(os.path.join(out_dir, "chunk=*", table))
-
-
-_LINE_ITEM_COLS = [
-    "line_no", "item_description", "line_quantity", "unit_price", "vat_code",
-    "taxable_indicator", "net_amount", "calculated_line_quantity",
-    "discount_percent",
-]
-_ERROR_COLS = ["code", "severity", "message"]
+    return reader.parquet(*_table_paths(m["chunks"], "the current snapshot"))
 
 
 def _snapshot_chunks(out_dir: str, snapshot: int) -> list[str]:
@@ -771,8 +758,9 @@ def load_documents(
 
     Set-oriented where the reference is per-document: one call
     reassembles every requested file in three scans + two aggregations,
-    instead of three queries per file. `chunked=True` reads the
-    checkpointed `chunk=*` layout; default reads a write_extracted dir.
+    instead of three queries per file. `chunked=True` reads the committed
+    chunks of a checkpointed store (read_output); default reads a
+    write_extracted dir.
     Pass `file_names` to prune (predicate reaches the parquet scan)."""
     if chunked:
         rd = lambda t: read_output(spark, out_dir, t)  # noqa: E731
@@ -818,7 +806,7 @@ def load_documents(
                 F.collect_list(
                     F.struct(
                         F.col("line_no").alias("k"),
-                        F.struct(*_LINE_ITEM_COLS).alias("v"),
+                        F.struct(*S.LINE_ITEM.fieldNames()).alias("v"),
                     )
                 )
             ),
@@ -831,7 +819,7 @@ def load_documents(
                 F.collect_list(
                     F.struct(
                         F.col("error_seq").alias("k"),
-                        F.struct(*_ERROR_COLS).alias("v"),
+                        F.struct(*S.DOC_ERROR.fieldNames()).alias("v"),
                     )
                 )
             ),

@@ -141,8 +141,11 @@ def train_format_config(examples: list[dict]) -> dict:
     fused_any = False
     qty_minus_net: list[float] = []
 
-    for ex in examples:
-        frags = fragments_view(cluster_lines(pd.DataFrame(ex["words"])))
+    for n, ex in enumerate(examples):
+        words = pd.DataFrame(ex["words"])
+        if words.empty:
+            raise ValueError(f"example {n} has no OCR words")
+        frags = fragments_view(cluster_lines(words))
         labels = ex["labels"]
         hdr_frag: dict[str, pd.Series] = {}
         for key in HEADER_KEYS:

@@ -163,6 +163,35 @@ def test_manifest_snapshot_isolation(spark, tmp_path):
     docs.unpersist(); words.unpersist()
 
 
+def test_no_manifest_means_nothing_committed(spark, tmp_path):
+    """A crash after the FIRST chunk's directory promote but before its
+    manifest commit leaves a chunk dir on disk and no manifest at all.
+    Nothing is committed, so read_output raises rather than reading that
+    dir; the resume then yields every doc once."""
+    import os
+
+    out = str(tmp_path / "out5")
+    c = corpus_spark(spark, 30, partitions=4)
+    docs = c["documents"].cache()
+    words = c["ocr_words"].cache()
+    n_total = docs.count()
+    words.count()
+
+    with pytest.raises(RuntimeError, match="before manifest"):
+        run_checkpointed(
+            docs, words, out, run_id="r1", n_chunks=4, fail_before_manifest=1
+        )
+    assert [p for p in os.listdir(out) if p.startswith("chunk=")]
+    with pytest.raises(ValueError, match="no committed chunks"):
+        read_output(spark, out, "documents_out")
+
+    run_checkpointed(docs, words, out, run_id="r2", n_chunks=4)
+    got = read_output(spark, out, "documents_out")
+    assert got.count() == n_total
+    assert got.select("doc_id").distinct().count() == n_total
+    docs.unpersist(); words.unpersist()
+
+
 def test_snapshot_time_travel(spark, tmp_path):
     # round-4: every manifest commit archives its content; read_output
     # (snapshot=N) reconstructs the table as of that commit.

@@ -105,3 +105,16 @@ def test_frag_ord_is_reading_order_within_page():
     assert frags.groupby("doc_id")["page"].nunique().max() == 2
     want = frags.groupby(["doc_id", "page"], sort=False).cumcount()
     assert frags["frag_ord"].tolist() == want.tolist()
+
+
+def test_fragments_view_of_no_words_is_empty():
+    """A words frame with no rows yields an empty fragment frame with the
+    fragment columns, not an IndexError."""
+    from horus_spark.fixtures.generator import corpus_pandas
+
+    words = corpus_pandas(1)["ocr_words"].iloc[0:0]
+    frags = fragments_view(cluster_lines(words))
+    assert len(frags) == 0
+    assert list(frags.columns) == [
+        "frag_key", "doc_id", "page", "frag_ord", "x0", "y0", "x1", "y1", "text",
+    ]

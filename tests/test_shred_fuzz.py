@@ -3,7 +3,9 @@
 shredder input path (the kernel's raw_arrays bridge, then shred_fast)
 must agree on randomized field maps, including shapes the generator never
 produces: missing header keys, line holes (prefix termination), garbage
-numbers, commas/spaces, zero values, quote sanitization."""
+numbers, commas/spaces, zero values, quote sanitization. Error rows are
+compared as (code, severity) sequences, so their emission order is checked
+too."""
 
 import random
 
@@ -61,7 +63,7 @@ def test_differential_fuzz_python_oracle_vs_spark(spark):
         r = got[doc_id]
         ctx = (doc_id, fields)
         assert len(r.line_items) == exp["n_lines"], ctx
-        assert len(r.errors) == exp["n_errors"], ctx
+        assert [(e.code, e.severity) for e in r.errors] == exp["errors"], ctx
         assert r.is_valid == exp["is_valid"], ctx
         assert r.document_number == exp["document_number"], ctx
         assert r.account == exp["account"], ctx

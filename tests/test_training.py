@@ -48,6 +48,16 @@ def test_missing_header_label_is_named(missing):
         train_format_config(examples)
 
 
+@pytest.mark.parametrize(
+    "words", [lambda w: w.iloc[0:0], lambda w: pd.DataFrame()], ids=["no_rows", "no_columns"]
+)
+def test_example_without_words_is_named(words):
+    examples = generator_examples("abc", n=3)
+    examples[1]["words"] = words(pd.DataFrame(examples[1]["words"]))
+    with pytest.raises(ValueError, match="example 1 has no OCR words"):
+        train_format_config(examples)
+
+
 def test_shape_regex_generalization():
     assert _shape_regex(["22/07/2020", "01/12/1999"]) == r"^\d{2}/\d{2}/\d{4}$"
     assert _shape_regex(["OXOUHJ", "ABCDEF"]) == "^[A-Z]{6}$"
