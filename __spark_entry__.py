@@ -6488,12 +6488,12 @@ def _oracle_sql_literals() -> dict[str, str]:
                       + (80 // n_lines) * n_lines_ok AS BIGINT) AS score
           FROM orders JOIN actual ON o_orderkey = l_orderkey
         """
-    qstats = f"""
+    qstats = rf"""
       SELECT CAST(doc_id AS VARCHAR) AS doc_id,
              CASE WHEN len(trim(text))=0 THEN 0 ELSE len({toks}) END AS n_tok,
              len(list_filter(string_split_regex(trim(lower(text)), '\s+'), x -> list_contains({_STOPWORDS_SQL}, x)))
                * 1.0 / greatest(len({toks}), 1) AS stop_ratio,
-             (length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))) * 1.0
+             (length(text) - length(regexp_replace(text, '[^\w\s]', '', 'g'))) * 1.0
                / greatest(length(text),1) AS punct_ratio
       FROM documents
     """
@@ -8433,7 +8433,7 @@ def _oracle_sql_literals() -> dict[str, str]:
                  md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS fingerprint
           FROM documents
         """,
-        "q16_simhash": """
+        "q16_simhash": r"""
           WITH tok AS (
             SELECT CAST(doc_id AS VARCHAR) AS id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
             FROM documents),
@@ -10105,7 +10105,7 @@ def _oracle_sql_literals() -> dict[str, str]:
             FROM cand c JOIN va x ON x.vec_id = c.id_a JOIN va y ON y.vec_id = c.id_b)
           WHERE cosine >= 0.2
         """)(_q30_planes()),
-        "q31_simhash_pairs": """
+        "q31_simhash_pairs": r"""
           WITH tok AS (
             SELECT CAST(doc_id AS VARCHAR) AS id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
             FROM documents),
@@ -10238,7 +10238,7 @@ def _oracle_sql_literals() -> dict[str, str]:
         # q41: the packing algorithm replayed exactly — per md5-shard,
         # ascending doc_id, greedy next-fit at budget 512 — as a
         # recursive CTE stepping row_number-by-row_number within shards.
-        "q41_sequence_packing": """
+        "q41_sequence_packing": r"""
           WITH RECURSIVE docs AS (
             SELECT CAST(doc_id AS VARCHAR) AS id,
                    CASE WHEN len(trim(text)) = 0 THEN 0
@@ -10310,7 +10310,7 @@ def _oracle_sql_literals() -> dict[str, str]:
         # q45: identical n-gram construction (adjacent token windows),
         # per-(doc, gram) counts, per-doc top/dup occupancy; docs too
         # short for n-grams come back as 0.0 via the left join.
-        "q45_repetition": """
+        "q45_repetition": r"""
           WITH tok AS (
             SELECT CAST(doc_id AS VARCHAR) AS doc_id,
                    string_split_regex(trim(text), '\s+') AS t
@@ -10426,7 +10426,7 @@ def _oracle_sql_literals() -> dict[str, str]:
         # q49: same bigram construction as q45's g2 CTE; per-(doc, gram)
         # pre-aggregate makes n_docs a plain count; ties at the k-th
         # boundary broken deterministically by gram.
-        "q49_top_ngrams": """
+        "q49_top_ngrams": r"""
           WITH tok AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS w FROM documents),
           g AS (
             SELECT doc_id, unnest([w[i] || ' ' || w[i+1]
@@ -10881,7 +10881,7 @@ def _oracle_sql_literals() -> dict[str, str]:
         # the verify pass under different partitionings, but the exact
         # integer threshold (count*1e6 >= total*ppm) makes the ANSWER
         # partitioning-invariant — the hash match is the proof.
-        "q67_heavy_hitters": """
+        "q67_heavy_hitters": r"""
           WITH tok AS (
             SELECT unnest(string_split_regex(trim(text), '\s+')) AS token FROM documents),
           tok2 AS (SELECT token FROM tok WHERE token <> ''),

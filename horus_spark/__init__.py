@@ -16,7 +16,9 @@ Package map:
   operators/layout.py    L1 word->line clustering, L2 table grid inference
   operators/fields.py    L3/L4 anchor-based key-value field extraction
   operators/shred.py     P1-P9 document shredder: fields -> raw-column
-                         bridge (Arrow) + pure-expression shred_fast
+                         bridge, then a vectorized Arrow shred inside the
+                         recognize kernel (shred_arrays) + the JVM's three
+                         leading header reads and output projection
   operators/boilerplate.py  L5 text-density boilerplate scoring
   operators/html.py      HTML main-content extraction: flat text-density
                          block screen (pure expressions) + DOM-tree

@@ -8,15 +8,21 @@ shuffle per input table:
     ocr_words ── groupBy(doc_id).agg(collect_list(struct(word cols)))
                       (hash)          │  one shuffle; map-side partial agg
                                       └─ mapInArrow(_extract_iter_arrow_grouped)
-                                               │ L1-L4 layout + fields kernel
-                                               │ (doc_id, header_raw,
-                                               │  lines_raw, field_line_ids)
-    documents ───────── join(doc_id) ──────────┤
+                                               │ L1-L4 layout + fields kernel,
+                                               │ then shred_batch (Arrow): typed
+                                               │ header, line_items[], errors
+                                               │ from Inv on, their counts
+    documents ───────── join(doc_id) ──────────┤ (no OCR rows: the shred of an
+                                               │  empty fields map, a literal)
     registry (opt) ──── broadcast join(fmt) ───┤  model_id / model_version
                                                ▼
-            shred_fast (pure expressions) + classify spans (pure expressions)
+     finish (JVM: OrderNO/OrderDate/TaxDate reads, tax_period, counts)
+                  + thumbprint + classify spans (pure expressions)
                                                ▼
        extracted(doc header, line_items[], errors[], spans_out[]) -> sinks
+
+A staged recognize() output (`fields_df`, FIELDS_SCHEMA) is shredded by one
+mapInArrow of the same shred_batch instead of the kernel.
 
 Boundary shape: each document crosses the JVM<->Python Arrow boundary as ONE
 row (doc_id, words:array<struct>) — doc_id (42% of the IPC bytes when it
@@ -39,32 +45,54 @@ import functools
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from horus_spark.config import format_of_doc_id
+from horus_spark.engines import HORUS_ENGINE, get_engine
 from horus_spark.operators.boilerplate import is_boilerplate_text
 from horus_spark.operators.fields import extract_fields_arrays
 from horus_spark.operators.layout import cluster_lines, fragments_view, infer_grid_arrays
 from horus_spark.operators.shred import (
-    _HEADER_T,
-    _LINES_T,
-    _arrow_raw_types,
+    HEADER_RAW,
+    LINE_RAW,
+    finish,
     raw_arrays,
-    shred_fast,
+    shred_batch,
+    shred_raw,
+    shredded_schema,
+    unmatched_defaults,
 )
 
-FIELDS_SCHEMA = (
-    f"doc_id string, header_raw {_HEADER_T}, lines_raw {_LINES_T}, "
-    "field_line_ids array<int>, recognizer_status string, "
-    "recognizer_errors array<string>, time_to_shred_ms double"
+# recognize()'s output: one row per document with OCR words
+FIELDS_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType()),
+        StructField("header_raw", HEADER_RAW),
+        StructField("lines_raw", ArrayType(LINE_RAW)),
+        StructField("field_line_ids", ArrayType(IntegerType())),
+        StructField("recognizer_status", StringType()),
+        StructField("recognizer_errors", ArrayType(StringType())),
+        StructField("time_to_shred_ms", DoubleType()),
+    ]
 )
+# run_extraction's kernel output: the same rows, shredded in the kernel
+SHREDDED_SCHEMA = shredded_schema(FIELDS_SCHEMA)
 
 
 # Skew/robustness guard: a pathological media-heavy document (generator
 # bound is ~250 words; real corpora can carry megaword OCR blobs) is
 # truncated to its first MAX_DOC_WORDS words in reading order inside the
-# kernel — bounding both the per-doc compute and the pandas working set a
-# single doc_id hash key can pin to one partition. The reference bounds
-# documents the same way (50-line cap, content-type whitelist).
+# kernel, and its recognizer_errors say so — bounding both the per-doc
+# compute and the pandas working set a single doc_id hash key can pin to
+# one partition. The reference bounds documents the same way (50-line cap,
+# content-type whitelist).
 MAX_DOC_WORDS = 20000
 
 
@@ -100,8 +128,14 @@ def _extract_core(
         counts = pdf["doc_id"].value_counts()
         heavy = counts[counts > MAX_DOC_WORDS]
     else:
-        heavy = ()
-    if len(heavy):
+        heavy = {}
+    # a truncated document is not silent: it keeps its status but says
+    # how many words it kept, on the recognizer outcome channel
+    truncated = {
+        d: f"Truncated: kept the first {MAX_DOC_WORDS} of {n} OCR words"
+        for d, n in heavy.items()
+    }
+    if truncated:
         pdf = (
             pdf.sort_values(
                 ["doc_id", "page", "line_id", "word_id"], kind="mergesort"
@@ -153,6 +187,8 @@ def _extract_core(
             # WHY it failed is recorded — the reference's RecognizerErrors.
             fields, used = {}, set()
             status = ("failed", [f"{type(exc).__name__}: {exc}"])
+        if doc_id in truncated:
+            status[1].insert(0, truncated[doc_id])
         out_ns.append(_time.perf_counter_ns() - t0)
         out_ids.append(doc_id)
         out_fields.append(fields)
@@ -168,11 +204,13 @@ def _extract_core(
     return out_ids, out_fields, out_flids, out_status, out_ms
 
 
-def _extract_batch_arrow(pdf: pd.DataFrame, configs: dict | None = None):
+def _extract_batch_arrow(pdf: pd.DataFrame, configs: dict | None = None, engine=None):
     """One kernel chunk -> FIELDS_SCHEMA RecordBatch. The fields dicts
     cross to header_raw/lines_raw through the shredder's raw bridge
     (operators.shred.raw_arrays); the other columns straight from the
-    kernel's per-document lists."""
+    kernel's per-document lists. With `engine` (an EngineSpec), the chunk
+    is also shredded here, in the same worker (operators.shred.shred_batch)
+    -> SHREDDED_SCHEMA RecordBatch."""
     import pyarrow as pa
 
     out_ids, out_fields, out_flids, out_status, out_ms = _extract_core(pdf, configs)
@@ -181,7 +219,7 @@ def _extract_batch_arrow(pdf: pd.DataFrame, configs: dict | None = None):
     status_arr = pa.array([s[0] for s in out_status], pa.string())
     rerr_arr = pa.array([s[1] for s in out_status], pa.list_(pa.string()))
     ms_arr = pa.array(out_ms, pa.float64())
-    return pa.RecordBatch.from_arrays(
+    batch = pa.RecordBatch.from_arrays(
         [
             pa.array(out_ids, pa.string()),
             header_arr,
@@ -193,6 +231,7 @@ def _extract_batch_arrow(pdf: pd.DataFrame, configs: dict | None = None):
         ],
         schema=_arrow_fields_schema(),
     )
+    return batch if engine is None else shred_batch(batch, engine)
 
 
 # kernel chunk target: per-batch fixed costs amortize up to ~64k rows;
@@ -205,23 +244,12 @@ _KERNEL_CHUNK_ROWS = 65536
 # serializer spends per column)
 @functools.cache
 def _arrow_fields_schema():
-    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    header_t, line_t = _arrow_raw_types()
-    return pa.schema(
-        [
-            ("doc_id", pa.string()),
-            ("header_raw", header_t),
-            ("lines_raw", pa.list_(line_t)),
-            ("field_line_ids", pa.list_(pa.int32())),
-            ("recognizer_status", pa.string()),
-            ("recognizer_errors", pa.list_(pa.string())),
-            ("time_to_shred_ms", pa.float64()),
-        ]
-    )
+    return to_arrow_schema(FIELDS_SCHEMA)
 
 
-def _extract_iter_arrow_grouped(batches, configs: dict | None = None):
+def _extract_iter_arrow_grouped(batches, configs: dict | None = None, engine=None):
     """mapInArrow kernel over the grouped boundary shape
     (doc_id, words:array<struct<page,line_id,word_id,text,x0,y0,x1,y1>>).
 
@@ -231,7 +259,8 @@ def _extract_iter_arrow_grouped(batches, configs: dict | None = None):
     an object-pointer repeat (pointers to the ~n_docs shared strings, not
     string copies). Chunking walks doc boundaries via the cumulative word
     counts: ~_KERNEL_CHUNK_ROWS-word chunks of whole documents (a doc
-    larger than the target is a chunk of its own)."""
+    larger than the target is a chunk of its own). `engine`:
+    _extract_batch_arrow's."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -268,7 +297,7 @@ def _extract_iter_arrow_grouped(batches, configs: dict | None = None):
     while d < n_docs:
         e = int(np.searchsorted(cum, cum[d] + _KERNEL_CHUNK_ROWS, side="right")) - 1
         e = min(max(e, d + 1), n_docs)  # >=1 doc of progress, <=n_docs
-        yield _extract_batch_arrow(pdf.iloc[cum[d] : cum[e]], configs)
+        yield _extract_batch_arrow(pdf.iloc[cum[d] : cum[e]], configs, engine)
         d = e
 
 
@@ -362,13 +391,18 @@ def recognize(
     (the doc_id hash of _grouped_words), then one mapInArrow kernel.
     `configs` (fmt -> extraction config, from the model registry) rides to
     executors in the kernel closure; `heavy_words` is _grouped_words'."""
+    return _kernel(ocr_words, configs, heavy_words, None)
+
+
+def _kernel(ocr_words: DataFrame, configs, heavy_words, engine) -> DataFrame:
+    """recognize()'s plan; with `engine` (an EngineSpec) the same single
+    mapInArrow also shreds each chunk -> SHREDDED_SCHEMA rows."""
 
     def kernel(batches):
-        yield from _extract_iter_arrow_grouped(batches, configs)
+        yield from _extract_iter_arrow_grouped(batches, configs, engine)
 
-    return _grouped_words(ocr_words, heavy_words).mapInArrow(
-        kernel, schema=FIELDS_SCHEMA
-    )
+    schema = FIELDS_SCHEMA if engine is None else SHREDDED_SCHEMA
+    return _grouped_words(ocr_words, heavy_words).mapInArrow(kernel, schema=schema)
 
 
 def classify_spans_expr() -> "F.Column":
@@ -438,12 +472,15 @@ def run_extraction(
 ) -> DataFrame:
     """Full pipeline -> EXTRACTED_DOCUMENT rows (header + line_items +
     errors + spans_out). Two planned shuffles total (one per input table):
-    recognize's doc_id groupBy and the documents join; everything after
-    the join is map-side whole-stage codegen.
+    recognize's doc_id groupBy and the documents join. The kernel shreds
+    each chunk in its own worker (one Python map operator); after the join
+    only finish's three leading header reads, the thumbprint and the span
+    classifier run as expressions.
 
     `fields_df` (optional): a precomputed recognizer output frame
     (FIELDS_SCHEMA, e.g. staged parquet from a previous run) — skips the
-    recognize kernel entirely and re-shreds from it, the analog of the
+    recognize kernel entirely and re-shreds from it with one mapInArrow of
+    operators.shred.shred_batch, the analog of the
     reference re-processing already-recognized documents; `ocr_words` and
     the registry's layout configs are ignored in that case (the registry
     model stamp join still applies).
@@ -470,41 +507,39 @@ def run_extraction(
             "model_id",
             F.col("model_version").cast("string").alias("model_version"),
         )
+    spec = get_engine(engine) if engine is not None else HORUS_ENGINE
     if fields_df is None:
-        fields_df = recognize(ocr_words, configs, heavy_words)
+        shredded = _kernel(ocr_words, configs, heavy_words, spec)
+    else:
+        shredded = shred_raw(fields_df, spec)
     if run_id is None:
         import uuid
 
         run_id = str(uuid.uuid4())  # the reference's UniqueRunIdentifier
-    joined = (
-        documents.join(fields_df, "doc_id", "left")
-        # a NULL header_raw needs no default: each field read on it is
-        # NULL, i.e. missing, as for an empty fields map
-        .withColumn(
-            "lines_raw", F.coalesce(F.col("lines_raw"), F.array().cast(_LINES_T))
-        )
-        # a document the recognizer produced nothing for (no OCR rows at
-        # all) carries an explicit status, like the reference's
-        # RecognizerStatus on a doc the service returned no result for
-        .withColumn(
-            "recognizer_status",
-            F.coalesce(F.col("recognizer_status"), F.lit("notfound")),
-        )
-        .withColumn(
-            "recognizer_errors",
-            F.coalesce(F.col("recognizer_errors"), F.array().cast("array<string>")),
-        )
-        .withColumn(
-            "time_to_shred_ms",
-            F.coalesce(F.col("time_to_shred_ms"), F.lit(0.0)),
-        )
-        .withColumn("thumbprint", thumbprint_expr())
-        .withColumn("spans_out", classify_spans_expr())
-        # run stamps, persisted on the header row exactly like the
-        # reference (HorusSql.cs:244-249); current_timestamp() is
-        # query-constant in Spark, so one job = one shredding timestamp
-        .withColumn("shredding_utc_datetime", F.current_timestamp())
-        .withColumn("unique_run_identifier", F.lit(run_id))
+    joined = documents.join(shredded, "doc_id", "left").withColumns(
+        {
+            # a document the recognizer produced nothing for (no OCR rows
+            # at all) gets the shred of an empty fields map — its NULL
+            # header_raw reads as missing in finish — and an explicit
+            # status, like the reference's RecognizerStatus on a doc the
+            # service returned no result for
+            **{
+                c: F.coalesce(F.col(c), default)
+                for c, default in unmatched_defaults(spec).items()
+            },
+            "recognizer_status": F.coalesce(F.col("recognizer_status"), F.lit("notfound")),
+            "recognizer_errors": F.coalesce(
+                F.col("recognizer_errors"), F.array().cast("array<string>")
+            ),
+            "time_to_shred_ms": F.coalesce(F.col("time_to_shred_ms"), F.lit(0.0)),
+            "thumbprint": thumbprint_expr(),
+            "spans_out": classify_spans_expr(),
+            # run stamps, persisted on the header row exactly like the
+            # reference (HorusSql.cs:244-249); current_timestamp() is
+            # query-constant in Spark, so one job = one shredding timestamp
+            "shredding_utc_datetime": F.current_timestamp(),
+            "unique_run_identifier": F.lit(run_id),
+        }
     )
     if model_dim is not None:
         joined = (
@@ -512,4 +547,4 @@ def run_extraction(
             .join(F.broadcast(model_dim), "__fmt", "left")
             .drop("__fmt")
         )
-    return shred_fast(joined, carry=["spans_out"], engine=engine)
+    return finish(joined, carry=["spans_out"])

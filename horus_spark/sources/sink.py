@@ -826,15 +826,14 @@ def load_documents(
             lambda s: s["v"],
         ).alias("errors")
     )
-    from horus_spark.operators.shred import ERRORS_TYPE, LINE_ITEM_TYPE
-
+    empty = {
+        c: F.array().cast(f"array<{t.simpleString()}>")
+        for c, t in (("line_items", S.LINE_ITEM), ("errors", S.DOC_ERROR))
+    }
     return (
         docs.join(li, "doc_id", "left")
         .join(err, "doc_id", "left")
-        .withColumn(
-            "line_items", F.coalesce(F.col("line_items"), F.array().cast(LINE_ITEM_TYPE))
-        )
-        .withColumn("errors", F.coalesce(F.col("errors"), F.array().cast(ERRORS_TYPE)))
+        .withColumns({c: F.coalesce(F.col(c), e) for c, e in empty.items()})
     )
 
 

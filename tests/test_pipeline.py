@@ -4,6 +4,8 @@ plus shredded-document reconciliation against the expected tables
 (comparator semantics per reference Horus.Inspector/Inspector.cs:292-306:
 decimals at 2dp, dates at day granularity, strings exact)."""
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -214,6 +216,14 @@ def test_heavy_doc_truncated_and_isolated(spark):
     assert len(out["abc-INVOICE-99998.pdf"].recognizer_errors) == 1
     for d in c["documents"]["doc_id"]:
         assert out[d].recognizer_status == "succeeded"
+        assert out[d].recognizer_errors == []
+    # the cut is visible: the heavy doc keeps its status and says how many
+    # of its words the kernel kept
+    heavy_out = out["abc-INVOICE-99999.pdf"]
+    assert heavy_out.recognizer_status == "succeeded"
+    assert heavy_out.recognizer_errors == [
+        f"Truncated: kept the first {P.MAX_DOC_WORDS} of 30000 OCR words"
+    ]
 
 
 @pytest.mark.parametrize("seed,base", [(7, 40000), (77, 50000), (2026, 61000)])
@@ -336,3 +346,68 @@ def test_grouped_kernel_chunking_doc_aligned(spark, monkeypatch):
     ids = [r["doc_id"] for r in tiny_rows]
     assert ids == sorted(grouped.column("doc_id").to_pylist())
     assert len(set(ids)) == 25
+
+
+# higher-order functions whose first argument is a column: `transform(x#1, ...`
+_HOF_ARG = re.compile(
+    r"\b(?:transform|filter|exists|forall|aggregate|reduce|zip_with|array_sort)\((\w+)#"
+)
+_PY_MAP = re.compile(r"^\W*(?:Python)?MapIn(?:Arrow|Pandas)\b", re.M)
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_plan_shreds_in_the_kernel(spark):
+    """The shredder runs inside the Python map operator: the optimized plan
+    of run_extraction has exactly one Python map operator — on the
+    recognize path (the layout kernel shreds its own chunks; a chained
+    second mapInArrow would start a second Python worker per task) and on
+    the staged fields_df path — and no lambda function over the raw lines,
+    the line items or the error tail runs after it."""
+    from horus_spark import pipeline as P
+    from horus_spark import schema as S
+
+    c = corpus_pandas(4)  # materialized: the generator adds no map of its own
+    docs = spark.createDataFrame(c["documents"], S.DOCUMENTS)
+    words = spark.createDataFrame(c["ocr_words"], S.OCR_WORDS)
+    staged = spark.createDataFrame(P.recognize(words).toArrow())
+    for df in (
+        run_extraction(docs, words),
+        run_extraction(docs, None, fields_df=staged, engine="samplecustomer"),
+    ):
+        plan = _optimized_plan(df)
+        maps = list(_PY_MAP.finditer(plan))
+        assert len(maps) == 1, plan
+        after = plan[: maps[0].start()]  # the operators above the kernel
+        assert "lines_raw" not in after, after
+        read = set(_HOF_ARG.findall(after))
+        assert read and not read & {"lines_raw", "line_items", "errors_tail"}, read
+
+
+@pytest.mark.parametrize("engine", ["horus", "samplecustomer"])
+def test_kernel_shred_matches_staged_reshred(spark, engine):
+    """Shredding inside the recognize kernel and re-shredding its staged
+    output (one mapInArrow of the same function) give the same rows, every
+    column but the run stamps, including a document with no OCR rows."""
+    from horus_spark import pipeline as P
+
+    c = corpus_spark(spark, 30, partitions=3)
+    docs = c["documents"].unionByName(
+        spark.createDataFrame([("abc-INVOICE-99999.pdf", [])], c["documents"].schema)
+    )
+    words = c["ocr_words"]
+    staged = spark.createDataFrame(P.recognize(words).toArrow())
+
+    def rows(df):
+        df = df.drop("shredding_utc_datetime", "unique_run_identifier", "time_to_shred_ms")
+        return sorted((r.asDict(recursive=True) for r in df.collect()), key=lambda r: r["doc_id"])
+
+    direct = rows(run_extraction(docs, words, engine=engine))
+    restaged = rows(run_extraction(docs, None, fields_df=staged, engine=engine))
+    assert len(direct) == 31
+    assert direct == restaged
+    unmatched = next(r for r in direct if r["doc_id"] == "abc-INVOICE-99999.pdf")
+    assert unmatched["recognizer_status"] == "notfound"
+    assert len(unmatched["errors"]) == (10 if engine == "horus" else 9)
