@@ -51,10 +51,12 @@ ENGINES: dict[str, EngineSpec] = {
 }
 
 
-def get_engine(name: str | EngineSpec) -> EngineSpec:
+def get_engine(name: str | EngineSpec | None) -> EngineSpec:
     """EngineFactory.GetEngine analog — dict lookup instead of reflection;
     unknown names raise like the reference's 'Specified Engine does not
-    exist' (EngineFactory.cs:22)."""
+    exist' (EngineFactory.cs:22). None selects HORUS_ENGINE."""
+    if name is None:
+        return HORUS_ENGINE
     if isinstance(name, EngineSpec):
         return name
     try:

@@ -87,7 +87,7 @@ from pyspark.sql.types import (
 from horus_spark import constants as C
 from horus_spark import errors as E
 from horus_spark import schema as S
-from horus_spark.engines import HORUS_ENGINE, get_engine
+from horus_spark.engines import get_engine
 
 # GetNumber's accepted shape after U+0020 stripping (thousands commas are
 # dropped before the parse), with the one final line terminator Java's `$`
@@ -405,7 +405,7 @@ def shred_arrays(header_raw, lines_raw, engine=None) -> dict:
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    engine = get_engine(engine) if engine is not None else HORUS_ENGINE
+    engine = get_engine(engine)
     unread = _unread_columns(engine)
     key_ids = _key_ids()
     n = len(header_raw)
@@ -479,7 +479,7 @@ def shred_batch(batch, engine=None):
 def shred_raw(df: DataFrame, engine=None) -> DataFrame:
     """A raw frame (doc_id, header_raw, lines_raw, ...) -> the shredded
     kernel columns, through ONE mapInArrow of shred_batch."""
-    engine = get_engine(engine) if engine is not None else HORUS_ENGINE
+    engine = get_engine(engine)
 
     def shred(batches):
         for b in batches:
@@ -631,7 +631,7 @@ def unmatched_defaults(engine=None) -> dict[str, Column]:
     OCR rows): the shred of an all-NULL raw row, computed once on the
     driver by shred_arrays. Columns whose value is NULL there are left
     out."""
-    engine = get_engine(engine) if engine is not None else HORUS_ENGINE
+    engine = get_engine(engine)
     values = _unmatched_values(engine)
     return {
         f.name: F.expr(_sql_literal(values[f.name], f.dataType))

@@ -55,7 +55,7 @@ from pyspark.sql.types import (
 )
 
 from horus_spark.config import format_of_doc_id
-from horus_spark.engines import HORUS_ENGINE, get_engine
+from horus_spark.engines import get_engine
 from horus_spark.operators.boilerplate import is_boilerplate_text
 from horus_spark.operators.fields import extract_fields_arrays
 from horus_spark.operators.layout import cluster_lines, fragments_view, infer_grid_arrays
@@ -507,7 +507,7 @@ def run_extraction(
             "model_id",
             F.col("model_version").cast("string").alias("model_version"),
         )
-    spec = get_engine(engine) if engine is not None else HORUS_ENGINE
+    spec = get_engine(engine)
     if fields_df is None:
         shredded = _kernel(ocr_words, configs, heavy_words, spec)
     else:

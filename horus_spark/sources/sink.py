@@ -32,6 +32,7 @@ import os
 import shutil
 import threading
 import time
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -239,9 +240,7 @@ def write_documents_versioned(
     else:
         manifest = this_upload
     mdir = _version_manifest_dir(vdir, batch_id)
-    tmp_mdir = os.path.join(vdir, "_version_base", f"_tmp_upto_{batch_id:06d}")
-    if os.path.exists(tmp_mdir):
-        shutil.rmtree(tmp_mdir)
+    tmp_mdir = _stage(mdir)
     manifest.coalesce(1).write.mode("overwrite").parquet(tmp_mdir)
     if os.path.exists(mdir):
         shutil.rmtree(mdir)
@@ -410,17 +409,16 @@ def run_checkpointed(
         d = docs_c.filter(F.col("__chunk") == chunk).drop("__chunk")
         w = words_c.filter(F.col("__chunk") == chunk).drop("__chunk")
         extracted = run_extraction(d, w, run_id=run_id)
-        chunk_dir = os.path.join(out_dir, f"chunk={chunk:04d}")
-        tmp_dir = os.path.join(out_dir, f"_tmp_chunk_{chunk:04d}")
+        name = f"chunk={chunk:04d}"
+        chunk_dir = os.path.join(out_dir, name)
         if os.path.exists(chunk_dir):
-            # crashed between manifest commit and marker write: retract
-            # the chunk from the snapshot BEFORE deleting its directory,
-            # so concurrent readers never hold a manifest pointing at a
+            # crashed between promote and marker write: retract the chunk
+            # from the snapshot BEFORE deleting its directory, so
+            # concurrent readers never hold a manifest pointing at a
             # removed path (they fall back to the previous snapshot)
-            _retract_from_table_manifest(out_dir, f"chunk={chunk:04d}")
-        for stale in (tmp_dir, chunk_dir):  # leftovers from a crashed run
-            if os.path.exists(stale):
-                shutil.rmtree(stale)
+            _retract_from_table_manifest(out_dir, name)
+            shutil.rmtree(chunk_dir)
+        tmp_dir = _stage(chunk_dir)
         write_extracted(extracted, tmp_dir, mode="overwrite")
         wall_ms = int((time.perf_counter() - t0) * 1000)
         # metrics/lineage derive from the written wide table (column-pruned
@@ -446,7 +444,7 @@ def run_checkpointed(
         # snapshot commit: the chunk becomes reader-visible only now —
         # read_output reads the manifest, so a crash between the rename
         # above and this line leaves readers on the previous snapshot
-        _update_table_manifest(out_dir, f"chunk={chunk:04d}", run_id)
+        _update_table_manifest(out_dir, name, run_id)
         # marker LAST: a crash before this point leaves the chunk incomplete
         # and the resume overwrites it
         with open(marker, "w") as fh:
@@ -477,8 +475,6 @@ def _commit_table_manifest(out_dir: str, mutate, run_id: str | None = None) -> d
     and totally ordered; the `_table_manifest.json` pointer is only a
     cache, published after the claim — readers prefer the max archived
     snapshot, so a stale/crashed pointer can never roll a reader back."""
-    snap_dir = os.path.join(out_dir, "_snapshots")
-    os.makedirs(snap_dir, exist_ok=True)
     for attempt in range(1000):
         cur = _read_table_manifest(out_dir) or {"chunks": [], "snapshot": 0}
         new = mutate({**cur, "chunks": list(cur.get("chunks", []))})
@@ -487,7 +483,8 @@ def _commit_table_manifest(out_dir: str, mutate, run_id: str | None = None) -> d
         new["snapshot"] = int(cur.get("snapshot", 0)) + 1
         if run_id is not None:
             new["run_id"] = run_id
-        snap = os.path.join(snap_dir, f"snapshot_{new['snapshot']:06d}.json")
+        snap = _snapshot_path(out_dir, new["snapshot"])
+        os.makedirs(os.path.dirname(snap), exist_ok=True)
         tmp = f"{snap}.tmp.{os.getpid()}.{threading.get_ident()}"
         with open(tmp, "w") as fh:
             json.dump(new, fh)
@@ -505,6 +502,45 @@ def _commit_table_manifest(out_dir: str, mutate, run_id: str | None = None) -> d
         os.replace(ptmp, os.path.join(out_dir, _TABLE_MANIFEST))
         return new
     raise RuntimeError(f"manifest commit contention in {out_dir}: 1000 CAS retries")
+
+
+def _snapshot_path(out_dir: str, snapshot: int) -> str:
+    return os.path.join(out_dir, "_snapshots", f"snapshot_{int(snapshot):06d}.json")
+
+
+def _stage(final_dir: str) -> str:
+    """Private staging directory `_tmp_<name>` beside `final_dir`, which
+    the writer fills and then promotes with ONE os.rename; a crashed
+    writer's leftover of the same name is removed first."""
+    parent, name = os.path.split(final_dir)
+    tmp_dir = os.path.join(parent, "_tmp_" + name.replace("=", "_"))
+    if os.path.exists(tmp_dir):
+        shutil.rmtree(tmp_dir)
+    return tmp_dir
+
+
+def _fresh_chunk_name(op: str, base_snap: int) -> str:
+    """A chunk directory name no other writer can take: two writers at
+    one snapshot must not share a staging directory, or one's leftover
+    cleanup deletes the other's in-flight tables."""
+    return f"chunk={op}-{base_snap:06d}-{uuid.uuid4().hex}"
+
+
+def _table_paths(out_dir: str, chunks, table: str) -> list[str]:
+    """`table`'s directory in each of `chunks` that holds it."""
+    return [
+        p for c in chunks if os.path.isdir(p := os.path.join(out_dir, c, table))
+    ]
+
+
+def _chunk_tables(out_dir: str, chunks) -> set[str]:
+    """Every table any of `chunks` holds."""
+    return {
+        t
+        for c in chunks
+        for t in os.listdir(os.path.join(out_dir, c))
+        if os.path.isdir(os.path.join(out_dir, c, t))
+    }
 
 
 def _retract_from_table_manifest(out_dir: str, chunk_dirname: str) -> None:
@@ -529,14 +565,12 @@ def _read_table_manifest(out_dir: str) -> dict | None:
             m = json.load(fh)
     snaps = list_snapshots(out_dir)
     if snaps and (m is None or int(m.get("snapshot", 0)) < snaps[-1]):
-        with open(
-            os.path.join(out_dir, "_snapshots", f"snapshot_{snaps[-1]:06d}.json")
-        ) as fh:
+        with open(_snapshot_path(out_dir, snaps[-1])) as fh:
             m = json.load(fh)
     return m
 
 
-def _update_table_manifest(out_dir: str, chunk_dirname: str, run_id: str) -> None:
+def _update_table_manifest(out_dir: str, chunk_dirname: str, run_id: str) -> dict:
     """Append a committed chunk dir to the snapshot manifest via the CAS
     commit — a reader always sees either the previous or the next
     complete snapshot, and a concurrent writer's chunks survive the
@@ -549,7 +583,7 @@ def _update_table_manifest(out_dir: str, chunk_dirname: str, run_id: str) -> Non
             m["chunks"] = sorted([*m["chunks"], chunk_dirname])
         return m
 
-    _commit_table_manifest(out_dir, mutate, run_id=run_id)
+    return _commit_table_manifest(out_dir, mutate, run_id=run_id)
 
 
 def append_chunk(
@@ -570,17 +604,15 @@ def append_chunk(
     Returns {"chunk": dirname, "snapshot": id}."""
     if not tables:
         raise ValueError("tables must be non-empty")
-    m = _read_table_manifest(out_dir) or {"chunks": [], "snapshot": 0}
-    name = _fresh_chunk_name(out_dir, "append", int(m.get("snapshot", 0)))
-    tmp_dir = os.path.join(out_dir, f"_tmp_{name.replace('=', '_')}")
-    if os.path.exists(tmp_dir):
-        shutil.rmtree(tmp_dir)
+    m = _read_table_manifest(out_dir) or {}
+    name = _fresh_chunk_name("append", int(m.get("snapshot", 0)))
+    chunk_dir = os.path.join(out_dir, name)
+    tmp_dir = _stage(chunk_dir)
     for table, df in tables.items():
         df.write.mode("overwrite").parquet(os.path.join(tmp_dir, table))
-    os.rename(tmp_dir, os.path.join(out_dir, name))
-    _update_table_manifest(out_dir, name, run_id)
-    committed = _read_table_manifest(out_dir) or {}
-    return {"chunk": name, "snapshot": int(committed.get("snapshot", 0))}
+    os.rename(tmp_dir, chunk_dir)
+    committed = _update_table_manifest(out_dir, name, run_id)
+    return {"chunk": name, "snapshot": int(committed["snapshot"])}
 
 
 def list_snapshots(out_dir: str) -> list[int]:
@@ -623,51 +655,33 @@ def read_output(
     chunk; a merge/delete chunk carries only the tables its members
     held), so chunks without this table are skipped; a table no chunk
     holds is a loud error."""
-
-    def _table_paths(chunk_list: list[str], what: str) -> list[str]:
-        paths = [os.path.join(out_dir, c, table) for c in chunk_list]
-        found = [p for p in paths if os.path.isdir(p)]
-        if not found:
+    if snapshot is not None:
+        chunks, what = _snapshot_chunks(out_dir, snapshot), f"snapshot {snapshot}"
+        if not chunks:
+            raise ValueError(f"snapshot {snapshot} is empty")
+    else:
+        # chunk dirs on disk but not in the manifest are retracted or
+        # promoted-but-uncommitted: exactly what the manifest commit hides
+        m = _read_table_manifest(out_dir) or {"chunks": []}
+        chunks, what = m["chunks"], "the current snapshot"
+        if not chunks:
             raise ValueError(
-                f"table {table!r} exists in no chunk of {what} "
-                f"(chunks: {chunk_list})"
+                f"{out_dir} has no committed chunks at snapshot {m.get('snapshot', 0)}"
             )
-        return found
-
+    paths = _table_paths(out_dir, chunks, table)
+    if not paths:
+        raise ValueError(
+            f"table {table!r} exists in no chunk of {what} (chunks: {chunks})"
+        )
     reader = spark.read.option("basePath", out_dir)
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
-
-    if snapshot is not None:
-        path = os.path.join(
-            out_dir, "_snapshots", f"snapshot_{int(snapshot):06d}.json"
-        )
-        if not os.path.exists(path):
-            raise ValueError(
-                f"snapshot {snapshot} not found; available: {list_snapshots(out_dir)}"
-            )
-        with open(path) as fh:
-            m = json.load(fh)
-        if not m["chunks"]:
-            raise ValueError(f"snapshot {snapshot} is empty")
-        return reader.parquet(
-            *_table_paths(m["chunks"], f"snapshot {snapshot}")
-        )
-    # chunk dirs on disk but not in the manifest are retracted or
-    # promoted-but-uncommitted: exactly what the manifest commit hides
-    m = _read_table_manifest(out_dir) or {"chunks": []}
-    if not m["chunks"]:
-        raise ValueError(
-            f"{out_dir} has no committed chunks at snapshot {m.get('snapshot', 0)}"
-        )
-    return reader.parquet(*_table_paths(m["chunks"], "the current snapshot"))
+    return reader.parquet(*paths)
 
 
 def _snapshot_chunks(out_dir: str, snapshot: int) -> list[str]:
     """Chunk list archived by snapshot N (loud error if expired)."""
-    path = os.path.join(
-        out_dir, "_snapshots", f"snapshot_{int(snapshot):06d}.json"
-    )
+    path = _snapshot_path(out_dir, snapshot)
     if not os.path.exists(path):
         raise ValueError(
             f"snapshot {snapshot} not found; available: {list_snapshots(out_dir)}"
@@ -713,11 +727,7 @@ def snapshot_diff(
     new = set(_snapshot_chunks(out_dir, to_snapshot))
 
     def _read_leg(chunks: set) -> DataFrame | None:
-        paths = [
-            p
-            for c in sorted(chunks)
-            if os.path.isdir(p := os.path.join(out_dir, c, table))
-        ]
+        paths = _table_paths(out_dir, sorted(chunks), table)
         if not paths:
             return None
         # no basePath option: the chunk partition column must NOT be
@@ -913,53 +923,25 @@ def compact_chunks(
 
     done = []
     base_snap = int(m.get("snapshot", 0))
-    for gi, group in enumerate(groups):
-        new_name = f"chunk=compact-{base_snap:06d}-{gi:02d}"
-        suffix = 0
-        while os.path.exists(os.path.join(out_dir, new_name)):
-            suffix += 1
-            new_name = f"chunk=compact-{base_snap:06d}-{gi:02d}r{suffix}"
-        tmp_dir = os.path.join(out_dir, f"_tmp_{new_name.replace('=', '_')}")
-        if os.path.exists(tmp_dir):
-            shutil.rmtree(tmp_dir)
+    for group in groups:
+        new_name = _fresh_chunk_name("compact", base_snap)
+        new_dir = os.path.join(out_dir, new_name)
+        tmp_dir = _stage(new_dir)
         # every table present in any member chunk, merged column-for-column
-        tables = sorted(
-            {
-                t
-                for c in group
-                for t in os.listdir(os.path.join(out_dir, c))
-                if os.path.isdir(os.path.join(out_dir, c, t))
-            }
-        )
-        for t in tables:
-            paths = [
-                os.path.join(out_dir, c, t)
-                for c in group
-                if os.path.isdir(os.path.join(out_dir, c, t))
-            ]
+        for t in sorted(_chunk_tables(out_dir, group)):
             # members are < target_bytes each by selection; one output
             # file per table keeps the open-cost win that motivated the
             # compaction (raise for multi-file outputs at bigger targets)
+            paths = _table_paths(out_dir, group, t)
             spark.read.parquet(*paths).coalesce(1).write.mode(
                 "overwrite"
             ).parquet(os.path.join(tmp_dir, t))
-        os.rename(tmp_dir, os.path.join(out_dir, new_name))
-
-        group_set = set(group)
-
-        def mutate(mm: dict) -> dict | None:
-            if not group_set.issubset(set(mm["chunks"])):
-                return None  # a member was retracted under us: abort
-            mm["chunks"] = sorted(
-                [c for c in mm["chunks"] if c not in group_set] + [new_name]
-            )
-            return mm
-
-        committed = _commit_table_manifest(out_dir, mutate)
-        if new_name in committed.get("chunks", []):
-            done.append({"members": group, "new": new_name})
-        else:
-            shutil.rmtree(os.path.join(out_dir, new_name))
+        os.rename(tmp_dir, new_dir)
+        try:
+            _swap_chunks_commit(out_dir, new_name, group, "compaction")
+        except _SwapConflict:
+            continue  # a member was retracted under us: never resurrect it
+        done.append({"members": group, "new": new_name})
     latest = _read_table_manifest(out_dir)
     return {
         "groups": done,
@@ -1283,7 +1265,7 @@ def _bloom_candidate_chunks(
 
 def _probe_affected(
     spark, out_dir: str, table: str, keys: DataFrame, key_cols: list[str],
-    chunks: list[str], base_snap: int,
+    chunks: list[str],
 ) -> tuple[list[str], int, int]:
     """Which baseline chunks hold any of `keys`? Footer-stats pruning
     first (no job), then bloom-sidecar membership pruning where
@@ -1298,13 +1280,7 @@ def _probe_affected(
     candidates = _bloom_candidate_chunks(
         out_dir, table, candidates, key_cols, probe_keys
     )
-    if not candidates:
-        return [], 0, 0
-    paths = [
-        p
-        for p in (os.path.join(out_dir, c, table) for c in candidates)
-        if os.path.isdir(p)
-    ]
+    paths = _table_paths(out_dir, candidates, table)
     if not paths:
         return [], 0, 0
     probe = (
@@ -1329,63 +1305,113 @@ def _probe_affected(
     return affected, matched, n_rows
 
 
-def _fresh_chunk_name(out_dir: str, prefix: str, base_snap: int) -> str:
-    name = f"chunk={prefix}-{base_snap:06d}"
-    suffix = 0
-    while os.path.exists(os.path.join(out_dir, name)):
-        suffix += 1
-        name = f"chunk={prefix}-{base_snap:06d}r{suffix}"
-    return name
+class _SwapConflict(RuntimeError):
+    """A copy-on-write swap lost to a concurrent writer (retryable)."""
 
 
 def _swap_chunks_commit(
-    out_dir: str, new_name: str | None, affected: list[str],
-    baseline: set[str], op: str,
+    out_dir: str, new_name: str, members: list[str], op: str,
+    baseline: set[str] | None = None,
 ) -> dict:
-    """CAS-commit the copy-on-write swap (affected dirs out, new_name
-    in — new_name=None for a pure retraction) with serializable
-    validation: abort if any chunk was appended or retracted since the
-    baseline probe (an appended chunk may carry rows for the touched
-    keys, so the rewrite would not cover it — Iceberg's validation
-    semantics). On conflict the staged dir is removed and a retryable
-    RuntimeError raised; the CAS replay re-validates on every attempt."""
-    affected_set = set(affected)
-    conflict: dict = {"why": None}
+    """CAS-commit a copy-on-write swap: `members` out, the promoted
+    `new_name` in. A member retracted since planning is a conflict;
+    with a `baseline` (merge/delete), so is any chunk appended since
+    the baseline probe — it may carry rows for the touched keys, so
+    the rewrite would not cover it (Iceberg's validation semantics).
+    Compaction passes none: rows appended meanwhile are simply kept.
+    On conflict the promoted dir is removed and a retryable
+    _SwapConflict raised; the CAS replay re-validates on every attempt."""
+    gone = set(members)
+    why: list[str] = []
 
     def mutate(mm: dict) -> dict | None:
-        mm_chunks = set(mm["chunks"])
-        if not affected_set.issubset(mm_chunks):
-            conflict["why"] = (
-                f"affected chunks {sorted(affected_set - mm_chunks)} were "
-                "retracted concurrently"
+        have = set(mm["chunks"])
+        why.clear()
+        if not gone <= have:
+            why.append(f"chunks {sorted(gone - have)} were retracted concurrently")
+        elif baseline is not None and have - baseline:
+            why.append(
+                f"chunks {sorted(have - baseline)} were appended concurrently "
+                f"and may hold {op}-touched keys"
             )
-            return None
-        added = mm_chunks - baseline
-        if added:
-            conflict["why"] = (
-                f"chunks {sorted(added)} were appended concurrently and may "
-                f"hold {op}-touched keys"
-            )
-            return None
-        conflict["why"] = None
-        mm["chunks"] = sorted(
-            [c for c in mm["chunks"] if c not in affected_set]
-            + ([new_name] if new_name else [])
-        )
-        return mm
+        else:
+            mm["chunks"] = sorted((have - gone) | {new_name})
+            return mm
+        return None
 
     committed = _commit_table_manifest(out_dir, mutate)
-    ok = (new_name in committed.get("chunks", [])) if new_name else (
-        conflict["why"] is None
-    )
-    if not ok:
-        if new_name:
-            shutil.rmtree(os.path.join(out_dir, new_name))
-        raise RuntimeError(
-            f"{op} aborted ({conflict['why']}): retry — the fresh probe "
-            "will cover the current snapshot"
+    if why:
+        shutil.rmtree(os.path.join(out_dir, new_name))
+        raise _SwapConflict(
+            f"{op} aborted ({why[0]}): retry — the fresh probe will cover "
+            "the current snapshot"
         )
     return committed
+
+
+def _dml_baseline(
+    spark, out_dir: str, table: str, key_cols: list[str], op: str
+) -> tuple[list[str], int, list[str] | None]:
+    """The snapshot a merge/delete probes and validates against: its
+    chunk list, its id, and `table`'s columns read at it (None when the
+    catalog holds no chunk), with `key_cols` checked against them."""
+    if not key_cols:
+        raise ValueError("key_cols must be non-empty")
+    m = _read_table_manifest(out_dir)
+    if m is None:
+        raise ValueError(
+            f"{out_dir} has no snapshot catalog — {op} requires the manifest "
+            "layout (legacy chunk stores have no snapshot to swap atomically)"
+        )
+    chunks = list(m.get("chunks", []))
+    base_snap = int(m.get("snapshot", 0))
+    if not chunks:
+        return chunks, base_snap, None
+    # every read is pinned to the BASELINE snapshot so the probed chunk
+    # set is exactly `chunks` — the commit-time conflict check compares
+    # against this set, and an unpinned read racing a concurrent append
+    # would probe chunks outside it
+    cols = (
+        read_output(spark, out_dir, table, snapshot=base_snap).drop("chunk").columns
+    )
+    missing = [c for c in key_cols if c not in cols]
+    if missing:
+        raise ValueError(f"key columns {missing} not in table {table}")
+    return chunks, base_snap, cols
+
+
+def _rewrite_chunks(
+    spark, out_dir: str, table: str, op: str, chunks: list[str],
+    base_snap: int, affected: list[str], keys: DataFrame,
+    key_cols: list[str], updates: DataFrame | None = None,
+) -> tuple[str, int]:
+    """The copy-on-write rewrite of merge_upsert and delete_rows:
+    `table`'s rows in the `affected` chunks without `keys`, plus any
+    `updates`, become ONE new chunk; the affected chunks' other tables
+    are carried over by hard link (zero data movement); the chunk is
+    promoted and swapped in against the baseline `chunks`. Returns
+    (new chunk name, committed snapshot id)."""
+    new_name = _fresh_chunk_name(op, base_snap)
+    new_dir = os.path.join(out_dir, new_name)
+    tmp_dir = _stage(new_dir)
+    rows = updates
+    if affected:
+        rows = (
+            spark.read.option("basePath", out_dir)
+            .parquet(*_table_paths(out_dir, affected, table))
+            .drop("chunk")
+            .join(F.broadcast(keys), key_cols, "left_anti")
+        )
+        if updates is not None:
+            rows = rows.select(*updates.columns).unionByName(updates)
+    rows.write.mode("overwrite").parquet(os.path.join(tmp_dir, table))
+    for t in sorted(_chunk_tables(out_dir, affected) - {table}):
+        _carry_table_files(out_dir, affected, t, os.path.join(tmp_dir, t))
+    os.rename(tmp_dir, new_dir)
+    committed = _swap_chunks_commit(
+        out_dir, new_name, affected, op, baseline=set(chunks)
+    )
+    return new_name, int(committed.get("snapshot", 0))
 
 
 def merge_upsert(
@@ -1428,36 +1454,14 @@ def merge_upsert(
     MERGE cardinality check). Returns {"matched": n, "inserted": n,
     "affected": [...], "new": name-or-None, "snapshot": id}.
     """
-    if not key_cols:
-        raise ValueError("key_cols must be non-empty")
-    m = _read_table_manifest(out_dir)
-    if m is None:
+    chunks, base_snap, target_cols = _dml_baseline(
+        spark, out_dir, table, key_cols, "merge_upsert"
+    )
+    if target_cols is not None and sorted(updates.columns) != sorted(target_cols):
         raise ValueError(
-            f"{out_dir} has no snapshot catalog — merge_upsert requires "
-            "the manifest layout (legacy chunk stores have no snapshot "
-            "to swap atomically)"
+            f"updates columns {sorted(updates.columns)} != table "
+            f"columns {sorted(target_cols)}"
         )
-    chunks = list(m.get("chunks", []))
-    base_snap = int(m.get("snapshot", 0))
-    target_cols = None
-    if chunks:
-        # every read below is pinned to the BASELINE snapshot so the
-        # probed chunk set is exactly `chunks` — the commit-time conflict
-        # check compares against this set, and an unpinned read racing a
-        # concurrent append would probe chunks outside it
-        target_cols = (
-            read_output(spark, out_dir, table, snapshot=base_snap)
-            .drop("chunk")
-            .columns
-        )
-        missing = [c for c in key_cols if c not in target_cols]
-        if missing:
-            raise ValueError(f"key columns {missing} not in table {table}")
-        if sorted(updates.columns) != sorted(target_cols):
-            raise ValueError(
-                f"updates columns {sorted(updates.columns)} != table "
-                f"columns {sorted(target_cols)}"
-            )
     dup = (
         updates.groupBy(*key_cols).count().filter(F.col("count") > 1).limit(1).collect()
     )
@@ -1470,7 +1474,7 @@ def merge_upsert(
     if n_updates == 0:
         return {
             "matched": 0, "inserted": 0, "affected": [], "new": None,
-            "snapshot": int(m.get("snapshot", 0)),
+            "snapshot": base_snap,
         }
 
     keys = updates.select(*key_cols)
@@ -1478,47 +1482,18 @@ def merge_upsert(
     matched = 0
     if chunks:
         affected, matched, _ = _probe_affected(
-            spark, out_dir, table, keys, key_cols, chunks, base_snap
+            spark, out_dir, table, keys, key_cols, chunks
         )
-
-    new_name = _fresh_chunk_name(out_dir, "merge", base_snap)
-    tmp_dir = os.path.join(out_dir, f"_tmp_{new_name.replace('=', '_')}")
-    if os.path.exists(tmp_dir):
-        shutil.rmtree(tmp_dir)
-
-    if affected:
-        survivors = (
-            spark.read.option("basePath", out_dir)
-            .parquet(*[os.path.join(out_dir, c, table) for c in affected])
-            .drop("chunk")
-            .join(F.broadcast(keys), key_cols, "left_anti")
-        )
-        merged = survivors.select(*updates.columns).unionByName(updates)
-    else:
-        merged = updates
-    merged.write.mode("overwrite").parquet(os.path.join(tmp_dir, table))
-    # carry the tables this merge does not touch (link, not rewrite)
-    other_tables = sorted(
-        {
-            t
-            for c in affected
-            for t in os.listdir(os.path.join(out_dir, c))
-            if t != table and os.path.isdir(os.path.join(out_dir, c, t))
-        }
-    )
-    for t in other_tables:
-        _carry_table_files(out_dir, affected, t, os.path.join(tmp_dir, t))
-    os.rename(tmp_dir, os.path.join(out_dir, new_name))
-
-    committed = _swap_chunks_commit(
-        out_dir, new_name, affected, set(chunks), "merge"
+    new_name, snap = _rewrite_chunks(
+        spark, out_dir, table, "merge", chunks, base_snap, affected, keys,
+        key_cols, updates,
     )
     return {
         "matched": matched,
         "inserted": int(n_updates - matched),
         "affected": affected,
         "new": new_name,
-        "snapshot": int(committed.get("snapshot", 0)),
+        "snapshot": snap,
     }
 
 
@@ -1548,77 +1523,34 @@ def delete_rows(
     Returns {"matched": distinct keys found, "deleted": rows removed,
     "affected": [...], "new": name-or-None, "snapshot": id}.
     """
-    if not key_cols:
-        raise ValueError("key_cols must be non-empty")
-    m = _read_table_manifest(out_dir)
-    if m is None:
-        raise ValueError(
-            f"{out_dir} has no snapshot catalog — delete_rows requires "
-            "the manifest layout (legacy chunk stores have no snapshot "
-            "to swap atomically)"
-        )
-    chunks = list(m.get("chunks", []))
-    base_snap = int(m.get("snapshot", 0))
-    if chunks:
-        target_cols = (
-            read_output(spark, out_dir, table, snapshot=base_snap)
-            .drop("chunk")
-            .columns
-        )
-        missing = [c for c in key_cols if c not in target_cols]
-        if missing:
-            raise ValueError(f"key columns {missing} not in table {table}")
+    chunks, base_snap, _ = _dml_baseline(
+        spark, out_dir, table, key_cols, "delete_rows"
+    )
     missing = [c for c in key_cols if c not in keys.columns]
     if missing:
         raise ValueError(f"keys frame lacks key columns {missing}")
     kdf = keys.select(*key_cols).distinct()
+    nothing = {
+        "matched": 0, "deleted": 0, "affected": [], "new": None,
+        "snapshot": base_snap,
+    }
     if not chunks or kdf.limit(1).count() == 0:
-        return {
-            "matched": 0, "deleted": 0, "affected": [], "new": None,
-            "snapshot": base_snap,
-        }
-
+        return nothing
     affected, matched, n_rows = _probe_affected(
-        spark, out_dir, table, kdf, key_cols, chunks, base_snap
+        spark, out_dir, table, kdf, key_cols, chunks
     )
     if not affected:
-        return {
-            "matched": 0, "deleted": 0, "affected": [], "new": None,
-            "snapshot": base_snap,
-        }
-
-    new_name = _fresh_chunk_name(out_dir, "delete", base_snap)
-    tmp_dir = os.path.join(out_dir, f"_tmp_{new_name.replace('=', '_')}")
-    if os.path.exists(tmp_dir):
-        shutil.rmtree(tmp_dir)
-    survivors = (
-        spark.read.option("basePath", out_dir)
-        .parquet(*[os.path.join(out_dir, c, table) for c in affected])
-        .drop("chunk")
-        .join(F.broadcast(kdf), key_cols, "left_anti")
-    )
-    survivors.write.mode("overwrite").parquet(os.path.join(tmp_dir, table))
-    other_tables = sorted(
-        {
-            t
-            for c in affected
-            for t in os.listdir(os.path.join(out_dir, c))
-            if t != table and os.path.isdir(os.path.join(out_dir, c, t))
-        }
-    )
-    for t in other_tables:
-        _carry_table_files(out_dir, affected, t, os.path.join(tmp_dir, t))
-    os.rename(tmp_dir, os.path.join(out_dir, new_name))
-
-    committed = _swap_chunks_commit(
-        out_dir, new_name, affected, set(chunks), "delete"
+        return nothing
+    new_name, snap = _rewrite_chunks(
+        spark, out_dir, table, "delete", chunks, base_snap, affected, kdf,
+        key_cols,
     )
     return {
         "matched": matched,
         "deleted": n_rows,
         "affected": affected,
         "new": new_name,
-        "snapshot": int(committed.get("snapshot", 0)),
+        "snapshot": snap,
     }
 
 
@@ -1632,7 +1564,7 @@ def expire_snapshots(out_dir: str, keep_last: int = 2) -> list[int]:
     snaps = list_snapshots(out_dir)
     expired = snaps[:-keep_last]
     for sid in expired:
-        os.unlink(os.path.join(out_dir, "_snapshots", f"snapshot_{sid:06d}.json"))
+        os.unlink(_snapshot_path(out_dir, sid))
     return expired
 
 
@@ -1665,10 +1597,7 @@ def vacuum_chunks(out_dir: str, grace_s: float = 86400.0) -> list[str]:
         )
     referenced: set[str] = set()
     for sid in snaps:
-        with open(
-            os.path.join(out_dir, "_snapshots", f"snapshot_{sid:06d}.json")
-        ) as fh:
-            referenced.update(json.load(fh).get("chunks", []))
+        referenced.update(_snapshot_chunks(out_dir, sid))
     m = _read_table_manifest(out_dir)
     if m:
         referenced.update(m.get("chunks", []))
@@ -1741,12 +1670,12 @@ def catalog_fsck(out_dir: str, grace_s: float = 86400.0) -> dict:
     report["has_catalog"] = bool(snaps)
     referenced: set[str] = set()
     for sid in snaps:
-        name = f"snapshot_{sid:06d}.json"
         try:
-            with open(os.path.join(out_dir, "_snapshots", name)) as fh:
-                referenced.update(json.load(fh).get("chunks", []))
+            referenced.update(_snapshot_chunks(out_dir, sid))
         except Exception:
-            report["corrupt_files"].append(f"_snapshots/{name}")
+            report["corrupt_files"].append(
+                os.path.relpath(_snapshot_path(out_dir, sid), out_dir)
+            )
     # the RAW pointer file, not _read_table_manifest: that helper
     # already self-heals to the max archived snapshot, which is exactly
     # the condition fsck must surface rather than paper over (and it
@@ -1835,19 +1764,11 @@ def read_lookup(
     candidates = _bloom_candidate_chunks(
         out_dir, table, candidates, [key_col], list(values)
     )
-    paths = [
-        p
-        for p in (os.path.join(out_dir, c, table) for c in candidates)
-        if os.path.isdir(p)
-    ]
+    paths = _table_paths(out_dir, candidates, table)
     base = spark.read.option("basePath", out_dir)
     if not paths:
         # provably no chunk holds any key: empty frame, correct schema
-        all_paths = [
-            p
-            for p in (os.path.join(out_dir, c, table) for c in chunks)
-            if os.path.isdir(p)
-        ]
+        all_paths = _table_paths(out_dir, chunks, table)
         if not all_paths:
             raise ValueError(f"table {table} absent from every chunk")
         return (

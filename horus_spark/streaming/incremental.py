@@ -56,7 +56,6 @@ def stream_extraction(
     from horus_spark.sources.sink import (
         get_persistence_engine,
         write_documents_versioned,
-        write_extracted,
     )
 
     get_persistence_engine(sink)  # fail fast on unknown engines
@@ -75,12 +74,6 @@ def stream_extraction(
         )
         if sink == "versioned":
             write_documents_versioned(extracted, out_dir, batch_id=batch_id)
-        elif sink == "tables":
-            write_extracted(
-                extracted,
-                os.path.join(out_dir, f"batch={batch_id:06d}"),
-                mode="overwrite",
-            )
         else:
             get_persistence_engine(sink)(
                 extracted, os.path.join(out_dir, f"batch={batch_id:06d}")

@@ -74,35 +74,47 @@ def test_compaction_is_idempotent_noop_when_nothing_small(spark, checkpointed_ou
     assert _read_table_manifest(out)["snapshot"] == snap
 
 
-def test_compaction_aborts_on_retracted_member(spark, tmp_path):
+def test_compaction_aborts_on_retracted_member(spark, tmp_path, monkeypatch):
+    """A member retracted between the compaction's plan and its snapshot
+    commit aborts that group: the promoted compact dir is removed and
+    the retracted chunk is not resurrected. The retraction is injected
+    by wrapping the commit, as test_merge_aborts_on_concurrent_append
+    does for a racing append."""
     from horus_spark.fixtures.generator import corpus_spark
-    from horus_spark.sources.sink import (
-        _read_table_manifest,
-        _retract_from_table_manifest,
-        compact_chunks,
-        run_checkpointed,
-    )
+    from horus_spark.sources import sink
 
     out = str(tmp_path / "o")
     c = corpus_spark(spark, 40, partitions=4)
-    run_checkpointed(c["documents"], c["ocr_words"], out, n_chunks=3, run_id="runR")
-    # simulate a racing writer retracting one member AFTER planning would
-    # have seen it: retract first, then compact — the group includes the
-    # still-listed chunks only, so instead drive the abort path directly
-    # by retracting a chunk the plan captured. compact_chunks re-reads the
-    # manifest inside the CAS, so retract between plan and commit is
-    # equivalent to retract-before for the abort check; emulate by
-    # monkey-patching the rewrite step is overkill — assert the public
-    # contract: compaction after a retraction never resurrects the chunk.
-    m0 = _read_table_manifest(out)
+    sink.run_checkpointed(
+        c["documents"], c["ocr_words"], out, n_chunks=3, run_id="runR"
+    )
+    m0 = sink._read_table_manifest(out)
     victim = m0["chunks"][0]
-    _retract_from_table_manifest(out, victim)
-    compact_chunks(spark, out, target_bytes=1 << 30)
-    m1 = _read_table_manifest(out)
+    remaining = sorted(
+        r["doc_id"]
+        for r in spark.read.parquet(
+            *[os.path.join(out, c, "documents_out") for c in m0["chunks"][1:]]
+        ).collect()
+    )
+    real_commit = sink._commit_table_manifest
+
+    def retracting_commit(out_dir, mutate, run_id=None):
+        def retract(mm):
+            mm["chunks"] = [c for c in mm["chunks"] if c != victim]
+            return mm
+
+        real_commit(out_dir, retract)
+        monkeypatch.setattr(sink, "_commit_table_manifest", real_commit)
+        return real_commit(out_dir, mutate, run_id=run_id)
+
+    monkeypatch.setattr(sink, "_commit_table_manifest", retracting_commit)
+    res = sink.compact_chunks(spark, out, target_bytes=1 << 30)
+    assert res["groups"] == []
+    assert not [d for d in os.listdir(out) if d.startswith("chunk=compact-")]
+    m1 = sink._read_table_manifest(out)
     assert victim not in m1["chunks"]
-    assert all(victim not in g for g in (m1["chunks"],))
-    ids = _doc_ids(spark, out)
-    assert len(ids) > 0  # remaining chunks compacted and readable
+    assert m1["chunks"] == m0["chunks"][1:]
+    assert _doc_ids(spark, out) == remaining
 
 
 def test_expire_and_vacuum_reclaim_old_chunk_dirs(spark, tmp_path):

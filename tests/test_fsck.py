@@ -4,6 +4,7 @@ import json
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from horus_spark.sources.sink import append_chunk, catalog_fsck
@@ -91,3 +92,40 @@ def test_corrupt_catalog_reported_not_raised(spark, tmp_path):
     assert "_snapshots/snapshot_000001.json" in r2["corrupt_files"]
     assert 1 not in r2["snapshot_gaps"]
     assert r2["orphan_chunks"] == []  # never slander live data
+
+
+@pytest.mark.parametrize(
+    "writer", ["append_chunk", "merge_upsert", "delete_rows", "compact_chunks"]
+)
+def test_crash_between_promote_and_commit(spark, tmp_path, monkeypatch, writer):
+    """Every chunk writer promotes its chunk dir before the snapshot
+    commit. A crash in between leaves readers on the previous snapshot
+    and the promoted dir as the one orphan, which vacuum reclaims."""
+    from horus_spark.sources import sink
+
+    out = _store(spark, tmp_path)
+    rows = sorted(r["k"] for r in sink.read_output(spark, out, "t").collect())
+    snap = sink._read_table_manifest(out)["snapshot"]
+    before = set(os.listdir(out))
+
+    def crash(*a, **kw):
+        raise RuntimeError("injected crash before the snapshot commit")
+
+    monkeypatch.setattr(sink, "_commit_table_manifest", crash)
+    keys = spark.createDataFrame([(1,), (100,)], "k long")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        if writer == "append_chunk":
+            sink.append_chunk(out, {"t": keys})
+        elif writer == "compact_chunks":
+            sink.compact_chunks(spark, out, target_bytes=1 << 30)
+        else:
+            getattr(sink, writer)(spark, out, "t", keys, ["k"])
+    monkeypatch.undo()
+
+    promoted = sorted(set(os.listdir(out)) - before)
+    assert len(promoted) == 1 and promoted[0].startswith("chunk=")
+    assert sorted(r["k"] for r in sink.read_output(spark, out, "t").collect()) == rows
+    assert sink._read_table_manifest(out)["snapshot"] == snap
+    assert catalog_fsck(out, grace_s=0)["orphan_chunks"] == promoted
+    assert sink.vacuum_chunks(out, grace_s=0) == promoted
+    assert catalog_fsck(out, grace_s=0)["ok"]

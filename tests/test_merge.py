@@ -221,6 +221,40 @@ def test_merge_aborts_on_concurrent_append(spark, merge_store, monkeypatch):
     assert [r["account"] for r in rows] == ["MERGED"]
 
 
+def test_interleaved_appends_both_survive(spark, tmp_path):
+    """Two appends at one snapshot must not share a staging directory:
+    a second append that runs to completion between the first one's two
+    table writes used to delete the first one's staged table and then
+    make its promote fail with "Directory not empty". The interleaving
+    is driven by a table dict whose iteration runs the second append."""
+    from horus_spark.sources.sink import append_chunk, catalog_fsck, read_output
+
+    out = str(tmp_path / "interleaved")
+    second = {}
+
+    class Interleaved(dict):
+        def items(self):
+            it = iter(super().items())
+            yield next(it)
+            second["res"] = append_chunk(
+                out, {"t": spark.createDataFrame([(2,)], "k long")}, "second"
+            )
+            yield from it
+
+    first = append_chunk(
+        out,
+        Interleaved(
+            t=spark.createDataFrame([(1,)], "k long"),
+            u=spark.createDataFrame([("x",)], "s string"),
+        ),
+        "first",
+    )
+    assert first["chunk"] != second["res"]["chunk"]
+    assert sorted(r["k"] for r in read_output(spark, out, "t").collect()) == [1, 2]
+    assert [r["s"] for r in read_output(spark, out, "u").collect()] == ["x"]
+    assert catalog_fsck(out, grace_s=0)["ok"]
+
+
 def test_delete_rows_rewrites_only_affected_and_time_travels(spark, merge_store):
     from horus_spark.sources.sink import _read_table_manifest, delete_rows
 
