@@ -25,12 +25,13 @@ error row and the output projection are derived from them.
 
 The input path, in steps:
 
-- raw_arrays(fields): the fields -> raw bridge. Per-document fields dicts
-  (field key -> text, the reference's recognizer shape) become the
-  header_raw struct and the prefix-terminated lines_raw array, as Arrow
-  arrays. The recognize kernel calls it on every chunk; this module holds
-  the whole raw contract (column names and order, presence keys, the
-  49-line cap).
+- raw_columns(n_docs, header, lines): the fields -> raw bridge. Fields
+  given as columns over a chunk's documents become the header_raw struct
+  and the prefix-terminated lines_raw array, as Arrow arrays. The
+  recognize kernel calls it on every chunk; raw_arrays(fields) feeds it
+  per-document fields dicts (field key -> text, the reference's
+  recognizer shape) for tests and tools. This module holds the whole raw
+  contract (column names and order, presence keys, the 49-line cap).
 - shred_batch(batch): header_raw/lines_raw -> the shredded kernel columns
   (SHREDDED_FIELDS) through shred_arrays; other columns pass through. The
   recognize kernel calls it in the same worker (pipeline.run_extraction),
@@ -49,7 +50,7 @@ Parity points preserved exactly:
   Terminal (the reference calls GetString twice — log.LogTrace at
   HorusProcessingEngine.cs:65 — so a missing Drug yields TWO PRE0001 rows),
   Qty, Net(Terminal), Unit(Terminal), Vat, Disc, Taxable.
-- prefix-termination line scan (raw_arrays): line i exists iff any of
+- prefix-termination line scan (raw_columns): line i exists iff any of
   Unit{i:02d}, Net{i:02d}, Drug{i:02d} is present as a key; the scan BREAKS
   at the first absent line (max 49) — later lines are invisible even if
   present (HorusProcessingEngine.cs:49-85, ProcessingEngine.cs:15-35).
@@ -187,48 +188,70 @@ def _arrow_type(dtype):
     return to_arrow_type(dtype)
 
 
-def raw_arrays(fields: list[dict]):
-    """The fields -> raw bridge: one fields dict per document -> (header_raw
-    StructArray, lines_raw ListArray), row for row.
+def raw_columns(n_docs: int, header: dict, lines: dict):
+    """The fields -> raw bridge, columnar: fields given as columns over
+    n_docs documents -> (header_raw StructArray, lines_raw ListArray).
+    The recognize kernel writes its fields through it.
 
-    Columnar-first: flat value/offset lists straight into Arrow arrays,
-    with no per-doc header/line dicts for pyarrow to re-infer row by row
-    (per-object allocation dominated memory-allocator traffic at 32-way
-    parallelism).
-
-    Lines are prefix-terminated, mirroring the reference's presence + break
-    semantics (ProcessingEngine.cs:15-35, HorusProcessingEngine.cs:49-85):
-    line nn exists iff Unit/Net/Drug nn is present, for nn in 01..49."""
+    `header` maps a header key (OrderNO, Inv, ...) to its n_docs values
+    (None: absent); `lines` maps a line key prefix (Drug, Qty, ...) to
+    (doc, line number, values) of the present keys, at most one per (doc,
+    number). Lines are prefix-terminated, mirroring the reference's
+    presence + break semantics (ProcessingEngine.cs:15-35,
+    HorusProcessingEngine.cs:49-85): line nn exists iff Unit/Net/Drug nn is
+    present, for nn in 01..49, and the scan stops at the first absent
+    line."""
+    import numpy as np
     import pyarrow as pa
 
-    n = len(fields)
-    header_cols: dict[str, list] = {c: [None] * n for c, *_ in _HEADER_KEYS}
-    line_cols: dict[str, list] = {c: [] for c, *_ in _LINE_KEYS}
-    line_offsets = [0]
-    drug, unit, net = _LINE_PRESENCE
-    for d, fd in enumerate(fields):
-        for col, key, *_ in _HEADER_KEYS:
-            header_cols[col][d] = fd.get(key)
-        for i in range(1, _MAX_LINES + 1):
-            nn = f"{i:02d}"
-            if not (unit + nn in fd or net + nn in fd or drug + nn in fd):
-                break
-            for col, prefix, *_ in _LINE_KEYS:
-                line_cols[col].append(fd.get(prefix + nn))
-        line_offsets.append(len(line_cols["drug"]))
-
     header_arr = pa.StructArray.from_arrays(
-        [pa.array(header_cols[c], pa.string()) for c, *_ in _HEADER_KEYS],
+        [
+            pa.array(header.get(key, [None] * n_docs), pa.string())
+            for _, key, *_ in _HEADER_KEYS
+        ],
         fields=list(_arrow_type(HEADER_RAW)),
     )
-    line_values = pa.StructArray.from_arrays(
-        [pa.array(line_cols[c], pa.string()) for c, *_ in _LINE_KEYS],
-        fields=list(_arrow_type(LINE_RAW)),
-    )
-    lines_arr = pa.ListArray.from_arrays(
-        pa.array(line_offsets, pa.int32()), line_values
-    )
-    return header_arr, lines_arr
+    slot = {}  # prefix -> (n_docs, 1 + _MAX_LINES) row into its values
+    for prefix, (doc, no, _) in lines.items():
+        doc, no = np.asarray(doc, np.int64), np.asarray(no, np.int64)
+        ok = (no >= 1) & (no <= _MAX_LINES)
+        slot[prefix] = np.full((n_docs, _MAX_LINES + 1), -1)
+        slot[prefix][doc[ok], no[ok]] = np.flatnonzero(ok)
+    present = np.zeros((n_docs, _MAX_LINES + 1), bool)
+    for prefix in _LINE_PRESENCE:
+        if prefix in slot:
+            present |= slot[prefix] >= 0
+    # leading present lines 01.. per document
+    n_lines = np.argmin(np.c_[present[:, 1:], np.zeros(n_docs, bool)], axis=1)
+    doc = np.repeat(np.arange(n_docs), n_lines)
+    no = np.arange(len(doc)) - np.repeat(np.cumsum(n_lines) - n_lines, n_lines) + 1
+    columns = []
+    for _, prefix, *_ in _LINE_KEYS:
+        if prefix in slot:
+            at = slot[prefix][doc, no]
+            values = pa.array(lines[prefix][2], pa.string())
+            columns.append(values.take(pa.array(at, mask=at < 0)))
+        else:
+            columns.append(pa.nulls(len(doc), pa.string()))
+    line_values = pa.StructArray.from_arrays(columns, fields=list(_arrow_type(LINE_RAW)))
+    offsets = pa.array(np.r_[0, np.cumsum(n_lines)], pa.int32())
+    return header_arr, pa.ListArray.from_arrays(offsets, line_values)
+
+
+def raw_arrays(fields: list[dict]):
+    """raw_columns for one fields dict per document (field key -> text,
+    the reference's recognizer shape), row for row."""
+    header = {key: [fd.get(key) for fd in fields] for _, key, *_ in _HEADER_KEYS}
+    lines = {prefix: ([], [], []) for _, prefix, *_ in _LINE_KEYS}
+    for d, fd in enumerate(fields):
+        for key, value in fd.items():
+            if key in _LINE_KEY_OF:
+                prefix, no = _LINE_KEY_OF[key]
+                docs, nos, values = lines[prefix]
+                docs.append(d)
+                nos.append(no)
+                values.append(value)
+    return raw_columns(len(fields), header, lines)
 
 
 # --------------------------------------------------------- shred in Arrow
@@ -239,6 +262,8 @@ _CODES = [None, E.CODE_STRING_NULL, E.CODE_NUMBER_NULL, E.CODE_NUMBER_ZERO, E.CO
 _WARNING, _TERMINAL = 0, 1
 _SEVERITIES = [E.SEV_WARNING, E.SEV_TERMINAL]
 _LINE_NOS = [f"{i:02d}" for i in range(1, _MAX_LINES + 1)]
+# line key ('Drug07') -> (prefix, line number)
+_LINE_KEY_OF = {p + nn: (p, i) for _, p, *_ in _LINE_KEYS for i, nn in enumerate(_LINE_NOS, 1)}
 # error slots per document: the tail header reads, then each line's reads
 _SLOTS = len(_TAIL_KEYS) + _MAX_LINES * len(_LINE_READS)
 

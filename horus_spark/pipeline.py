@@ -9,6 +9,7 @@ shuffle per input table:
                       (hash)          │  one shuffle; map-side partial agg
                                       └─ mapInArrow(_extract_iter_arrow_grouped)
                                                │ L1-L4 layout + fields kernel,
+                                               │ columnar over each whole chunk,
                                                │ then shred_batch (Arrow): typed
                                                │ header, line_items[], errors
                                                │ from Inv on, their counts
@@ -33,7 +34,9 @@ Skew control: hashing on doc_id spreads media-heavy documents uniformly
 (per-doc cost is bounded: ~250 words normally, hard kernel cap
 MAX_DOC_WORDS for pathological blobs), so no single key can skew a
 partition. The Arrow kernel processes doc-aligned ~64k-word chunks
-(reference's skew = 1..17 line items/doc, Generator.cs:64). One failing
+(reference's skew = 1..17 line items/doc, Generator.cs:64), each as
+numpy/Arrow arrays with an integer document index and no per-document
+Python loop. One failing
 document degrades to its error channel, never the task (per-document
 isolation, DocumentProcessor.cs:101-106).
 """
@@ -41,8 +44,9 @@ isolation, DocumentProcessor.cs:101-106).
 from __future__ import annotations
 
 import functools
+import time
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -54,16 +58,25 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from horus_spark.config import format_of_doc_id
 from horus_spark.engines import get_engine
 from horus_spark.operators.boilerplate import is_boilerplate_text
-from horus_spark.operators.fields import extract_fields_arrays
-from horus_spark.operators.layout import cluster_lines, fragments_view, infer_grid_arrays
+from horus_spark.operators.fields import (
+    check_config,
+    configs_of_formats,
+    extract_fields_columns,
+)
+from horus_spark.operators.layout import (
+    infer_grid_columns,
+    join_runs,
+    line_order,
+    run_pos,
+    run_starts,
+)
 from horus_spark.operators.shred import (
     HEADER_RAW,
     LINE_RAW,
     finish,
-    raw_arrays,
+    raw_columns,
     shred_batch,
     shred_raw,
     shredded_schema,
@@ -90,158 +103,156 @@ SHREDDED_SCHEMA = shredded_schema(FIELDS_SCHEMA)
 # bound is ~250 words; real corpora can carry megaword OCR blobs) is
 # truncated to its first MAX_DOC_WORDS words in reading order inside the
 # kernel, and its recognizer_errors say so — bounding both the per-doc
-# compute and the pandas working set a single doc_id hash key can pin to
-# one partition. The reference bounds documents the same way (50-line cap,
+# compute and the working set a single doc_id hash key can pin to one
+# partition. The reference bounds documents the same way (50-line cap,
 # content-type whitelist).
 MAX_DOC_WORDS = 20000
 
 
-def _extract_core(
-    pdf: pd.DataFrame, configs: dict | None = None
-) -> tuple[list, list, list, list, list]:
-    """One doc-contiguous chunk of OCR words (many docs) -> (doc_ids,
-    fields dicts, per-doc sorted field line ids). L1 runs vectorized over
-    the WHOLE batch; grid/fields per doc (bounded: <=250 words/doc
-    normally, hard cap MAX_DOC_WORDS). Fragment j of fragments_view is the
-    j-th frag_key run of the clustered words, so a field's OCR line ids are
-    read straight off its fragments' word runs.
-    `configs` is the (broadcast-small) fmt->extraction-config dict from
-    the model registry; None = built-in FORMAT_CONFIGS.
+def _extract_batch_arrow(ids, words, configs: dict | None = None, engine=None):
+    """One kernel chunk of whole documents -> FIELDS_SCHEMA RecordBatch,
+    one row per document with at least one OCR word.
+
+    `ids` (doc_id strings) and `words` (one list<struct<page, line_id,
+    word_id, text, x0, y0, x1, y1>> per document) are the grouped
+    boundary's columns. The words flatten to numpy/Arrow arrays with an
+    integer document index from the list offsets; L1 (layout.line_order,
+    layout.join_runs), L2 (layout.infer_grid_columns) and L3/L4
+    (fields.extract_fields_columns) then each run over every document of
+    the chunk at once, and the fields go straight to header_raw/lines_raw
+    (shred.raw_columns). `configs` is the (broadcast-small)
+    fmt -> extraction-config dict from the model registry; None =
+    built-in FORMAT_CONFIGS. With `engine` (an EngineSpec), the chunk is
+    also shredded here, in the same worker (shred.shred_batch) ->
+    SHREDDED_SCHEMA RecordBatch.
 
     Per-document isolation (reference DocumentProcessor.cs:101-106: one
-    failing document never stops the others): a document whose layout
-    analysis raises yields an EMPTY fields map — the shredder then emits
-    the full PRE000x error-row channel for it, exactly like a document
-    the recognizer returned nothing for — and every other document in the
-    batch is unaffected.
+    failing document never stops the others): a document with non-finite
+    fragment geometry, or whose format's config cannot be read, gets
+    status `failed` with the reason in recognizer_errors (the reference's
+    RecognizerStatus/RecognizerErrors, Models/Document.cs:20-105) and an
+    EMPTY fields map — the shredder then emits the full PRE000x error-row
+    channel for it — and every other document is unaffected. A document
+    over MAX_DOC_WORDS keeps its first MAX_DOC_WORDS words in (page,
+    line_id, word_id) order and says so in recognizer_errors.
 
-    Also returns per-doc (status, errors) — the reference's
-    RecognizerStatus/RecognizerErrors (Models/Document.cs:20-105) — and
-    per-doc wall milliseconds (TimeToShred,
-    HorusProcessingEngine.cs:15-16,87-88): the per-doc loop is timed
-    directly; the batch-vectorized prelude (L1 clustering) is amortized
-    evenly across the batch's docs."""
-    import time as _time
-
-    t_batch0 = _time.perf_counter_ns()
-    if len(pdf) > MAX_DOC_WORDS:  # a smaller batch cannot hold a heavy doc
-        counts = pdf["doc_id"].value_counts()
-        heavy = counts[counts > MAX_DOC_WORDS]
-    else:
-        heavy = {}
-    # a truncated document is not silent: it keeps its status but says
-    # how many words it kept, on the recognizer outcome channel
-    truncated = {
-        d: f"Truncated: kept the first {MAX_DOC_WORDS} of {n} OCR words"
-        for d, n in heavy.items()
-    }
-    if truncated:
-        pdf = (
-            pdf.sort_values(
-                ["doc_id", "page", "line_id", "word_id"], kind="mergesort"
-            )
-            .groupby("doc_id", sort=False)
-            .head(MAX_DOC_WORDS)
-        )
-    clustered = cluster_lines(pdf)
-    frags_all = fragments_view(clustered)
-    # frag rows are already in reading order per doc (frag_key monotone);
-    # slice per-doc ranges with numpy instead of groupby DataFrames
-    doc_ids = frags_all["doc_id"].to_numpy()
-    texts_all = frags_all["text"].tolist()
-    x0_all = frags_all["x0"].to_numpy(dtype="float64")
-    y0_all = frags_all["y0"].to_numpy(dtype="float64")
-    x1_all = frags_all["x1"].to_numpy(dtype="float64")
-    import numpy as np
-
-    # word-row start of each fragment, then the end: fragment j's words
-    # are rows wstart[j]:wstart[j + 1] of `clustered`
-    fk_words = clustered["frag_key"].to_numpy()
-    wstart = np.flatnonzero(np.r_[True, fk_words[1:] != fk_words[:-1], True])
-    line_l = clustered["line_id"].tolist()
-
-    boundaries = np.flatnonzero(doc_ids[1:] != doc_ids[:-1]) + 1
-    starts = np.concatenate([[0], boundaries])
-    ends = np.concatenate([boundaries, [len(doc_ids)]])
-    # corrupt (non-finite) geometry is a recognizer-level failure for that
-    # document, not a silent empty-fields result — one vectorized pass
-    finite_all = np.isfinite(x0_all) & np.isfinite(y0_all) & np.isfinite(x1_all)
-
-    out_ids, out_fields, out_flids, out_status, out_ns = [], [], [], [], []
-    for s, e in zip(starts, ends):
-        doc_id = doc_ids[s]
-        texts = texts_all[s:e]
-        fx0, fy, fx1 = x0_all[s:e], y0_all[s:e], x1_all[s:e]
-        t0 = _time.perf_counter_ns()
-        try:
-            if not finite_all[s:e].all():
-                raise ValueError("non-finite bbox geometry in OCR words")
-            grid = infer_grid_arrays(texts, fx0, fy, fx1)
-            fields, used = extract_fields_arrays(
-                texts, fx0, fy, fx1, grid, format_of_doc_id(doc_id), configs
-            )
-            status = ("succeeded", [])
-        except Exception as exc:
-            # per-document isolation: this doc degrades to "nothing
-            # recognized" (full error channel downstream); others proceed.
-            # WHY it failed is recorded — the reference's RecognizerErrors.
-            fields, used = {}, set()
-            status = ("failed", [f"{type(exc).__name__}: {exc}"])
-        if doc_id in truncated:
-            status[1].insert(0, truncated[doc_id])
-        out_ns.append(_time.perf_counter_ns() - t0)
-        out_ids.append(doc_id)
-        out_fields.append(fields)
-        out_status.append(status)
-        out_flids.append(
-            sorted({ln for i in used for ln in line_l[wstart[s + i] : wstart[s + i + 1]]})
-        )
-    # amortize everything outside the per-doc loop evenly
-    n_docs = len(out_ids)
-    overhead = max(_time.perf_counter_ns() - t_batch0 - sum(out_ns), 0)
-    share = overhead / n_docs if n_docs else 0.0
-    out_ms = [(ns + share) / 1e6 for ns in out_ns]
-    return out_ids, out_fields, out_flids, out_status, out_ms
-
-
-def _extract_batch_arrow(pdf: pd.DataFrame, configs: dict | None = None, engine=None):
-    """One kernel chunk -> FIELDS_SCHEMA RecordBatch. The fields dicts
-    cross to header_raw/lines_raw through the shredder's raw bridge
-    (operators.shred.raw_arrays); the other columns straight from the
-    kernel's per-document lists. With `engine` (an EngineSpec), the chunk
-    is also shredded here, in the same worker (operators.shred.shred_batch)
-    -> SHREDDED_SCHEMA RecordBatch."""
+    time_to_shred_ms (TimeToShred, HorusProcessingEngine.cs:15-16,87-88):
+    the chunk's wall time split across its documents by the number of
+    words each kept."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    out_ids, out_fields, out_flids, out_status, out_ms = _extract_core(pdf, configs)
-    header_arr, lines_arr = raw_arrays(out_fields)
-    flid_arr = pa.array(out_flids, pa.list_(pa.int32()))
-    status_arr = pa.array([s[0] for s in out_status], pa.string())
-    rerr_arr = pa.array([s[1] for s in out_status], pa.list_(pa.string()))
-    ms_arr = pa.array(out_ms, pa.float64())
+    t0 = time.perf_counter_ns()
+    counts = pc.fill_null(pc.list_value_length(words), 0).to_numpy().astype(np.int64)
+    n_docs = len(counts)
+    wdoc = np.repeat(np.arange(n_docs), counts)
+    values = words.flatten()
+    def field(name):  # (a null coordinate reads as NaN: non-finite geometry)
+        return values.field(name).to_numpy(zero_copy_only=False)
+
+    col = {c: field(c) for c in ("page", "line_id", "word_id")}
+    box = [field(c).astype(np.float64) for c in ("x0", "y0", "x1", "y1")]
+    text = pc.fill_null(values.field("text"), "")
+    messages = []  # (doc, message): the recognizer outcome channel
+    heavy = counts > MAX_DOC_WORDS
+    if heavy.any():
+        # a heavy document's words in (page, line_id, word_id) order, then
+        # its first MAX_DOC_WORDS; every other document keeps its words
+        h = heavy[wdoc]
+        keep = np.lexsort([np.where(h, col[c], 0) for c in ("word_id", "line_id", "page")] + [wdoc])
+        keep = keep[run_pos(wdoc[keep]) < MAX_DOC_WORDS]
+        wdoc, text = wdoc[keep], text.take(keep)
+        col = {c: v[keep] for c, v in col.items()}
+        box = [v[keep] for v in box]
+        messages += [
+            (d, f"Truncated: kept the first {MAX_DOC_WORDS} of {counts[d]} OCR words")
+            for d in np.flatnonzero(heavy)
+        ]
+
+    # ---- L1: fragments (OCR lines), doc-contiguous in reading order
+    order, _, frag_key = line_order(wdoc, col["page"], *box)
+    fstart = np.flatnonzero(run_starts(frag_key))
+    fdoc = wdoc[order][fstart]
+    fx0 = np.minimum.reduceat(box[0][order], fstart)
+    fy = np.minimum.reduceat(box[1][order], fstart)
+    fx1 = np.maximum.reduceat(box[2][order], fstart)
+    ftext = join_runs(text.take(order), fstart)
+
+    # ---- documents that fail before L2
+    failed = np.zeros(n_docs, bool)
+    failed[fdoc[~(np.isfinite(fx0) & np.isfinite(fy) & np.isfinite(fx1))]] = True
+    messages += [
+        (d, "ValueError: non-finite bbox geometry in OCR words") for d in np.flatnonzero(failed)
+    ]
+    # the format is the doc_id's '{format}-' prefix (config.format_of_doc_id)
+    fmt = pc.list_element(pc.split_pattern(pc.fill_null(ids, ""), "-", max_splits=1), 0)
+    fmt = fmt.dictionary_encode()
+    cfgs = configs_of_formats(fmt.dictionary.to_pylist(), configs)
+    doc_cfg = fmt.indices.to_numpy()
+    for k, cfg in enumerate(cfgs):
+        try:
+            check_config(cfg)
+        except Exception as exc:
+            bad = np.flatnonzero((doc_cfg == k) & ~failed)
+            failed[bad] = True
+            messages += [(d, f"{type(exc).__name__}: {exc}") for d in bad]
+
+    # ---- L2-L4 over the documents that did not fail
+    ok = np.flatnonzero(~failed[fdoc])
+    od, ox0, oy, ox1, otext = fdoc[ok], fx0[ok], fy[ok], fx1[ok], ftext.take(ok)
+    grid = infer_grid_columns(od, otext, ox0, oy, ox1, n_docs)
+    header, lines, used = extract_fields_columns(
+        od, run_pos(od), otext, ox0, oy, ox1, grid, cfgs, doc_cfg
+    )
+    header_raw, lines_raw = raw_columns(n_docs, header, lines)
+
+    # ---- field_line_ids: the OCR line ids of the words any field read
+    used_frag = np.zeros(len(fstart), bool)
+    used_frag[ok[used]] = True
+    w = order[used_frag[frag_key - 1]]
+    ld, ln = wdoc[w], col["line_id"][w]
+    o = np.lexsort((ln, ld))
+    ld, ln = ld[o], ln[o]
+    first = run_starts(ld, ln)
+    flids = _lists(ld[first], pa.array(ln[first], pa.int32()), n_docs)
+    messages.sort(key=lambda m: m[0])  # stable: the truncation leads
+    errors = _lists(
+        [d for d, _ in messages], pa.array([m for _, m in messages], pa.string()), n_docs
+    )
+    kept = np.minimum(counts, MAX_DOC_WORDS)
+    ms = (time.perf_counter_ns() - t0) / 1e6 * kept / max(kept.sum(), 1)
     batch = pa.RecordBatch.from_arrays(
         [
-            pa.array(out_ids, pa.string()),
-            header_arr,
-            lines_arr,
-            flid_arr,
-            status_arr,
-            rerr_arr,
-            ms_arr,
+            ids,
+            header_raw,
+            lines_raw,
+            flids,
+            pa.array(np.where(failed, "failed", "succeeded"), pa.string()),
+            errors,
+            pa.array(ms, pa.float64()),
         ],
         schema=_arrow_fields_schema(),
     )
+    if (counts == 0).any():
+        batch = batch.filter(pa.array(counts > 0))
     return batch if engine is None else shred_batch(batch, engine)
 
 
-# kernel chunk target: per-batch fixed costs amortize up to ~64k rows;
-# beyond that pandas working sets fall out of cache (measured sweet spot)
+def _lists(doc, values, n_docs: int):
+    """Arrow values sorted by document -> one list per document."""
+    import pyarrow as pa
+
+    offsets = np.r_[0, np.cumsum(np.bincount(doc, minlength=n_docs))]
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values)
+
+
+# kernel chunk target: per-chunk fixed costs amortize up to ~64k words;
+# beyond that the chunk's working set falls out of cache (measured sweet
+# spot)
 _KERNEL_CHUNK_ROWS = 65536
 
 # Arrow output schema mirroring FIELDS_SCHEMA (mapInArrow hands us raw
-# RecordBatches both ways; doing our own pandas conversion with
-# split_blocks/self_destruct costs ~5% of what the generic pandas-UDF
-# serializer spends per column)
+# RecordBatches both ways)
 @functools.cache
 def _arrow_fields_schema():
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -253,15 +264,11 @@ def _extract_iter_arrow_grouped(batches, configs: dict | None = None, engine=Non
     """mapInArrow kernel over the grouped boundary shape
     (doc_id, words:array<struct<page,line_id,word_id,text,x0,y0,x1,y1>>).
 
-    Each input row is one whole document, so doc contiguity is free: no
-    factorize/argsort/take over the word rows. The list column flattens
-    zero-copy into per-word arrays; doc_id expands to a per-word column as
-    an object-pointer repeat (pointers to the ~n_docs shared strings, not
-    string copies). Chunking walks doc boundaries via the cumulative word
-    counts: ~_KERNEL_CHUNK_ROWS-word chunks of whole documents (a doc
-    larger than the target is a chunk of its own). `engine`:
-    _extract_batch_arrow's."""
-    import numpy as np
+    Each input row is one whole document, so doc contiguity is free.
+    Chunking walks doc boundaries via the cumulative word counts:
+    ~_KERNEL_CHUNK_ROWS-word chunks of whole documents (a doc larger than
+    the target is a chunk of its own), each one _extract_batch_arrow call.
+    `engine`: _extract_batch_arrow's."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -273,31 +280,14 @@ def _extract_iter_arrow_grouped(batches, configs: dict | None = None, engine=Non
     ids = tbl.column("doc_id").combine_chunks()
     words = tbl.column("words").combine_chunks()
     del tbl
-    counts = pc.list_value_length(words).to_numpy().astype(np.int64)
-    values = words.flatten()  # StructArray: one row per word, doc-contiguous
-    del words
-    doc_ids = np.repeat(ids.to_numpy(zero_copy_only=False), counts)
-    pdf = pd.DataFrame(
-        {
-            "doc_id": doc_ids,
-            "page": values.field("page").to_numpy(zero_copy_only=False),
-            "line_id": values.field("line_id").to_numpy(zero_copy_only=False),
-            "word_id": values.field("word_id").to_numpy(zero_copy_only=False),
-            "text": values.field("text").to_numpy(zero_copy_only=False),
-            "x0": values.field("x0").to_numpy(zero_copy_only=False),
-            "y0": values.field("y0").to_numpy(zero_copy_only=False),
-            "x1": values.field("x1").to_numpy(zero_copy_only=False),
-            "y1": values.field("y1").to_numpy(zero_copy_only=False),
-        }
-    )
-    del values
+    counts = pc.fill_null(pc.list_value_length(words), 0).to_numpy().astype(np.int64)
     cum = np.concatenate([[0], np.cumsum(counts)])
     n_docs = len(counts)
     d = 0
     while d < n_docs:
         e = int(np.searchsorted(cum, cum[d] + _KERNEL_CHUNK_ROWS, side="right")) - 1
         e = min(max(e, d + 1), n_docs)  # >=1 doc of progress, <=n_docs
-        yield _extract_batch_arrow(pdf.iloc[cum[d] : cum[e]], configs, engine)
+        yield _extract_batch_arrow(ids[d:e], words[d:e], configs, engine)
         d = e
 
 

@@ -1569,11 +1569,11 @@ def expire_snapshots(out_dir: str, keep_last: int = 2) -> list[int]:
 
 
 def vacuum_chunks(out_dir: str, grace_s: float = 86400.0) -> list[str]:
-    """Delete chunk directories referenced by NO retained snapshot —
-    the remove-orphan-files half of maintenance, run AFTER
-    expire_snapshots: every retained snapshot (and therefore every
-    reader holding one) keeps all of its directories. Returns the
-    removed directory names.
+    """Delete chunk directories referenced by NO retained snapshot, and
+    the `_tmp_*` staging directories crashed writers left — the
+    remove-orphan-files half of maintenance, run AFTER expire_snapshots:
+    every retained snapshot (and therefore every reader holding one)
+    keeps all of its directories. Returns the removed directory names.
 
     Two safety rails (both were review findings, not theory):
 
@@ -1587,7 +1587,8 @@ def vacuum_chunks(out_dir: str, grace_s: float = 86400.0) -> list[str]:
       snapshot that points at nothing. Directories modified within
       `grace_s` seconds are skipped (Iceberg's remove-orphan-files
       `older_than` contract); the promote->commit window is
-      milliseconds, so the default 24h grace is conservative.
+      milliseconds, so the default 24h grace is conservative. The same
+      grace covers a staging directory a live writer is still filling.
     """
     snaps = list_snapshots(out_dir)
     if not snaps:
@@ -1604,9 +1605,12 @@ def vacuum_chunks(out_dir: str, grace_s: float = 86400.0) -> list[str]:
     now = time.time()
     removed = []
     for name in sorted(os.listdir(out_dir)):
-        if not name.startswith("chunk=") or name in referenced:
-            continue
         path = os.path.join(out_dir, name)
+        if name.startswith("chunk="):
+            if name in referenced:
+                continue
+        elif not (name.startswith("_tmp_") and os.path.isdir(path)):
+            continue
         try:
             age = now - os.path.getmtime(path)
         except OSError:

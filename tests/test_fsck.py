@@ -7,7 +7,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from horus_spark.sources.sink import append_chunk, catalog_fsck
+from horus_spark.sources.sink import append_chunk, catalog_fsck, vacuum_chunks
 
 
 def _store(spark, tmp_path, n_chunks=3):
@@ -48,6 +48,24 @@ def test_orphan_and_tmp_respect_grace(spark, tmp_path):
     assert r["orphan_chunks"] == ["chunk=orphan-999999"]
     assert r["stale_tmp"] == ["_tmp_crashed"]
     assert r["ok"] is False
+
+
+def test_vacuum_removes_a_crashed_writers_staging(spark, tmp_path):
+    """An append whose second table fails leaves its private staging
+    directory `_tmp_chunk_append-<snapshot>-<uuid>`, which no later writer
+    reuses. vacuum_chunks keeps it inside the grace window, then removes
+    it and names it, and fsck comes back clean."""
+    out = _store(spark, tmp_path, n_chunks=1)
+    bad = spark.range(3).select(F.raise_error(F.lit("injected failure")).alias("k"))
+    with pytest.raises(Exception, match="injected failure"):
+        append_chunk(out, {"t": spark.range(3), "u": bad})
+    leftover = [n for n in os.listdir(out) if n.startswith("_tmp_")]
+    assert len(leftover) == 1 and leftover[0].startswith("_tmp_chunk_append-")
+    append_chunk(out, {"t": spark.range(3)})
+    assert catalog_fsck(out, grace_s=0.0)["stale_tmp"] == leftover
+    assert vacuum_chunks(out) == []
+    assert vacuum_chunks(out, grace_s=0.0) == leftover
+    assert catalog_fsck(out, grace_s=0.0)["ok"] is True
 
 
 def test_stale_pointer_and_gap(spark, tmp_path):

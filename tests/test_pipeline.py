@@ -6,6 +6,7 @@ decimals at 2dp, dates at day granularity, strings exact)."""
 
 import re
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
@@ -94,8 +95,9 @@ def test_line_items_match_expected(spark, extracted, golden):
 
 
 def test_recognizer_status_and_time_to_shred(extracted):
-    """P-channel integration of the round-3 additions: per-doc measured
-    TimeToShred (HorusProcessingEngine.cs:15-16,87-88), RecognizerStatus/
+    """P-channel integration of the round-3 additions: TimeToShred
+    (HorusProcessingEngine.cs:15-16,87-88) as each document's word-count
+    share of its kernel chunk's wall time, RecognizerStatus/
     RecognizerErrors (Models/Document.cs:20-105) and the run stamps
     (HorusSql.cs:244-249) on every header row."""
     rows = extracted.select(
@@ -104,7 +106,7 @@ def test_recognizer_status_and_time_to_shred(extracted):
     ).collect()
     assert all(r.recognizer_status == "succeeded" for r in rows)
     assert all(r.recognizer_errors == [] for r in rows)
-    # measured, plausible per-doc wall time: nonzero, under 5 s/doc
+    # a share of measured chunk wall time: nonzero, under 5 s/doc
     assert all(0 < r.time_to_shred_ms < 5000 for r in rows)
     assert all(r.shredding_utc_datetime is not None for r in rows)
     run_ids = {r.unique_run_identifier for r in rows}
@@ -307,7 +309,10 @@ def test_boundary_shapes_agree(spark):
         .sort_values(["doc_id", "page", "line_id", "word_id"], kind="mergesort")
         .reset_index(drop=True)
     )
-    direct = pa.Table.from_batches([P._extract_batch_arrow(flat)])
+    ids, starts = np.unique(flat["doc_id"].to_numpy(), return_index=True)
+    direct = pa.Table.from_batches(
+        [P._extract_batch_arrow(pa.array(ids), _word_lists(flat, np.r_[starts, len(flat)]))]
+    )
     direct_rows = sorted(
         direct.drop_columns(["time_to_shred_ms"]).to_pylist(),
         key=lambda r: r["doc_id"],
@@ -315,6 +320,96 @@ def test_boundary_shapes_agree(spark):
 
     assert len(spark_rows) == len(direct_rows) == 60
     assert spark_rows == direct_rows
+
+
+def _word_lists(words, offsets):
+    """Flat OCR word rows (bbox list column) -> the grouped boundary's
+    words column: one list<struct<page, line_id, word_id, text, x0, y0,
+    x1, y1>> per [offsets[i], offsets[i + 1]) run, bbox flattened in
+    float32 like the JVM projection."""
+    import pyarrow as pa
+
+    b = np.array(words["bbox"].tolist(), np.float32)
+    box = {
+        "x0": np.minimum(b[:, 0], b[:, 6]), "y0": np.minimum(b[:, 1], b[:, 3]),
+        "x1": np.maximum(b[:, 2], b[:, 4]), "y1": np.maximum(b[:, 5], b[:, 7]),
+    }
+    values = pa.StructArray.from_arrays(
+        [pa.array(words[c].to_numpy(), pa.int32()) for c in ("page", "line_id", "word_id")]
+        + [pa.array(words["text"].tolist(), pa.string())]
+        + [pa.array(v) for v in box.values()],
+        names=["page", "line_id", "word_id", "text", *box],
+    )
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values)
+
+
+def _grouped_chunk(n_docs: int):
+    """(doc ids, grouped words) of a generated corpus, built without Spark."""
+    import pyarrow as pa
+
+    words = corpus_pandas(n_docs)["ocr_words"].sort_values("doc_id", kind="mergesort")
+    ids, starts = np.unique(words["doc_id"].to_numpy(), return_index=True)
+    return pa.array(ids), _word_lists(words, np.r_[starts, len(words)])
+
+
+def test_kernel_builds_no_dataframe_and_calls_no_oracle(monkeypatch):
+    """One kernel path: the production kernel runs L1-L4 as columnar code
+    over the chunk. With pandas.DataFrame and every per-document oracle or
+    DataFrame wrapper made to raise, the grouped kernel still returns a
+    row per document."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from horus_spark import pipeline as P
+    from horus_spark.operators import fields, layout
+
+    ids, words = _grouped_chunk(12)
+    batch = pa.RecordBatch.from_arrays([ids, words], names=["doc_id", "words"])
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError("called from the recognize kernel")
+
+    monkeypatch.setattr(pd, "DataFrame", forbidden)
+    for module, names in (
+        (layout, ["cluster_lines", "fragments_view", "infer_grid", "infer_grid_arrays"]),
+        (fields, ["extract_fields", "extract_fields_arrays"]),
+    ):
+        for name in names:
+            monkeypatch.setattr(module, name, forbidden)
+            if hasattr(P, name):
+                monkeypatch.setattr(P, name, forbidden)
+    out = list(P._extract_iter_arrow_grouped(iter([batch])))
+    assert sum(b.num_rows for b in out) == 12
+    assert set(pa.Table.from_batches(out).column("recognizer_status").to_pylist()) == {"succeeded"}
+
+
+def test_time_to_shred_splits_the_chunk_by_words(monkeypatch):
+    """time_to_shred_ms is the kernel chunk's wall time split across its
+    documents by word count: every share is > 0, a chunk's shares add up
+    to its measured time, and a heavier document gets at least as much as
+    a lighter one."""
+    import time
+
+    from horus_spark import pipeline as P
+
+    ids, words = _grouped_chunk(30)
+    n_words = words.value_lengths().to_numpy()
+
+    t0 = time.perf_counter()
+    ms = np.array(P._extract_batch_arrow(ids, words).column("time_to_shred_ms"))
+    wall_ms = (time.perf_counter() - t0) * 1e3
+    assert (ms > 0).all()
+    assert ms.sum() <= wall_ms
+    order = np.argsort(n_words, kind="stable")
+    assert (np.diff(ms[order]) >= 0).all()
+
+    # with a clock that reads 37 ms between the chunk's start and end, the
+    # shares add up to exactly that
+    ticks = iter([5_000_000_000, 5_037_000_000])
+    monkeypatch.setattr(P.time, "perf_counter_ns", lambda: next(ticks))
+    ms = np.array(P._extract_batch_arrow(ids, words).column("time_to_shred_ms"))
+    assert ms.sum() == pytest.approx(37.0, abs=1e-9)
+    np.testing.assert_allclose(ms, 37.0 * n_words / n_words.sum())
 
 
 def test_grouped_kernel_chunking_doc_aligned(spark, monkeypatch):
