@@ -48,3 +48,18 @@ TOTALS_LABELS = [
 def format_of_doc_id(doc_id: str) -> str:
     """'{format}-{filename}' -> format (DocumentProcessor.cs:149-153)."""
     return doc_id.split("-", 1)[0]
+
+
+def line_keys(page, line_id):
+    """OCR line ids -> form-field keys 'p{page}L{line_id}': the spelling
+    of a media span's media_ref after its '#'. The recognize kernel keys
+    the lines its fields read with it, and the fixture generator writes
+    the media refs with it. Integer sequences or arrays in (NaN reads as
+    missing), an Arrow string array out."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def digits(v):
+        return pc.cast(pa.array(v, from_pandas=True), pa.string())
+
+    return pc.binary_join_element_wise("p", digits(page), "L", digits(line_id), "")

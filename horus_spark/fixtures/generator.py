@@ -30,6 +30,7 @@ import datetime as dt
 import numpy as np
 import pandas as pd
 
+from horus_spark.config import line_keys
 from horus_spark.fixtures.pools import FORMATS, SUPPLIERS, build_accounts, build_products
 
 PAGE_W, PAGE_H = 8.2639, 11.6806
@@ -441,8 +442,9 @@ def generate_document(doc_number: int, seed: int = 42, products=None, accounts=N
     if has_boiler:
         push("text", _BOILER_NAV, "", "boilerplate")
     ocr_words_rows = []
+    keys = line_keys([1] * len(ocr_lines), range(len(ocr_lines))).to_pylist()
     for li, (ltext, lbbox, lwords, token) in enumerate(ocr_lines):
-        ref = f"{doc_id}#p1L{li}"
+        ref = f"{doc_id}#{keys[li]}"
         is_field = token in field_tokens
         push("media", ltext, ref, "form-field" if is_field else "boilerplate")
         for wi, (wtext, wbbox) in enumerate(lwords):

@@ -16,7 +16,8 @@ Two tiers, matching the engine's usual shape:
 - `dom_extract` / `html_to_spans` — the PRECISION tier: a real DOM tree,
   built by a compiled-regex tokenizer (tolerant of unclosed tags; tag
   events and text items identical to the stdlib `html.parser`), inside a
-  mapInArrow kernel that assembles its output columns from flat arrays.
+  mapInArrow kernel (html_to_spans') that assembles its output columns
+  from flat arrays; dom_extract is a JVM projection of its rows.
   Text blocks (p/h1-6/li/td/...) are scored Readability-style (length +
   comma points, propagated 2x to the parent and 1x to the grandparent),
   candidates are discounted by subtree link density (the CETD
@@ -33,8 +34,8 @@ content-vs-boilerplate span classifier (operators/boilerplate.py covers
 the span-level analog used by the fixture corpus).
 
 Scale notes: `html_blocks` is a projection (posexplode is map-side —
-no Exchange anywhere). `dom_extract` parses each document once inside an
-Arrow batch; parsing is inherently per-document work, the same bounded
+no Exchange anywhere). `html_to_spans` parses each document once inside
+an Arrow batch; parsing is inherently per-document work, the same bounded
 per-doc inner loop as the extraction kernel (pipeline.py), and the
 output is one slim row per document (no payload amplification).
 """
@@ -42,7 +43,6 @@ output is one slim row per document (no payload amplification).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from html import unescape
 
 from pyspark.sql import Column, DataFrame
@@ -531,46 +531,25 @@ def _select_candidate(
     return nodes, best, blocks
 
 
-def _content_items(html: str) -> Iterator[_Node | str]:
-    """The winning candidate's output in document order: its media nodes
-    and its link-farm-filtered block texts."""
-    nodes, best, blocks = _select_candidate(html)
-    for nd in nodes[best.order : best.end]:
-        if nd.media is not None:
-            yield nd
-            continue
-        info = blocks[nd.order]
-        if info:
-            text, link = info
-            if text and 3 * link <= len(text):
-                yield text
-
-
-def _extract_one(html: str) -> tuple[str, int, int]:
-    blocks = [b for b in _content_items(html) if b.__class__ is str]
-    content = "\n".join(blocks)
-    return content, len(blocks), sum(len(b) for b in blocks)
-
-
 def _spans_one(html: str) -> list[tuple[str, str, str]]:
     """Interleaved (kind, text, media_ref) sequence of the winning
-    candidate: content text blocks (link-farm-filtered, as _extract_one)
-    and media elements (img/video/audio with a src) in document order.
-    Media outside the candidate (nav logos, footer badges) is stripped
-    with the boilerplate — media-aware main-content extraction."""
+    candidate: content text blocks (link-farm-filtered) and media
+    elements (img/video/audio with a src) in document order. Media
+    outside the candidate (nav logos, footer badges) is stripped with the
+    boilerplate — media-aware main-content extraction."""
+    nodes, best, blocks = _select_candidate(html)
     spans = []
-    for it in _content_items(html):
-        if it.__class__ is str:
-            spans.append(("text", it, ""))
-        else:
-            kind, src = it.media
+    for nd in nodes[best.order : best.end]:
+        if nd.media is not None:
+            kind, src = nd.media
             spans.append((kind, "", src))
+        elif blocks[nd.order]:
+            text, link = blocks[nd.order]
+            if text and 3 * link <= len(text):
+                spans.append(("text", text, ""))
     return spans
 
 
-DOM_EXTRACT_SCHEMA = (
-    "doc_id string, content_text string, n_blocks int, content_chars int"
-)
 SPANS_SCHEMA = (
     "doc_id string, spans array<struct<kind:string,text:string,"
     "media_ref:string,offset:int>>"
@@ -582,24 +561,6 @@ def _slim(df: DataFrame, html_col: str, id_col: str) -> DataFrame:
         F.col(id_col).cast("string").alias("doc_id"),
         F.col(html_col).alias("html"),
     )
-
-
-def _dom_extract_arrow(batches):
-    """mapInArrow kernel of dom_extract: (doc_id, html) batches in, one
-    (doc_id, content_text, n_blocks, content_chars) row per page out."""
-    import pyarrow as pa
-
-    for batch in batches:
-        rows = [_extract_one(h) for h in batch.column(1).to_pylist()]
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column(0).cast(pa.string()),
-                pa.array([r[0] for r in rows], pa.string()),
-                pa.array([r[1] for r in rows], pa.int32()),
-                pa.array([r[2] for r in rows], pa.int32()),
-            ],
-            names=["doc_id", "content_text", "n_blocks", "content_chars"],
-        )
 
 
 def _spans_arrow(batches):
@@ -647,11 +608,16 @@ def dom_extract(
     per document: (doc_id, content_text, n_blocks, content_chars), blocks
     joined by '\\n' in document order (span-sequence-stable).
 
-    A mapInArrow kernel; only (id, html) cross the boundary, and the
-    winning candidate's text comes back — never the full markup.
-    """
-    return _slim(df, html_col, id_col).mapInArrow(
-        _dom_extract_arrow, schema=DOM_EXTRACT_SCHEMA
+    A JVM projection of html_to_spans' rows: its text spans joined by
+    '\\n', their count and the sum of their lengths (media spans are
+    dropped). The page is parsed and scored once, by html_to_spans'
+    kernel."""
+    texts = F.filter("spans", lambda s: s["kind"] == "text")["text"]
+    return html_to_spans(df, html_col, id_col).select(
+        "doc_id",
+        F.array_join(texts, "\n").alias("content_text"),
+        F.size(texts).alias("n_blocks"),
+        F.aggregate(texts, F.lit(0), lambda n, t: n + F.length(t)).alias("content_chars"),
     )
 
 
@@ -668,9 +634,10 @@ def html_to_spans(
     audio with a src) become media spans, in document order with offsets
     0..n-1. Boilerplate — including nav logos and footer badges — is
     stripped BEFORE spans exist, so downstream caption mining pairs
-    captions with CONTENT media only. Same mapInArrow kernel shape as
-    dom_extract; one slim nested row out per page; a NULL page yields
-    an empty span list."""
+    captions with CONTENT media only. The module's one Python kernel
+    (dom_extract projects its rows): only (id, html) cross the boundary,
+    one slim nested row comes back per page — never the full markup; a
+    NULL page yields an empty span list."""
     return _slim(df, html_col, id_col).mapInArrow(
         _spans_arrow, schema=SPANS_SCHEMA
     )

@@ -15,10 +15,10 @@ shuffle per input table:
                                                │ from Inv on, their counts
     documents ───────── join(doc_id) ──────────┤ (no OCR rows: the shred of an
                                                │  empty fields map, a literal)
-    registry (opt) ──── broadcast join(fmt) ───┤  model_id / model_version
                                                ▼
      finish (JVM: OrderNO/OrderDate/TaxDate reads, tax_period, counts)
-                  + thumbprint + classify spans (pure expressions)
+                  + thumbprint + classify spans + registry model stamps
+                    (pure expressions)
                                                ▼
        extracted(doc header, line_items[], errors[], spans_out[]) -> sinks
 
@@ -52,12 +52,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
-    IntegerType,
     StringType,
     StructField,
     StructType,
 )
 
+from horus_spark.config import line_keys
 from horus_spark.engines import get_engine
 from horus_spark.operators.boilerplate import is_boilerplate_text
 from horus_spark.operators.fields import (
@@ -89,7 +89,7 @@ FIELDS_SCHEMA = StructType(
         StructField("doc_id", StringType()),
         StructField("header_raw", HEADER_RAW),
         StructField("lines_raw", ArrayType(LINE_RAW)),
-        StructField("field_line_ids", ArrayType(IntegerType())),
+        StructField("field_keys", ArrayType(StringType())),
         StructField("recognizer_status", StringType()),
         StructField("recognizer_errors", ArrayType(StringType())),
         StructField("time_to_shred_ms", DoubleType()),
@@ -206,15 +206,15 @@ def _extract_batch_arrow(ids, words, configs: dict | None = None, engine=None):
     )
     header_raw, lines_raw = raw_columns(n_docs, header, lines)
 
-    # ---- field_line_ids: the OCR line ids of the words any field read
+    # ---- field_keys: the keys of the OCR lines any field read a word from
     used_frag = np.zeros(len(fstart), bool)
     used_frag[ok[used]] = True
     w = order[used_frag[frag_key - 1]]
-    ld, ln = wdoc[w], col["line_id"][w]
-    o = np.lexsort((ln, ld))
-    ld, ln = ld[o], ln[o]
-    first = run_starts(ld, ln)
-    flids = _lists(ld[first], pa.array(ln[first], pa.int32()), n_docs)
+    ld, lp, ln = wdoc[w], col["page"][w], col["line_id"][w]
+    o = np.lexsort((ln, lp, ld))
+    ld, lp, ln = ld[o], lp[o], ln[o]
+    first = run_starts(ld, lp, ln)
+    keys = _lists(ld[first], line_keys(lp[first], ln[first]), n_docs)
     messages.sort(key=lambda m: m[0])  # stable: the truncation leads
     errors = _lists(
         [d for d, _ in messages], pa.array([m for _, m in messages], pa.string()), n_docs
@@ -226,7 +226,7 @@ def _extract_batch_arrow(ids, words, configs: dict | None = None, engine=None):
             ids,
             header_raw,
             lines_raw,
-            flids,
+            keys,
             pa.array(np.where(failed, "failed", "succeeded"), pa.string()),
             errors,
             pa.array(ms, pa.float64()),
@@ -265,30 +265,23 @@ def _extract_iter_arrow_grouped(batches, configs: dict | None = None, engine=Non
     (doc_id, words:array<struct<page,line_id,word_id,text,x0,y0,x1,y1>>).
 
     Each input row is one whole document, so doc contiguity is free.
-    Chunking walks doc boundaries via the cumulative word counts:
-    ~_KERNEL_CHUNK_ROWS-word chunks of whole documents (a doc larger than
-    the target is a chunk of its own), each one _extract_batch_arrow call.
-    `engine`: _extract_batch_arrow's."""
-    import pyarrow as pa
+    Each incoming RecordBatch is cut at doc boundaries via the cumulative
+    word counts: ~_KERNEL_CHUNK_ROWS-word chunks of whole documents (a doc
+    larger than the target is a chunk of its own), each one
+    _extract_batch_arrow call, so the kernel holds one input batch at a
+    time. `engine`: _extract_batch_arrow's."""
     import pyarrow.compute as pc
 
-    batches = list(batches)
-    if not batches:
-        return
-    tbl = pa.Table.from_batches(batches)
-    del batches
-    ids = tbl.column("doc_id").combine_chunks()
-    words = tbl.column("words").combine_chunks()
-    del tbl
-    counts = pc.fill_null(pc.list_value_length(words), 0).to_numpy().astype(np.int64)
-    cum = np.concatenate([[0], np.cumsum(counts)])
-    n_docs = len(counts)
-    d = 0
-    while d < n_docs:
-        e = int(np.searchsorted(cum, cum[d] + _KERNEL_CHUNK_ROWS, side="right")) - 1
-        e = min(max(e, d + 1), n_docs)  # >=1 doc of progress, <=n_docs
-        yield _extract_batch_arrow(ids[d:e], words[d:e], configs, engine)
-        d = e
+    for batch in batches:
+        ids, words = batch.column("doc_id"), batch.column("words")
+        counts = pc.fill_null(pc.list_value_length(words), 0).to_numpy().astype(np.int64)
+        cum = np.concatenate([[0], np.cumsum(counts)])
+        d = 0
+        while d < len(counts):
+            e = int(np.searchsorted(cum, cum[d] + _KERNEL_CHUNK_ROWS, side="right")) - 1
+            e = min(max(e, d + 1), len(counts))  # >=1 doc of progress
+            yield _extract_batch_arrow(ids[d:e], words[d:e], configs, engine)
+            d = e
 
 
 def _grouped_words(
@@ -373,7 +366,7 @@ def recognize(
     heavy_words: int | None = None,
 ) -> DataFrame:
     """The native 'recognizer': OCR words -> FIELDS_SCHEMA rows (doc_id,
-    header_raw, lines_raw, field_line_ids, recognizer status/errors,
+    header_raw, lines_raw, field_keys, recognizer status/errors,
     time_to_shred_ms), one per document with at least one OCR word.
 
     Replaces the reference's external form-recognizer call
@@ -399,7 +392,9 @@ def classify_spans_expr() -> "F.Column":
     """L6: 3-way span classification as a pure Spark expression.
 
     media span -> 'form-field' iff its OCR line contributed a word to any
-    extracted field value, else 'boilerplate' (form decoration);
+    extracted field value — its media_ref after '#' is one of the
+    document's field_keys ('p{page}L{line}', config.line_keys) — else
+    'boilerplate' (form decoration);
     text span  -> 'boilerplate' per the L5 block scorer, else 'content'.
     Order (offset) is preserved — the north rule compares sequences."""
     return F.transform(
@@ -408,15 +403,9 @@ def classify_spans_expr() -> "F.Column":
             F.when(
                 s["kind"] == "media",
                 F.when(
-                    # media_ref ends '#p<page>L<line>': all text after the
-                    # last 'L' is the line id (try_cast nulls anything else;
-                    # the contains-'L' gate keeps a purely numeric ref from
-                    # casting to a line id) — regexp_extract here cost ~1us
-                    # x every media span in an interpreted projection
-                    F.contains(s["media_ref"], F.lit("L"))
-                    & F.array_contains(
-                        F.coalesce(F.col("field_line_ids"), F.array().cast("array<int>")),
-                        F.substring_index(s["media_ref"], "L", -1).try_cast("int"),
+                    F.array_contains(
+                        F.coalesce(F.col("field_keys"), F.array().cast("array<string>")),
+                        F.substring_index(s["media_ref"], "#", -1),
                     ),
                     F.lit("form-field"),
                 ).otherwise(F.lit("boilerplate")),
@@ -473,30 +462,33 @@ def run_extraction(
     operators.shred.shred_batch, the analog of the
     reference re-processing already-recognized documents; `ocr_words` and
     the registry's layout configs are ignored in that case (the registry
-    model stamp join still applies).
+    model stamps still apply).
 
-    `registry` (optional): a model-registry frame (registry.REGISTRY_SCHEMA).
-    Its latest per-format config version drives the layout kernel, and the
-    winning (model_id, model_version) is stamped on every output row via a
-    broadcast argmax join on the doc_id's format prefix — the reference's
-    GetModelByDocumentFormat lookup (HorusSql.cs:77-81) done once per job
-    instead of once per document.
+    `registry` (optional): a model-registry frame (registry.REGISTRY_SCHEMA),
+    read once on the driver (registry.read_latest). Its latest per-format
+    config version drives the layout kernel, and the winning (model_id,
+    model_version) is stamped on every output row from a literal map on
+    the doc_id's format prefix (NULL for a format with no registry row) —
+    the reference's GetModelByDocumentFormat lookup (HorusSql.cs:77-81)
+    done once per job instead of once per document.
 
     `heavy_words` (optional): weight-bucket threshold for heavy-tailed
     corpora — docs at >= heavy_words OCR words route to a round-robin
     count-balanced tier ahead of the extraction kernel instead of the
     doc_id hash (see _grouped_words; output values identical)."""
     configs = None
-    model_dim = None
+    stamps = {}
     if registry is not None:
-        from horus_spark.registry import latest_configs, latest_models
+        from horus_spark.registry import read_latest
 
-        configs = latest_configs(registry)
-        model_dim = latest_models(registry).select(
-            F.col("document_format").alias("__fmt"),
-            "model_id",
-            F.col("model_version").cast("string").alias("model_version"),
-        )
+        configs, models = read_latest(registry)
+        # one literal map per stamp, looked up by the doc_id's format
+        # prefix (a missing format reads NULL; the cast types the
+        # version as string and an empty registry's empty map)
+        fmt = F.substring_index(F.col("doc_id"), "-", 1)
+        for i, name in enumerate(("model_id", "model_version")):
+            pairs = [F.lit(v) for f, m in models.items() for v in (f, m[i])]
+            stamps[name] = F.create_map(*pairs).cast("map<string,string>")[fmt]
     spec = get_engine(engine)
     if fields_df is None:
         shredded = _kernel(ocr_words, configs, heavy_words, spec)
@@ -529,12 +521,7 @@ def run_extraction(
             # query-constant in Spark, so one job = one shredding timestamp
             "shredding_utc_datetime": F.current_timestamp(),
             "unique_run_identifier": F.lit(run_id),
+            **stamps,
         }
     )
-    if model_dim is not None:
-        joined = (
-            joined.withColumn("__fmt", F.substring_index(F.col("doc_id"), "-", 1))
-            .join(F.broadcast(model_dim), "__fmt", "left")
-            .drop("__fmt")
-        )
     return finish(joined, carry=["spans_out"])

@@ -10,15 +10,16 @@ Reference semantics reproduced:
 - per-document model lookup takes the row with the highest version for the
   document's format — reference HorusSql.cs:77-81 (GetModelByDocumentFormat),
   expressed as a window argmax; the registry is a tiny dimension, so the
-  pipeline attaches it with a broadcast join (SURVEY §2.3 J1)
+  pipeline collects its latest rows once (read_latest) and stamps each
+  document from a literal map on its format prefix — no join
 
 The `config` column is a JSON blob of the per-format extraction config
 (anchor lexicons / layout flags — horus_spark/config.FORMAT_CONFIGS is the
-v1 bootstrap content). `run_extraction(registry=...)` collects the latest
-configs (bounded: one row per format) and ships them to executors inside
-the recognize kernel closure, so registering a new config version changes
-extraction behavior with no code change — the reference's "train a new
-model, pipeline picks it up" workflow.
+v1 bootstrap content). `run_extraction(registry=...)` takes the latest
+configs (bounded: one row per format) from that same read and ships them
+to executors inside the recognize kernel closure, so registering a new
+config version changes extraction behavior with no code change — the
+reference's "train a new model, pipeline picks it up" workflow.
 """
 
 from __future__ import annotations
@@ -170,8 +171,20 @@ def latest_models(registry: DataFrame) -> DataFrame:
     )
 
 
+def read_latest(registry: DataFrame) -> tuple[dict[str, dict], dict[str, tuple]]:
+    """Collect the latest model per format (a tiny dim: one row per
+    format) -> (fmt -> extraction config, fmt -> (model_id,
+    model_version)). The one registry read an extraction job makes: the
+    configs ship into the recognize kernel closure and the stamps become a
+    literal map on the doc_id's format prefix."""
+    rows = latest_models(registry).select(
+        "document_format", "model_id", "model_version", "config"
+    ).collect()
+    rows = [r for r in rows if r[0] is not None]  # no doc_id has a NULL format
+    return {r[0]: json.loads(r[3]) for r in rows}, {r[0]: (r[1], r[2]) for r in rows}
+
+
 def latest_configs(registry: DataFrame) -> dict[str, dict]:
-    """Collect the latest per-format extraction configs (tiny dim — one row
-    per format) for shipping into the recognize kernel closure."""
-    rows = latest_models(registry).select("document_format", "config").collect()
-    return {r["document_format"]: json.loads(r["config"]) for r in rows}
+    """The latest per-format extraction configs (read_latest's first
+    half)."""
+    return read_latest(registry)[0]

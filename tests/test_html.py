@@ -14,10 +14,9 @@ from horus_spark.operators.html import (
     _SKIP_TAGS,
     _VOID_TAGS,
     _Node,
-    _dom_extract_arrow,
-    _extract_one,
     _parse_html,
     _spans_arrow,
+    _spans_one,
     dom_extract,
     extract_links,
     html_blocks,
@@ -49,6 +48,14 @@ PAGE = (
 
 
 # ---- pure-python DOM kernel -------------------------------------------
+
+
+def _extract_one(html):
+    """dom_extract's (content_text, n_blocks, content_chars) for one page,
+    from the span kernel's sequence: the text spans joined by '\\n',
+    their count and their total length."""
+    blocks = [text for kind, text, _ in _spans_one(html) if kind == "text"]
+    return "\n".join(blocks), len(blocks), sum(len(b) for b in blocks)
 
 
 def test_dom_extract_picks_article_and_filters_link_farm():
@@ -776,8 +783,21 @@ def test_dom_extract_null_and_empty_rows_keep_their_row(spark):
     assert got == {("n", "", 0, 0), ("e", "", 0, 0)}
 
 
+def test_dom_extract_matches_span_sequence_on_malformed_pages(spark):
+    """dom_extract's rows are the projection of the span kernel's
+    sequence (_extract_one above), on the malformed pages, a seeded fuzz,
+    a NULL page and an empty one."""
+    rng = random.Random(20261021)
+    pages = MALFORMED + [None, ""] + [_fuzz_snippet(rng) for _ in range(300)]
+    df = spark.createDataFrame(
+        list(enumerate(pages)), "doc_id long, html string"
+    )
+    got = {r["doc_id"]: tuple(r)[1:] for r in dom_extract(df).collect()}
+    assert got == {str(i): _extract_one(h) for i, h in enumerate(pages)}
+
+
 def test_html_kernels_empty_batch_keeps_declared_schema(spark):
-    from horus_spark.operators.html import DOM_EXTRACT_SCHEMA, SPANS_SCHEMA
+    from horus_spark.operators.html import SPANS_SCHEMA
     from horus_spark.operators.html import html_to_spans
 
     df = spark.createDataFrame(
@@ -787,7 +807,9 @@ def test_html_kernels_empty_batch_keeps_declared_schema(spark):
     dom = dom_extract(df)
     assert spans.collect() == [] and dom.collect() == []
     assert spans.schema == spark.createDataFrame([], SPANS_SCHEMA).schema
-    assert dom.schema == spark.createDataFrame([], DOM_EXTRACT_SCHEMA).schema
+    assert dom.schema == spark.createDataFrame(
+        [], "doc_id string, content_text string, n_blocks int, content_chars int"
+    ).schema
     empty = pa.RecordBatch.from_arrays(
         [pa.array([], pa.string()), pa.array([], pa.string())],
         names=["doc_id", "html"],
@@ -800,10 +822,4 @@ def test_html_kernels_empty_batch_keeps_declared_schema(spark):
             ("kind", pa.string()), ("text", pa.string()),
             ("media_ref", pa.string()), ("offset", pa.int32()),
         ]))),
-    ])
-    (out,) = list(_dom_extract_arrow([empty]))
-    assert out.num_rows == 0
-    assert out.schema == pa.schema([
-        ("doc_id", pa.string()), ("content_text", pa.string()),
-        ("n_blocks", pa.int32()), ("content_chars", pa.int32()),
     ])

@@ -6,7 +6,7 @@ of documents at once. The oracle runs the same rules one document at a
 time in plain Python: the pandas word clustering below (the sort-based L1
 the kernel replaced), then layout.infer_grid_arrays and
 fields.extract_fields_arrays, with the kernel's failure and truncation
-rules. Each document's header_raw, lines_raw, field_line_ids,
+rules. Each document's header_raw, lines_raw, field_keys,
 recognizer_status and recognizer_errors must agree exactly.
 
 The corpora are seeded generator documents in all three layouts, with
@@ -47,7 +47,7 @@ _WORD = pa.struct(
      ("text", pa.string()), ("x0", pa.float32()), ("y0", pa.float32()),
      ("x1", pa.float32()), ("y1", pa.float32())]
 )
-_COLUMNS = ["header_raw", "lines_raw", "field_line_ids", "recognizer_status", "recognizer_errors"]
+_COLUMNS = ["header_raw", "lines_raw", "field_keys", "recognizer_status", "recognizer_errors"]
 
 
 def _words(doc) -> list[dict]:
@@ -160,8 +160,8 @@ def _corpus(seed: int, n: int) -> tuple[list[str], list[list[dict]]]:
 def _fragments(words: pd.DataFrame):
     """Reference L1, one document, pandas: sort by (page, center y, x0),
     break rows on center-y gaps > ROW_Y_TOL, sort each row by x0, break
-    fragments on x gaps > FRAG_X_GAP. -> (texts, x0, y0, x1, line ids of
-    each fragment's words)."""
+    fragments on x gaps > FRAG_X_GAP. -> (texts, x0, y0, x1, (page,
+    line id) of each fragment's words)."""
     df = words.assign(yc=(words["y0"] + words["y1"]) / 2.0)
     df = df.sort_values(["page", "yc", "x0"], kind="mergesort").reset_index(drop=True)
     with np.errstate(invalid="ignore"):
@@ -171,7 +171,7 @@ def _fragments(words: pd.DataFrame):
         new_frag = (df["row"] != df["row"].shift()) | (df["x0"] - df["x1"].shift() > FRAG_X_GAP)
     starts = np.flatnonzero(new_frag)
     ends = np.r_[starts[1:], len(df)]
-    texts, lines = df["text"].tolist(), df["line_id"].tolist()
+    texts, lines = df["text"].tolist(), list(zip(df["page"], df["line_id"]))
     return (
         [" ".join(texts[s:e]) for s, e in zip(starts, ends)],
         # extents propagate NaN, like the reduceat the kernel always used
@@ -205,7 +205,7 @@ def _oracle(doc_id: str, words: list[dict], configs, max_words: int) -> dict:
     return {
         "header_raw": header.to_pylist()[0],
         "lines_raw": lines_raw.to_pylist()[0],
-        "field_line_ids": sorted({ln for i in used for ln in lines[i]}),
+        "field_keys": [f"p{p}L{ln}" for p, ln in sorted({pl for i in used for pl in lines[i]})],
         "recognizer_status": status,
         "recognizer_errors": errors,
     }

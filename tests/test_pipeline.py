@@ -159,6 +159,35 @@ def test_unmatched_document_still_produces_row(spark):
     assert out[0].recognizer_status == "notfound"  # recognizer never saw it
 
 
+def test_form_field_key_includes_the_page(spark):
+    """A media span is a form field only when a field read a word from its
+    own page's line: a page-2 copy of a document's words with non-field
+    text ('zz') and a media span '#p2L<n>', whose page-1 line <n> fed a
+    field, come out 'boilerplate'."""
+    import pandas as pd
+
+    from horus_spark import schema as S
+
+    c = corpus_pandas(1)
+    words = c["ocr_words"]
+    golden = list(c["expected_spans"].iloc[0]["spans_out"])
+    field_ref = next(s["media_ref"] for s in golden if s["kind"] == "form-field")
+    page2_ref = field_ref.replace("#p1L", "#p2L")
+    assert page2_ref != field_ref
+    docs = c["documents"].copy()
+    spans = list(docs.at[0, "spans"])
+    docs.at[0, "spans"] = spans + [
+        {"kind": "media", "text": "zz", "media_ref": page2_ref, "offset": len(spans)}
+    ]
+    both = pd.concat([words, words.assign(page=2, text="zz")], ignore_index=True)
+    (row,) = run_extraction(
+        spark.createDataFrame(docs, S.DOCUMENTS), spark.createDataFrame(both, S.OCR_WORDS)
+    ).collect()
+    kinds = {s.media_ref: s.kind for s in row.spans_out}
+    assert kinds[field_ref] == "form-field"
+    assert kinds[page2_ref] == "boilerplate"
+
+
 def test_heavy_doc_truncated_and_isolated(spark):
     """Skew guard + per-document isolation: a pathological megaword doc is
     word-capped inside the kernel, a doc with broken geometry degrades to
@@ -414,19 +443,22 @@ def test_time_to_shred_splits_the_chunk_by_words(monkeypatch):
 
 def test_grouped_kernel_chunking_doc_aligned(spark, monkeypatch):
     """Chunk boundaries in the grouped kernel walk whole documents, and the
-    kernel's output does not depend on how documents are batched: with a
-    tiny chunk target (every doc is a chunk of its own, each larger than
-    the target) and with the default target (all docs in one chunk), the
-    full output rows agree except the wall-clock timer, one per doc, none
-    split or dropped. Row order is not part of the contract: a chunk's
-    rows come out in the kernel's reading order, not input order."""
+    kernel's output does not depend on how documents are batched: fed as
+    several input batches, with a tiny chunk target (every doc is a chunk
+    of its own, each larger than the target) and with the default target
+    (one chunk per input batch: chunks are cut from each batch, never
+    across batches), the full output rows agree with one whole-input
+    chunk except the wall-clock timer, one per doc, none split or
+    dropped. Row order is not part of the contract: a chunk's rows come
+    out in the kernel's reading order, not input order."""
     import pyarrow as pa
 
     from horus_spark import pipeline as P
 
     c = corpus_spark(spark, 25, partitions=2)
-    grouped = P._grouped_words(c["ocr_words"]).toArrow()
-    batches = grouped.to_batches()
+    grouped = P._grouped_words(c["ocr_words"]).toArrow().combine_chunks()
+    batches = grouped.to_batches(max_chunksize=10)
+    assert [b.num_rows for b in batches] == [10, 10, 5]
 
     def run():
         out = list(P._extract_iter_arrow_grouped(iter(batches)))
@@ -434,10 +466,13 @@ def test_grouped_kernel_chunking_doc_aligned(spark, monkeypatch):
         return len(out), sorted(rows.to_pylist(), key=lambda r: r["doc_id"])
 
     n_default, default_rows = run()
+    whole = P._extract_batch_arrow(grouped["doc_id"].chunk(0), grouped["words"].chunk(0))
+    whole_rows = sorted(whole.drop_columns(["time_to_shred_ms"]).to_pylist(),
+                        key=lambda r: r["doc_id"])
     monkeypatch.setattr(P, "_KERNEL_CHUNK_ROWS", 8)  # far below any doc's words
     n_tiny, tiny_rows = run()
-    assert (n_default, n_tiny) == (1, 25)
-    assert tiny_rows == default_rows
+    assert (n_default, n_tiny) == (3, 25)
+    assert tiny_rows == default_rows == whole_rows
     ids = [r["doc_id"] for r in tiny_rows]
     assert ids == sorted(grouped.column("doc_id").to_pylist())
     assert len(set(ids)) == 25

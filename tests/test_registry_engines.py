@@ -74,6 +74,40 @@ def test_pipeline_picks_up_registered_config(spark):
             assert rows1[d].account == r.account
 
 
+def test_run_extraction_reads_the_registry_once(spark, monkeypatch):
+    """run_extraction evaluates the registry once, on the driver: one
+    latest_models, and its optimized plan joins only the documents to the
+    kernel output — no join on the doc_id's format prefix, no registry
+    window. The stamps are each format's latest model, NULL for a format
+    with no registry row."""
+    import re
+
+    from horus_spark import registry as R
+    from horus_spark import schema as S
+    from horus_spark.fixtures.generator import corpus_pandas
+    from horus_spark.pipeline import run_extraction
+
+    calls = []
+    real = R.latest_models
+    monkeypatch.setattr(R, "latest_models", lambda reg: calls.append(reg) or real(reg))
+    c = corpus_pandas(9)
+    docs = spark.createDataFrame(c["documents"], S.DOCUMENTS)
+    words = spark.createDataFrame(c["ocr_words"], S.OCR_WORDS)
+    reg = bootstrap_registry(spark).where(F.col("document_format") != "nouryon")
+    reg = register_model(reg, "abc", "model-abc-0002", FORMAT_CONFIGS["abc"])
+    out = run_extraction(docs, words, registry=reg)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    rows = out.select("doc_id", "model_id", "model_version").collect()
+    assert len(calls) == 1
+    assert len(re.findall(r"\bJoin\b", plan)) == 1, plan
+    assert "Window" not in plan, plan
+    want = {"abc": ("model-abc-0002", "2"), "oscorp": ("model-oscorp-0001", "1"),
+            "nouryon": (None, None)}
+    assert {r.doc_id.split("-")[0] for r in rows} == set(want)
+    for r in rows:
+        assert (r.model_id, r.model_version) == want[r.doc_id.split("-")[0]], r
+
+
 FULL_FIELDS = {
     "Inv": "30001",
     "TaxDate": "22/07/2020",

@@ -5,7 +5,9 @@ no repo checkout on the workers.
 Run via tools/package_check.sh — from a scratch cwd so `horus_spark` is
 importable ONLY through the --py-files zip. Generates a small corpus on
 executors, runs the full extraction pipeline, writes the output tables,
-runs the HTML -> spans kernel over synthesized pages, probes that a warm
+runs it again with the bootstrap model registry (every document stamped
+with its format's v1 model), runs the HTML -> spans kernel and its
+dom_extract projection over synthesized pages, probes that a warm
 worker's per-task cache invalidation re-reads no zip archive (the package
 itself is one of them here), and prints one JSON line."""
 
@@ -30,8 +32,9 @@ def main() -> int:
     # imports AFTER the session exists: proves the zip on PYTHONPATH works
     # for the driver, and executor tasks resolve it via --py-files shipping
     from horus_spark.fixtures.generator import corpus_spark
-    from horus_spark.operators.html import html_to_spans, synthesize_html
+    from horus_spark.operators.html import dom_extract, html_to_spans, synthesize_html
     from horus_spark.pipeline import run_extraction
+    from horus_spark.registry import bootstrap_registry
     from horus_spark.session import zip_cache_probe
     from horus_spark.sources.sink import write_extracted
 
@@ -42,6 +45,10 @@ def main() -> int:
     docs = spark.read.parquet(os.path.join(out_dir, "documents_out"))
     spans = spark.read.parquet(os.path.join(out_dir, "spans_out"))
     n_out, n_valid = docs.count(), docs.filter("is_valid").count()
+    stamped = run_extraction(
+        c["documents"], c["ocr_words"], registry=bootstrap_registry(spark)
+    ).where(F.col("model_version") == "1")
+    n_stamped = stamped.count()
     # 41 tokens per page: the h1, 4 chunks and 1 media element = 6 spans
     pages = synthesize_html(
         spark.range(n_docs).select(
@@ -53,17 +60,22 @@ def main() -> int:
         media=True,
     )
     n_html = html_to_spans(pages).where(F.size("spans") == 6).count()
+    n_dom = dom_extract(pages).where(F.col("n_blocks") == 5).count()
     probe = zip_cache_probe(spark)
     result = {
         "submitted_docs": n_docs,
         "extracted_docs": n_out,
         "valid_docs": n_valid,
         "span_rows": spans.count(),
+        "registry_stamped_docs": n_stamped,
         "html_pages": n_html,
+        "dom_pages": n_dom,
         "zip_probe": probe,
         "ok": n_out == n_docs
         and n_valid == n_docs
+        and n_stamped == n_docs
         and n_html == n_docs
+        and n_dom == n_docs
         and probe["zip_paths"] >= 1
         and probe["wrapped"]
         and probe["reads"] == 0,
